@@ -22,6 +22,8 @@ Python UDFs. Scale design:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -64,7 +66,8 @@ def fan_out_small(df: DataFrame) -> DataFrame:
     un-parallel read) — so the heavy map stage that follows uses every
     core instead of one task. No-op when the input is already at least
     core-parallel, so at corpus scale (thousands of scan splits) this
-    never adds a shuffle.
+    never adds a shuffle. For unordered consumers only: a kernel whose
+    output must come back ORDER BY id goes through `map_ordered`.
 
     Streaming DataFrames pass through untouched: their partitioning is the
     source's per-micro-batch layout, and ``df.rdd`` (the partition-count
@@ -80,32 +83,30 @@ def fan_out_small(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-def fan_out_small_ordered(df: DataFrame, id_col: str) -> tuple[DataFrame, bool]:
-    """`fan_out_small` for map-only kernels whose output contract is
-    ORDER BY ``id_col``. A global sort ABOVE an expensive map runs the
-    range partitioner's sampling pass over the map's output — executing
-    the whole kernel TWICE per run (verified with an accumulator). When
-    the scan is narrower than the session's parallelism, RANGE-partition
-    the input on the id instead of round-robin: the sampling pass then
-    reads only the cheap input, each partition holds one contiguous id
-    range, and the caller finishes with a shuffle-free
-    ``sortWithinPartitions(id_col)`` for the same globally ordered rows
-    (partitions are collected in range order).
+def map_ordered(
+    df: DataFrame, id_col: str, kernel: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Run a map-only ``kernel`` (any ``DataFrame -> DataFrame`` step: a
+    ``mapInPandas``, ``mapInArrow`` or ``select`` that keeps ``id_col``)
+    and return its output globally ordered by ``id_col`` — the
+    ORDER BY id contract of every per-row kernel query.
 
-    Returns ``(df, ordered)``: ``ordered=True`` → finish with
-    ``sortWithinPartitions``; ``False`` (input already core-parallel —
-    the corpus-scale case) → the input is untouched and the caller must
-    ``orderBy``. At that scale the honest choice is the plain global
-    sort: pre-shuffling the full text bytes to dodge the sampling pass
-    would move strictly more data than the duplicated kernel saves only
-    when the kernel is cheap, and a real pipeline materializes kernel
-    output once and sorts the stats table instead."""
-    if df.isStreaming:
-        return df, False
+    Invariant: range input, local sort, kernel runs once. The input is
+    RANGE-partitioned on ``id_col`` into ``defaultParallelism``
+    partitions, the kernel runs on each one, and a shuffle-free
+    ``sortWithinPartitions`` finishes the job: each partition holds one
+    contiguous id range and partitions are collected in range order, so
+    the rows are globally ordered. No exchange may be inserted between
+    the range exchange and the local sort. A global sort above the
+    kernel would run the range partitioner's sampling pass over the
+    kernel's output, executing the whole kernel TWICE (2N kernel rows
+    for N inputs, counted with an accumulator); here the sampling pass
+    reads only the kernel's input. The partition count is explicit so
+    AQE can neither coalesce nor rebalance the range exchange, and the
+    same plan serves a one-split fixture (which it fans out across
+    cores) and an already core-parallel corpus."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
-        return df, False
-    return df.repartitionByRange(n, id_col), True
+    return kernel(df.repartitionByRange(n, id_col)).sortWithinPartitions(id_col)
 
 
 def doc_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:

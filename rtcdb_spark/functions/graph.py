@@ -67,8 +67,11 @@ def pagerank(
     """
     # Every iteration re-reads the edge list and node set; without a persist
     # the whole upstream pipeline (source scan, symmetrize distincts) would
-    # re-execute once per iteration.
-    edges = edges.persist()
+    # re-execute once per iteration. A cache the caller made is the
+    # caller's to release: only a persist made here is undone below.
+    owns_edges_cache = not edges.is_cached
+    if owns_edges_cache:
+        edges = edges.persist()
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -123,7 +126,8 @@ def pagerank(
         ranks = ranks.localCheckpoint()
     out.unpersist()
     nodes.unpersist()
-    edges.unpersist()
+    if owns_edges_cache:
+        edges.unpersist()
     return ranks
 
 

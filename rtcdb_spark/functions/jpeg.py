@@ -56,6 +56,8 @@ from __future__ import annotations
 import functools
 import math
 import struct
+from collections.abc import Mapping
+from types import MappingProxyType
 
 # --------------------------------------------------------------------------
 # Tables (ITU-T T.81 Annex K — public spec)
@@ -167,12 +169,19 @@ _ZIGZAG = _zigzag_order()  # zigzag position -> natural (row-major) index
 assert sorted(_ZIGZAG) == list(range(64))
 
 
+def _frozen(a):
+    """Mark a cached ndarray read-only: lru_cache hands the SAME object to
+    every caller, so an in-place write would corrupt later images."""
+    a.setflags(write=False)
+    return a
+
+
 @functools.lru_cache(maxsize=None)
 def _zz64():
     """_ZIGZAG as a cached int64 numpy index array (read-only)."""
     import numpy as np
 
-    return np.array(_ZIGZAG, dtype=np.int64)
+    return _frozen(np.array(_ZIGZAG, dtype=np.int64))
 
 
 @functools.lru_cache(maxsize=None)
@@ -180,8 +189,8 @@ def _dct_matrix():
     """Orthonormal 8-point DCT-II matrix C; forward is C @ f @ C.T,
     inverse is C.T @ F @ C. Cached (round 13): the matrix is a pure
     constant, but the fixture images are tiny (<= 21x13 px), so per-image
-    reconstruction dominated the codec rows' profile. Callers treat the
-    returned array as read-only."""
+    reconstruction dominated the codec rows' profile. The returned array
+    is shared by every caller, so it is read-only."""
     import numpy as np
 
     c = np.zeros((8, 8), dtype=np.float64)
@@ -189,13 +198,13 @@ def _dct_matrix():
         s = math.sqrt(1.0 / 8.0) if k == 0 else math.sqrt(2.0 / 8.0)
         for n in range(8):
             c[k, n] = s * math.cos((2 * n + 1) * k * math.pi / 16.0)
-    return c
+    return _frozen(c)
 
 
 def _scaled_quant(base: list[int], quality: int):
     """IJG quality scaling of an Annex-K table (public libjpeg formula).
     Cached per (table, quality) — 3 qualities x 2 tables in the fixture
-    corpus; the returned array is read-only by convention."""
+    corpus; the returned array is shared, so it is read-only."""
     return _scaled_quant_cached(tuple(base), quality)
 
 
@@ -206,19 +215,19 @@ def _scaled_quant_cached(base: tuple, quality: int):
     q = max(1, min(100, quality))
     scale = 5000 // q if q < 50 else 200 - 2 * q
     t = (np.array(base, dtype=np.int64) * scale + 50) // 100
-    return np.clip(t, 1, 255).reshape(8, 8)
+    return _frozen(np.clip(t, 1, 255).reshape(8, 8))
 
 
-def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+def _build_codes(bits: list[int], vals: list[int]) -> Mapping[int, tuple[int, int]]:
     """Canonical Huffman construction (T.81 C.2): symbol -> (code, length).
     Cached: encoders rebuild the four Annex-K tables per image, decoders
     rebuild them per DHT segment — a handful of distinct tables total.
-    Callers only index the returned dict."""
+    The returned mapping is shared, so it is read-only."""
     return _build_codes_cached(tuple(bits), tuple(vals))
 
 
 @functools.lru_cache(maxsize=256)
-def _build_codes_cached(bits: tuple, vals: tuple) -> dict[int, tuple[int, int]]:
+def _build_codes_cached(bits: tuple, vals: tuple) -> Mapping[int, tuple[int, int]]:
     codes: dict[int, tuple[int, int]] = {}
     code = 0
     k = 0
@@ -228,7 +237,7 @@ def _build_codes_cached(bits: tuple, vals: tuple) -> dict[int, tuple[int, int]]:
             code += 1
             k += 1
         code <<= 1
-    return codes
+    return MappingProxyType(codes)
 
 
 class _BitWriter:
@@ -1002,14 +1011,16 @@ def _extend(v: int, ssss: int) -> int:
 
 
 @functools.lru_cache(maxsize=256)
-def _decode_table(bits: tuple, vals: tuple) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol decode dict for one DHT table, cached by
-    the table's BITS/HUFFVAL content (read-only to callers)."""
+def _decode_table(bits: tuple, vals: tuple) -> Mapping[tuple[int, int], int]:
+    """(length, code) -> symbol decode map for one DHT table, cached by
+    the table's BITS/HUFFVAL content (shared, so read-only)."""
     codes = _build_codes_cached(bits, vals)
-    return {(length, code): sym for sym, (code, length) in codes.items()}
+    return MappingProxyType(
+        {(length, code): sym for sym, (code, length) in codes.items()}
+    )
 
 
-def _decode_huffman(reader: _BitReader, table: dict[tuple[int, int], int]) -> int:
+def _decode_huffman(reader: _BitReader, table: Mapping[tuple[int, int], int]) -> int:
     code = 0
     for length in range(1, 17):
         code = (code << 1) | reader.read_bit()
@@ -1238,7 +1249,7 @@ def decode_jpeg(payload: bytes):
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
     quant: dict[int, object] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    huff: dict[tuple[int, int], Mapping[tuple[int, int], int]] = {}
     frame = None
     progressive = False
     arith = False

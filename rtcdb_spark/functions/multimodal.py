@@ -21,7 +21,9 @@ body on a real cluster and nothing else changes.
 
 Scale notes: `mapInPandas` streams Arrow batches (no per-row pickling);
 decode work is embarrassingly parallel, so throughput scales with cores.
-Binary payloads inflate task input size — pair with
+The per-row `synth_*` codec kernels run through `dedup.map_ordered` and
+return rows ordered by id (`synth_and_quadrant_sig`, whose consumer
+aggregates, fans out round-robin instead). Binary payloads inflate task input size — pair with
 `spark.sql.files.maxPartitionBytes` tuning so a task's batch of payloads
 fits executor memory.
 """
@@ -44,6 +46,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from rtcdb_spark.functions.dedup import fan_out_small, map_ordered
 
 META_SCHEMA = StructType(
     [
@@ -744,30 +748,6 @@ def attach_payload(df: DataFrame, text_col: str = "text", out: str = "payload") 
     return df.withColumn(out, F.encode(F.col(text_col), "UTF-8"))
 
 
-def _fan_out(df: DataFrame, id_col: str) -> DataFrame:
-    """Spread per-row Python codec work across all cores: the synth ops are
-    CPU-bound per row, and a coarse upstream layout (e.g. a one-row-group
-    parquet fixture -> ONE input partition) would serialize the whole
-    corpus onto a single task. Repartitioning the id column is an 8-byte/
-    row exchange — negligible data movement next to the codec compute it
-    parallelizes. On a real many-file corpus the exchange is still
-    correct: it rebalances skewed file sizes before the expensive map.
-
-    RANGE partitioning on the id (round 13), not round-robin: the codec
-    queries' output contract is ORDER BY id, and a global sort ABOVE the
-    codec map runs the range-partitioner's sampling pass over the map's
-    output — executing every per-row codec TWICE per run (measured with
-    an accumulator: 2N rows processed for N inputs). Range-partitioning
-    the 8-byte input instead puts the sampling pass on the scan, so each
-    partition holds one contiguous id range, the codec runs ONCE, and a
-    shuffle-free sortWithinPartitions on the map output yields the same
-    globally ordered result (partitions are collected in range order)."""
-    spark = df.sparkSession
-    return df.select(id_col).repartitionByRange(
-        spark.sparkContext.defaultParallelism, id_col
-    )
-
-
 def extract_payload_meta(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
     """Deterministic 'feature extraction' over binary payloads via
     `mapInPandas`: byte length, 8-byte head as hex, adler-ish byte checksum.
@@ -872,7 +852,9 @@ def synth_and_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, DECODED_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, DECODED_SCHEMA)
+    )
 
 
 AUDIO_FEAT_SCHEMA = StructType(
@@ -933,7 +915,9 @@ def synth_and_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame
                     rows[k].append(v)
             yield pd.DataFrame(rows)
 
-    return _fan_out(df, id_col).mapInPandas(process, AUDIO_FEAT_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, AUDIO_FEAT_SCHEMA)
+    )
 
 
 IMAGE_STATS_SCHEMA = StructType(
@@ -997,7 +981,9 @@ def synth_and_image_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     rows[k].append(v)
             yield pd.DataFrame(rows)
 
-    return _fan_out(df, id_col).mapInPandas(process, IMAGE_STATS_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, IMAGE_STATS_SCHEMA)
+    )
 
 
 SILENCE_SCHEMA = StructType(
@@ -1049,7 +1035,9 @@ def synth_and_silence_bounds(df: DataFrame, id_col: str = "doc_id") -> DataFrame
                     rows[k].append(v)
             yield pd.DataFrame(rows)
 
-    return _fan_out(df, id_col).mapInPandas(process, SILENCE_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, SILENCE_SCHEMA)
+    )
 
 
 QUADRANT_SIG_SCHEMA = StructType(
@@ -1104,7 +1092,9 @@ def synth_and_quadrant_sig(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 sigs.append(image_quadrant_sig(synth_payload(int(doc_id))))
             yield pd.DataFrame({"doc_id": ids, "sig": sigs})
 
-    return _fan_out(df, id_col).mapInPandas(process, QUADRANT_SIG_SCHEMA)
+    return fan_out_small(df.select(id_col)).mapInPandas(
+        process, QUADRANT_SIG_SCHEMA
+    )
 
 
 PNG_DECODE_SCHEMA = StructType(
@@ -1146,7 +1136,9 @@ def synth_and_png_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 out["max_byte"].append(int(px.max()))
             yield pd.DataFrame({k: pd.array(v, dtype="Int64") for k, v in out.items()})
 
-    return _fan_out(df, id_col).mapInPandas(process, PNG_DECODE_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, PNG_DECODE_SCHEMA)
+    )
 
 
 JPEG_PROGRESSIVE_SCHEMA = StructType(
@@ -1212,7 +1204,9 @@ def synth_and_jpeg_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFra
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_PROGRESSIVE_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, JPEG_PROGRESSIVE_SCHEMA)
+    )
 
 
 JPEG_420_SCHEMA = StructType(
@@ -1282,7 +1276,9 @@ def synth_and_jpeg_420_restart(df: DataFrame, id_col: str = "doc_id") -> DataFra
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_420_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, JPEG_420_SCHEMA)
+    )
 
 
 JPEG_PROG_420_SCHEMA = StructType(
@@ -1355,7 +1351,9 @@ def synth_and_jpeg_progressive_420(
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_PROG_420_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, JPEG_PROG_420_SCHEMA)
+    )
 
 
 APNG_SCHEMA = StructType(
@@ -1477,7 +1475,9 @@ def synth_and_apng_animate(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, APNG_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, APNG_SCHEMA)
+    )
 
 
 PNG_LAYOUT_SCHEMA = StructType(
@@ -1557,7 +1557,9 @@ def synth_and_png_layout_decode(df: DataFrame, id_col: str = "doc_id") -> DataFr
                 {k: pd.array(v, dtype="Int64") for k, v in out.items()}
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, PNG_LAYOUT_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, PNG_LAYOUT_SCHEMA)
+    )
 
 
 JPEG_ROUNDTRIP_SCHEMA = StructType(
@@ -1620,7 +1622,9 @@ def synth_and_jpeg_roundtrip(df: DataFrame, id_col: str = "doc_id") -> DataFrame
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_ROUNDTRIP_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, JPEG_ROUNDTRIP_SCHEMA)
+    )
 
 
 MP4_SAMPLE_SCHEMA = StructType(
@@ -1671,7 +1675,9 @@ def synth_and_mp4_frame_sample(
                 {k: pd.array(v, dtype="Int64") for k, v in out.items()}
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, MP4_SAMPLE_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, MP4_SAMPLE_SCHEMA)
+    )
 
 
 def resize_box2(px):
@@ -1734,7 +1740,9 @@ def synth_resize_roundtrip(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 out["resized_pixel_sum"].append(int(small.astype(np.int64).sum()))
             yield pd.DataFrame({k: pd.array(v, dtype="Int64") for k, v in out.items()})
 
-    return _fan_out(df, id_col).mapInPandas(process, RESIZE_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, RESIZE_SCHEMA)
+    )
 
 
 def _png_from_pixels(px) -> bytes:
@@ -1836,7 +1844,9 @@ def synth_and_jpeg_arithmetic(df: DataFrame, id_col: str = "doc_id") -> DataFram
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_ARITH_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, JPEG_ARITH_SCHEMA)
+    )
 
 
 JPEG_LOSSLESS_SCHEMA = StructType(
@@ -1902,7 +1912,9 @@ def synth_and_jpeg_lossless(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_LOSSLESS_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, JPEG_LOSSLESS_SCHEMA)
+    )
 
 
 JPEG_HIERARCHICAL_SCHEMA = StructType(
@@ -1976,4 +1988,6 @@ def synth_and_jpeg_hierarchical(df: DataFrame, id_col: str = "doc_id") -> DataFr
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_HIERARCHICAL_SCHEMA)
+    return map_ordered(
+        df.select(id_col), id_col, lambda d: d.mapInPandas(process, JPEG_HIERARCHICAL_SCHEMA)
+    )

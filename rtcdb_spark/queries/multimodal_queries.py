@@ -71,7 +71,7 @@ def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact. Swap the synthesizer for parquet-stored blobs and the decode
     path is production-shaped: no driver hops, scales with cores."""
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_decode(d).sortWithinPartitions("doc_id")
+    return synth_and_decode(d)
 
 
 @query(
@@ -113,7 +113,7 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_audio_features
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
-    return synth_and_audio_features(d).sortWithinPartitions("doc_id")
+    return synth_and_audio_features(d)
 
 
 @query(
@@ -163,7 +163,7 @@ def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_image_stats
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
-    return synth_and_image_stats(d).sortWithinPartitions("doc_id")
+    return synth_and_image_stats(d)
 
 
 @query(
@@ -209,7 +209,7 @@ def multimodal_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame
     from rtcdb_spark.functions.multimodal import synth_and_silence_bounds
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
-    return synth_and_silence_bounds(d).sortWithinPartitions("doc_id")
+    return synth_and_silence_bounds(d)
 
 
 def _q_lum(off: int) -> str:
@@ -350,7 +350,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_png_decode
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_png_decode(d).sortWithinPartitions("doc_id")
+    return synth_and_png_decode(d)
 
 
 @query(
@@ -393,7 +393,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_jpeg_roundtrip
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_jpeg_roundtrip(d).sortWithinPartitions("doc_id")
+    return synth_and_jpeg_roundtrip(d)
 
 
 @query(
@@ -427,7 +427,7 @@ def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_jpeg_progressive
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_jpeg_progressive(d).sortWithinPartitions("doc_id")
+    return synth_and_jpeg_progressive(d)
 
 
 @query(
@@ -465,7 +465,7 @@ def multimodal_jpeg_420_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_jpeg_420_restart
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_jpeg_420_restart(d).sortWithinPartitions("doc_id")
+    return synth_and_jpeg_420_restart(d)
 
 
 @query(
@@ -500,7 +500,7 @@ def multimodal_jpeg_progressive_420(spark: SparkSession, sf_dir: str) -> DataFra
     from rtcdb_spark.functions.multimodal import synth_and_jpeg_progressive_420
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_jpeg_progressive_420(d).sortWithinPartitions("doc_id")
+    return synth_and_jpeg_progressive_420(d)
 
 
 @query(
@@ -533,7 +533,7 @@ def multimodal_apng_animate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_apng_animate
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_apng_animate(d).sortWithinPartitions("doc_id")
+    return synth_and_apng_animate(d)
 
 
 @query(
@@ -584,7 +584,7 @@ def multimodal_png_layouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_png_layout_decode
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_png_layout_decode(d).sortWithinPartitions("doc_id")
+    return synth_and_png_layout_decode(d)
 
 
 @query(
@@ -637,7 +637,7 @@ def multimodal_mp4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_mp4_frame_sample
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_mp4_frame_sample(d).sortWithinPartitions("doc_id")
+    return synth_and_mp4_frame_sample(d)
 
 
 @query(
@@ -687,7 +687,7 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_resize_roundtrip
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_resize_roundtrip(d).sortWithinPartitions("doc_id")
+    return synth_resize_roundtrip(d)
 
 
 @query(
@@ -725,7 +725,7 @@ def multimodal_jpeg_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_jpeg_arithmetic
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_jpeg_arithmetic(d).sortWithinPartitions("doc_id")
+    return synth_and_jpeg_arithmetic(d)
 
 
 @query(
@@ -757,7 +757,7 @@ def multimodal_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_jpeg_lossless
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_jpeg_lossless(d).sortWithinPartitions("doc_id")
+    return synth_and_jpeg_lossless(d)
 
 
 @query(
@@ -788,7 +788,7 @@ def multimodal_jpeg_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rtcdb_spark.functions.multimodal import synth_and_jpeg_hierarchical
 
     d = load_table(spark, sf_dir, "documents")
-    return synth_and_jpeg_hierarchical(d).sortWithinPartitions("doc_id")
+    return synth_and_jpeg_hierarchical(d)
 
 
 @query(
@@ -825,23 +825,17 @@ def multimodal_mp3_bitstream_decode(
     part2_3_length bits. The oracle restates the closed forms; a
     mis-parsed side-info field, a sign flip, a wrong quad complement,
     or an off-by-one in the bit budget breaks the hash. Scale: the
-    codec runs inside `mapInPandas` over Arrow batches — embarrassingly
-    parallel, no shuffle before the final sort. The id column is
-    RANGE-repartitioned first (the `_fan_out` treatment every other codec
-    row gets): the one-row-group parquet fixture is a single split, which
-    would otherwise serialize all 5 000 pure-Python codec runs onto ONE
-    task — an 8-byte/row exchange buys a core-count-wide decode (guide
-    §2.5, unsplittable-input repartition), and partitioning by id RANGE
-    instead of round-robin lets the ordered output come from a
-    shuffle-free sortWithinPartitions, so the codec is not re-executed by
-    a global sort's range-sampling pass (see `_fan_out`)."""
+    codec runs inside `mapInPandas` over Arrow batches through
+    `map_ordered`, like every other codec row: the 8-byte id column is
+    range-partitioned across cores (the one-row-group fixture is a single
+    split, which would otherwise serialize all 5 000 pure-Python codec
+    runs onto ONE task), and the ordered output comes from a local sort,
+    so the codec runs once."""
     import pandas as pd
 
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-    )
+    from rtcdb_spark.functions.dedup import map_ordered
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
 
     def _work(batches):
         from rtcdb_spark.functions import mp3
@@ -874,10 +868,8 @@ def multimodal_mp3_bitstream_decode(
                 )
             yield pd.DataFrame(out)
 
-    return d.mapInPandas(
-        _work,
-        (
-            "doc_id long, n_granules long, n_nonzero long, "
-            "energy long, budget_exact long"
-        ),
-    ).sortWithinPartitions("doc_id")
+    schema = (
+        "doc_id long, n_granules long, n_nonzero long, "
+        "energy long, budget_exact long"
+    )
+    return map_ordered(d, "doc_id", lambda ids: ids.mapInPandas(_work, schema))

@@ -818,25 +818,23 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass per task — bit-identical to the column-expression formulation
     (`functions.text.winnow_select_expr`, kept and cross-checked by
     test), which Spark executes in the interpreted HOF evaluator at
-    ~50x the CPU per k-gram. Still map-only — zero shuffles at any
-    corpus size (`fan_out_small` round-robins the small fixture's single
-    parquet split across cores and is a NO-OP once the scan is already
-    core-parallel, so a real corpus never shuffles its text bytes; hashing
-    dominates the small-fixture exchange by orders of magnitude). The
-    oracle replays the identical selection
+    ~50x the CPU per k-gram. The kernel runs through `map_ordered`:
+    the (doc_id, text) input is range-partitioned on doc_id across
+    cores — one exchange of the text, at any corpus size — and the
+    ordered output comes from a local sort, so the kernel runs once.
+    The oracle replays the identical selection
     in DuckDB; per-doc fingerprint count, modular hash sum, and min/max
     must all hash-match, so one wrong tie-break or window boundary
     breaks the gate."""
-    from rtcdb_spark.functions.dedup import fan_out_small_ordered
+    from rtcdb_spark.functions.dedup import map_ordered
     from rtcdb_spark.functions.winnow_np import OUT_DDL, winnow_stats_batches
 
     d = load_table(spark, sf_dir, "documents")
-    src, ordered = fan_out_small_ordered(d.select("doc_id", "text"), "doc_id")
-    out = src.mapInArrow(winnow_stats_batches, OUT_DDL)
-    # ordered => input was range-partitioned on doc_id, so the global
-    # order comes shuffle-free and the kernel runs ONCE (a global sort
-    # above the kernel would re-execute it for range-boundary sampling).
-    return out.sortWithinPartitions("doc_id") if ordered else out.orderBy("doc_id")
+    return map_ordered(
+        d.select("doc_id", "text"),
+        "doc_id",
+        lambda src: src.mapInArrow(winnow_stats_batches, OUT_DDL),
+    )
 
 
 _HTML_WRAP_SQL = (
@@ -878,19 +876,16 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure regexp_replace chain (JVM codegen, zero UDFs). The oracle builds
     the IDENTICAL frame and runs the IDENTICAL chain in DuckDB
     (`sql_html_to_text`), and the md5 of every extracted document must
-    hash-match — content equality, not just statistics. Map-only at any
-    scale: no shuffle anywhere in the operator. The small-fixture read is
-    range-partitioned on doc_id first (`fan_out_small_ordered`): the
-    regexp chain then runs core-parallel and exactly ONCE — with the
-    plain global sort on top, the range sampling pass re-evaluated the
-    whole extraction a second time per run."""
-    from rtcdb_spark.functions.dedup import fan_out_small_ordered
+    hash-match — content equality, not just statistics. The extraction
+    is a projection run through `map_ordered`: the (doc_id, text) input
+    is range-partitioned on doc_id across cores, and the ordered output
+    comes from a local sort, so the regexp chain runs core-parallel and
+    exactly once (a global sort on top would re-evaluate the whole
+    extraction to sample range boundaries)."""
+    from rtcdb_spark.functions.dedup import map_ordered
     from rtcdb_spark.functions.text import html_to_text
 
-    d, _ordered = fan_out_small_ordered(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        "doc_id",
-    )
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     html = F.concat(
         F.lit("<html><head><title>doc "),
         F.col("doc_id"),
@@ -906,12 +901,13 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</p></body></html>"),
     )
     txt = html_to_text(html)
-    out = d.select(
+    return map_ordered(
+        d,
         "doc_id",
-        F.md5(txt).alias("content_md5"),
-        F.length(txt).cast("bigint").alias("n_chars"),
-        F.size(F.split(txt, " ")).cast("bigint").alias("n_tokens"),
-    )
-    return (
-        out.sortWithinPartitions("doc_id") if _ordered else out.orderBy("doc_id")
+        lambda src: src.select(
+            "doc_id",
+            F.md5(txt).alias("content_md5"),
+            F.length(txt).cast("bigint").alias("n_chars"),
+            F.size(F.split(txt, " ")).cast("bigint").alias("n_tokens"),
+        ),
     )

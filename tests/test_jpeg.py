@@ -435,3 +435,19 @@ class TestProgressive420:
 
         with pytest.raises(ValueError):
             encode_jpeg_progressive_420(np.zeros((8, 8), dtype=np.uint8))
+
+
+def test_cached_tables_are_read_only():
+    """lru_cache hands one shared object to every caller, so the cached
+    ndarrays and Huffman maps refuse in-place writes."""
+    from rtcdb_spark.functions import jpeg as j
+
+    for arr in (j._zz64(), j._dct_matrix(), j._scaled_quant(j._QUANT_LUMA, 75)):
+        with pytest.raises(ValueError):
+            arr[0] = 0
+    codes = j._build_codes(j._DC_LUMA_BITS, j._DC_LUMA_VALS)
+    with pytest.raises(TypeError):
+        codes[0] = (0, 1)
+    table = j._decode_table(tuple(j._DC_LUMA_BITS), tuple(j._DC_LUMA_VALS))
+    with pytest.raises(TypeError):
+        table[(1, 0)] = 0

@@ -280,6 +280,22 @@ def test_pagerank_invariants(spark):
     assert degs[3] == 3 and degs[5] == 1
 
 
+def test_pagerank_keeps_caller_edge_cache(spark):
+    """pagerank releases only the caches it created: an edge list the
+    caller persisted is still cached afterwards."""
+    from rtcdb_spark.functions.graph import pagerank, symmetrize
+
+    edges = symmetrize(
+        spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    ).persist()
+    try:
+        pagerank(edges, n_iter=2).collect()
+        assert edges.is_cached
+        assert edges.storageLevel.useMemory or edges.storageLevel.useDisk
+    finally:
+        edges.unpersist()
+
+
 def test_simhash_probe_finds_planted_near_dups(spark):
     from rtcdb_spark.functions.dedup import simhash64, simhash_hamming_pairs
 

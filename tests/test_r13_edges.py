@@ -5,12 +5,12 @@ optimization round.
   parity) and zero-row batches return empty instead of raising.
 - hilbert_value: NULL in a clustering column yields NULL d (instead of
   failing the OPTIMIZE job's task).
-- fan_out_small / fan_out_small_ordered: streaming pass-through and the
-  range-partition contract that keeps ordered map-only kernels
-  single-execution.
-- Winnow / codec query plans: the map kernel has NO Exchange above it
-  (a global sort there re-executes the kernel for range sampling), and
-  the fan-out gates no-op on already-parallel input.
+- fan_out_small: streaming pass-through.
+- map_ordered: the kernel runs exactly once per input row and the output
+  is globally ordered, for one-split and already core-parallel input
+  alike (counted with an accumulator, also through the winnow query).
+- Every map_ordered query plan: no Exchange between the root and the
+  kernel (a global sort there re-executes the kernel for range sampling).
 """
 
 import pandas as pd
@@ -104,57 +104,121 @@ def test_hilbert_kernel_masks_nan_inputs():
 
 
 def test_fan_out_small_streaming_passthrough(spark, tmp_path):
-    from rtcdb_spark.functions.dedup import fan_out_small, fan_out_small_ordered
+    from rtcdb_spark.functions.dedup import fan_out_small
 
     sdf = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
     )
     assert fan_out_small(sdf) is sdf
-    out, ordered = fan_out_small_ordered(sdf, "value")
-    assert out is sdf and ordered is False
 
 
-def test_fan_out_small_ordered_contract(spark):
-    from rtcdb_spark.functions.dedup import fan_out_small_ordered
-
-    narrow = spark.range(0, 1000).coalesce(1).select(F.col("id").alias("doc_id"))
-    out, ordered = fan_out_small_ordered(narrow, "doc_id")
-    assert ordered is True
-    # range partitioning on doc_id + sortWithinPartitions == global order
-    got = [r.doc_id for r in out.sortWithinPartitions("doc_id").collect()]
-    assert got == list(range(1000))
-    # already-parallel input is untouched (no added exchange)
-    n = spark.sparkContext.defaultParallelism
-    wide = spark.range(0, 1000, numPartitions=n).select(F.col("id").alias("doc_id"))
-    out2, ordered2 = fan_out_small_ordered(wide, "doc_id")
-    assert ordered2 is False
-    assert "Exchange" not in out2._jdf.queryExecution().executedPlan().toString()
+def _one_and_many_partitions(df):
+    """The same rows as one partition and as a shuffled 2 x cores-wide
+    input: the fixture case and the already core-parallel corpus case."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return {"one_partition": df.coalesce(1), "2x_cores": df.repartition(2 * n)}
 
 
-def _formatted_plan(df) -> str:
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
+def test_map_ordered_runs_kernel_once(spark):
+    """N input rows reach the kernel exactly N times (a global sort above
+    the kernel would sample its output and run it 2N times) and the rows
+    come back globally ordered, whatever the input's partitioning."""
+    from rtcdb_spark.functions.dedup import map_ordered
+
+    n_rows = 10_000
+    ids = spark.range(0, n_rows).select(F.col("id").alias("doc_id"))
+    for label, df in _one_and_many_partitions(ids).items():
+        seen = spark.sparkContext.accumulator(0)
+
+        def count(batches):
+            for pdf in batches:
+                seen.add(len(pdf))
+                yield pdf
+
+        out = map_ordered(
+            df, "doc_id", lambda d: d.mapInPandas(count, "doc_id long")
         )
+        assert [r.doc_id for r in out.collect()] == list(range(n_rows)), label
+        assert seen.value == n_rows, (label, seen.value)
+
+
+def test_winnow_query_runs_kernel_once(spark, sf_smoke, tmp_path, monkeypatch):
+    """The same count through text_winnow_fingerprints itself, on the
+    one-split fixture and on a 2 x cores-file copy of it."""
+    import __spark_entry__ as e
+    from rtcdb_spark.functions import winnow_np
+    from rtcdb_spark.functions.winnow_np import winnow_stats_batch
+
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
+    n_docs = docs.count()
+    wide_dir = str(tmp_path)
+    _one_and_many_partitions(docs)["2x_cores"].write.parquet(
+        f"{wide_dir}/documents.parquet"
     )
+    # the copy scans core-parallel (small files may share a split)
+    wide_scan = spark.read.parquet(f"{wide_dir}/documents.parquet")
+    assert wide_scan.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+    for sf_dir in (sf_smoke, wide_dir):
+        seen = spark.sparkContext.accumulator(0)
+
+        def count(batches):
+            for batch in batches:
+                seen.add(batch.num_rows)
+                yield winnow_stats_batch(batch)
+
+        monkeypatch.setattr(winnow_np, "winnow_stats_batches", count)
+        out = e.queries()["text_winnow_fingerprints"](spark, sf_dir)
+        got = [r.doc_id for r in out.collect()]
+        assert got == sorted(got) and len(got) == n_docs, sf_dir
+        assert seen.value == n_docs, (sf_dir, seen.value)
+
+
+# Every query whose output comes from `map_ordered`, with its kernel node.
+MAP_ORDERED_ROWS = [
+    *(
+        (name, "MapInPandas")
+        for name in (
+            "multimodal_decode_meta",
+            "multimodal_audio_energy",
+            "multimodal_image_stats",
+            "multimodal_audio_silence_trim",
+            "multimodal_png_decode",
+            "multimodal_jpeg_decode",
+            "multimodal_jpeg_progressive",
+            "multimodal_jpeg_420_restart",
+            "multimodal_jpeg_progressive_420",
+            "multimodal_apng_animate",
+            "multimodal_png_layouts",
+            "multimodal_mp4_frame_sample",
+            "multimodal_image_resize",
+            "multimodal_jpeg_arithmetic",
+            "multimodal_jpeg_lossless",
+            "multimodal_jpeg_hierarchical",
+            "multimodal_mp3_bitstream_decode",
+        )
+    ),
+    ("text_winnow_fingerprints", "MapInArrow"),
+    ("text_html_extract", "Project"),
+]
 
 
 def test_winnow_plan_no_exchange_above_kernel(spark, sf_smoke):
-    """The ordered map-only kernels must not have an Exchange ABOVE the
-    map: a global sort there re-executes the kernel for range-boundary
-    sampling (verified with an accumulator in round 13)."""
+    """Every ordered map-kernel row must have no Exchange between the
+    root and its kernel: walking down from the root, only Sort nodes may
+    precede the kernel. A global sort there re-executes the kernel for
+    range-boundary sampling (verified with an accumulator in round 13)."""
     import __spark_entry__ as e
+    from rtcdb_spark.plans.inspect import formatted_plan
 
     qs = e.queries()
-    for name, node in [
-        ("text_winnow_fingerprints", "MapInArrow"),
-        ("multimodal_jpeg_decode", "MapInPandas"),
-        ("multimodal_mp3_bitstream_decode", "MapInPandas"),
-    ]:
-        plan = _formatted_plan(qs[name](spark, sf_smoke))
+    for name, kernel in MAP_ORDERED_ROWS:
+        plan = formatted_plan(qs[name](spark, sf_smoke))
         body = plan.split("\n\n", 1)[0]  # the tree section
-        kernel_line = next(
-            i for i, ln in enumerate(body.splitlines()) if node in ln
-        )
-        above = "\n".join(body.splitlines()[:kernel_line])
-        assert "Exchange" not in above, (name, plan)
+        nodes = [
+            ln.lstrip(" :+-*").rsplit(" (", 1)[0].strip()
+            for ln in body.splitlines()[1:]  # drop the "== Physical Plan ==" title
+        ]
+        assert nodes[0] == "AdaptiveSparkPlan", (name, plan)
+        first = next(i for i, nd in enumerate(nodes[1:], 1) if nd != "Sort")
+        assert first > 1 and nodes[first] == kernel, (name, plan)
