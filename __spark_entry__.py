@@ -14,521 +14,31 @@ from pyspark.sql import DataFrame, SparkSession
 
 from rtcdb_spark.queries import REGISTRY
 
-# Harness-verification priority: one-to-two flagship queries per SURVEY.md §2
-# family, listed first so a verifier that samples a bounded prefix of
-# ``queries()`` still touches every operator family (relational, aggregates,
-# joins, TPC-H, sort/set, windows, scalar fns, event-time, streaming, text,
-# dedup, similarity, multimodal, UDF, sources, sketches, warehouse, reshape,
-# analytics, graph, profiling). The remaining registry follows in
-# registration order. Names absent from the registry are skipped, so this
-# list may lead implementation by a few entries.
+# The driver samples the first 50 entries of ``queries()``. Policy: keep
+# >=1 flagship per operator family there, favouring rows the driver has
+# not yet confirmed; the rest of the registry follows in registration order.
 _PRIORITY = [
-    # Rotation policy (round 3): once a flagship is driver-green and also
-    # covered by the local 177-query oracle mirror, it rotates out for the
-    # strongest not-yet-driver-confirmed query in the same family — every
-    # family keeps >=1 green representative in the 50-entry window.
-    # Rotated in this round: source_json_roundtrip, agg_count_distinct,
-    # fn_math, fn_conditional, stream_running_totals, udf_udtf_tokenize,
-    # dedup_connected_groups_star, similarity_ivf_topk, join_asof_forward;
-    # then (same round, new operators) doubly-green q18/q11/agg_argmax/
-    # join_asof_events_orders rotated out for graph_triangle_count,
-    # dedup_span_fraction, embedding_random_projection, and
-    # timeseries_resample_interp (timeseries family's first window slot);
-    # then (wave 4) doubly-green q9/q20/q22/agg_rollup/join_left_outer
-    # rotated out for graph_label_propagation, fn_url,
-    # agg_weighted_percentiles, orders_survival_curve, and
-    # similarity_mmr_rerank (all five pass the sf0.01 driver-sim locally;
-    # q1 stays as the TPC-H representative, agg_collect_array as the green
-    # aggregate representative);
-    # then (wave 5) singly-green window_ranking, window_rolling_median,
-    # dedup_lsh_pairs, and text_lang_id (all r2-green + local-mirror green)
-    # rotated out for part_pareto_skyline, graph_common_neighbors,
-    # dedup_semantic_clusters, and text_importance_resample — windows keep
-    # lag_lead + running_frames, dedup keeps star/simhash/span, text keeps
-    # token_count/bm25/contamination, so every family keeps >=1 green rep.
-    # (wave 9, round 4 per VERDICT r3 item 1): rotate in the 11-component
-    # confirmation set — source_rtcdb_pruned_scan + source_rtcdb_string_scan
-    # (B1/B2 zone-map pruning on the reference's own format), fn_json_map
-    # (C-VII map/json), stream_dedup_count (C-VIII stateful dedup),
-    # udf_grouped_agg (C-X UDAF), dedup_exact (C-IX exact dedup),
-    # distinct_values (C-V distinct), source_json_roundtrip (C-I JSON).
-    # Rotated out (all r3 driver-green, each family keeps >=1 green rep):
-    # similarity_mmr_rerank, orders_survival_curve, fn_math, fn_conditional,
-    # part_pareto_skyline, funnel_conversion, rollup_cascade,
-    # dedup_semantic_clusters.
-    # (wave 11, round 5 per VERDICT r4 items 3+7): rotate the
-    # never-driver-confirmed survivors plus the round-5 JPEG flagship into
-    # the window — IN: stream_join_left_outer (C-VIII stream-stream),
-    # text_bpe_tokenize (C-IX trained BPE, rows-only by design), agg_rollup
-    # (C-III grouping sets), window_ranking (C-VI ranking), join_semi
-    # (C-IV semi/anti), fn_array (C-VII array), fn_math (C-VII math),
-    # versioned_data_skipping (C-I manifest stats pruning),
-    # multimodal_jpeg_decode (C-IX compressed decode, new this round).
-    # OUT (all r4 driver-green; every family keeps >=1 green rep):
-    # source_json_roundtrip, agg_count_distinct, distinct_values,
-    # window_lag_lead, fn_datetime, fn_url, stream_running_totals,
-    # text_importance_resample, udf_udtf_tokenize.
-    # (wave 12, round 5): rotate the round-5 capability flagships in —
-    # multimodal_jpeg_progressive (T.81 Annex-G progressive codec),
-    # multimodal_png_layouts (full-spec PNG surface), text_bigram_perplexity
-    # (CCNet-style LM quality gate), stream_join_full_outer (C-VIII
-    # stream-stream full outer). OUT (all driver-green in a prior ledger;
-    # every family keeps >=1 green rep): source_csv_roundtrip,
-    # window_tumbling, merge_upsert_customers, graph_triangle_count.
-    # All four incoming queries pass the sf0.01 driver-sim this session.
-    # (wave 13, round 5): multimodal_png_decode -> stream_dedup_near_simhash
-    # (ONLINE banded-SimHash near-dup over arbitrary state + the new
-    # shuffle-free rowwise HOF signature; oracle-matched at sf0.01 this
-    # session). png_decode is driver-green in the r4 ledger and multimodal
-    # keeps 4 reps (jpeg_decode, mp4_frame_sample, jpeg_progressive,
-    # png_layouts); streaming-dedup family keeps stream_dedup_count green.
-    # (wave 15, round 6 per VERDICT r5 items 1/2/4/7): text_bpe_tokenize
-    # KEEPS its slot — it now has a real oracle (greedy-merge replay over
-    # the pinned sf0.01-trained table), closing the structural no_oracle
-    # hole. IN: the six unconfirmed round-5 operators —
-    # versioned_hilbert_skipping, versioned_predicate_routing,
-    # text_html_extract, source_rtcdb_index_stats,
-    # stream_ingest_dedup_versioned, curation_shuffle_shards — plus the
-    # new oracle-gated connectivity-only grouping
-    # (dedup_star_connectivity_groups, VERDICT item 4) and nine perennial
-    # residue re-confirmations: agg_count_distinct, sort_multi_key_limit,
-    # distinct_values, window_lag_lead, fn_datetime, fn_conditional,
-    # window_tumbling, source_csv_roundtrip, udf_udtf_tokenize (all
-    # prior-round driver-green + local-mirror green this session).
-    # OUT (all r5-driver-green; every family keeps >=1 green rep in the
-    # window or a prior ledger): source_rtcdb_pruned_scan (string_scan
-    # stays), versioned_data_skipping + versioned_zorder_skipping
-    # (predicate_routing exercises the same stats planner; bloom_point +
-    # incremental_optimize stay), agg_rollup (percentiles stay),
-    # join_asof_forward (join_semi stays), window_ranking
-    # (running_frames stays), fn_string + fn_math (array/json stay),
-    # window_session (tumbling re-reps batch event-time),
-    # stream_join_left_outer (full_outer + dedup_count stay),
-    # text_token_count (bm25/contamination/bigram stay),
-    # dedup_simhash_probe (exact/star stay), similarity_cosine_topk (ivf
-    # stays), multimodal_jpeg_progressive (decode/mp4/png stay),
-    # udf_pandas_scalar (grouped_agg stays), anomaly_zscore_daily.
-    # C-II scan/filter/project + C-I sources (index-only stats + CSV get
-    # driver slots)
-    # (wave 16, round 6): the round-6 capability flagships — Delta Lake
-    # log interop (partitioned multi-commit roundtrip; zero-copy export +
-    # overwrite/time travel) and progressive+4:2:0 JPEG (the previously
-    # gated combination). OUT (all r5-driver-green; families keep green
-    # reps): graph_label_propagation (pagerank stays), stream_dedup_count
-    # (full_outer/near_simhash/ingest/cdc stay), multimodal_mp4_frame_sample
-    # (jpeg_decode + png_layouts stay). All three incoming queries pass
-    # the sf0.01 driver-sim this session.
-    # (wave 17, round 7 per VERDICT r6 item 3): rotate in the round-7
-    # capability flagships — source_delta_column_mapping (name-mode
-    # column-mapping read), similarity_pq_topk + similarity_ivf_trained_topk
-    # (newly ORACLE-GATED via pinned sf0.01-trained codebooks/centroids,
-    # closing verdict item 7), versioned_timestamp_travel (round-6
-    # capability, benched+local-green but no driver row yet) — plus the
-    # 10-component residue confirmation set the verdict listed:
-    # source_json_roundtrip, agg_rollup, join_asof_forward, window_ranking,
-    # fn_string, fn_math, window_session, stream_dedup_count,
-    # stream_join_left_outer, udf_pandas_scalar (all prior-round
-    # driver-green + local-mirror green this session).
-    # OUT (all r6-driver-green; every family keeps >=1 green rep in the
-    # window or a prior ledger): source_csv_roundtrip,
-    # source_rtcdb_index_stats (string_scan keeps the native-format slot),
-    # source_delta_time_travel (delta keeps partitioned_roundtrip +
-    # column_mapping), versioned_hilbert_skipping,
-    # versioned_bloom_point_skipping, versioned_incremental_optimize
-    # (predicate_routing + merge_upsert + timestamp_travel keep the
-    # versioned family), agg_weighted_percentiles (count_distinct +
-    # rollup stay), sort_multi_key_limit + distinct_values
-    # (set_intersect_all stays), fn_datetime + fn_conditional
-    # (array/json stay, string/math come in), window_lag_lead
-    # (running_frames + ranking stay), window_tumbling (session re-reps
-    # batch event-time, r5-green), text_html_extract (bpe/bigram/bm25/
-    # winnow stay).
-    # (wave 19, round 8 per VERDICT r7 items 1+5): the big
-    # never-driver-confirmed rotation. CENSUS at the start of round 8:
-    # registry 317 entries, 150 driver-confirmed across rounds 1-7 (every
-    # one green in its latest appearance), 167 never driver-run; weakest
-    # families by confirmed/total: sampling 0/4, analytics 2/12,
-    # timeseries 1/8, events 3/14, text 9/30, dedup 7/23, warehouse
-    # 10/29, window 4/10. This window keeps a 25-entry green-rep core
-    # (>=1 r7-green representative per SURVEY §2 family that has one) and
-    # fills the other 25 slots with: the three benched round-7
-    # capabilities that never got a driver row (source_delta_delete_dv,
-    # source_delta_changes, multimodal_jpeg_lossless), the new round-8
-    # CDF flagship (source_delta_cdf), the five residue components the
-    # verdict listed (agg_weighted_percentiles, window_lag_lead,
-    # fn_datetime, fn_conditional, window_tumbling — all prior-round
-    # driver-green), and SIXTEEN never-driver-run entries biased toward
-    # the weak families above (all local-mirror green this session):
-    # versioned_changes_feed, agg_bitmap_distinct, join_asof_nearest,
-    # set_except_all, window_ntile_distribution, window_first_last,
-    # fn_regexp, stream_join_click_purchase, stream_window_session,
-    # text_quality_filter, text_lang_audit, dedup_minhash_signatures,
-    # dedup_ngram_jaccard, sample_hash_deterministic,
-    # timeseries_gapfill_ffill, multimodal_image_phash_dedup.
-    # That puts 20 never-run entries in the window -> cross-round union
-    # 150 + 20 = 170 if all green (VERDICT r7 item 5's target).
-    # OUT (ALL r7-driver-green; each family keeps >=1 green rep in this
-    # window or the r7 ledger): source_json_roundtrip,
-    # versioned_predicate_routing, versioned_timestamp_travel,
-    # agg_count_distinct, join_asof_forward,
-    # source_delta_deletion_vectors, source_delta_optimize_vacuum,
-    # set_intersect_all, window_ranking, fn_string, fn_math,
-    # window_session, stream_ingest_dedup_versioned, stream_dedup_count,
-    # stream_join_left_outer, text_bm25_search, text_winnow_fingerprints,
-    # dedup_connected_groups_star, similarity_ivf_topk,
-    # multimodal_jpeg_progressive_420, multimodal_apng_animate,
-    # udf_udtf_tokenize, udf_pandas_scalar, graph_pagerank,
-    # matview_incremental_refresh.
-    # (wave 20, round 9 per VERDICT r8 item 1): the second census
-    # rotation. CENSUS at the start of round 9: registry 320 entries,
-    # 170 driver-confirmed across rounds 1-8 (every one green in its
-    # latest appearance; the r8 window went 50/50), 150 never
-    # driver-run; ZERO-confirmed families: events 0/10, sessionize,
-    # pivot, cohort, histogram 0/2, lineitem-analytics 0/2,
-    # attribution, scd2, pack, search, split 0/2, mixture, cdc, basket,
-    # customer-analytics 0/2, supplier, profile; weakest nonzero:
-    # orders-analytics 1/10, embedding 1/7, timeseries 2/7. This window
-    # keeps a 21-entry green-rep core (>=1 r8-green representative per
-    # SURVEY §2 family), adds the TWO round-9 capability rows
-    # (source_delta_cdf_id_mapped — CDF on id-mapped tables via the
-    # field-id-stamping Arrow stage writer; _nested_id_partitioned —
-    # partitioned writes to nested-id-mapped tables, the last two
-    # writer-matrix cells), and fills the remaining 27 slots with
-    # never-driver-run entries biased to the zero/weak families above
-    # (all pass the sf0.01 driver-sim locally this session): 3 events
-    # reps, sessionize_islands, pivot_events, cohort_retention,
-    # histogram_equidepth, lineitem_abc_pareto, attribution_multi_touch,
-    # scd2_order_status, cdc_snapshot_diff, split_train_val_test,
-    # mixture_balance_sources, basket_brand_affinity,
-    # customer_order_gap_stats, supplier_concentration_hhi,
-    # profile_columns, search_rrf_fusion, pack_sequences,
-    # orders_rfm_segmentation, embedding_quantize_int8, timeseries_ewma,
-    # stream_window_sliding, source_orc_roundtrip,
-    # curation_pipeline_funnel, sample_stratified_fixed,
-    # udf_cogrouped_map. Late-round swaps raised the first-timer count
-    # to 31: source_delta_restore (RESTORE/history flagship) took the
-    # r8-green partitioned-roundtrip slot, stream_delta_cdf_source (the
-    # change-feed streaming source) took the r8-green stream_delta_source
-    # slot, and multimodal_mp3_bitstream_decode took the r8-green
-    # jpeg_hierarchical slot. 31 never-run entries in the window ->
-    # cross-round union 170 + 31 = 201 if all green (VERDICT r8 item 1
-    # target: >=193).
-    # OUT (ALL r8-driver-green; each family keeps >=1 green rep in this
-    # window or the r8 ledger): source_delta_column_mapping,
-    # source_delta_delete_dv, source_delta_changes,
-    # source_delta_merge_cdf, agg_rollup, agg_weighted_percentiles,
-    # join_semi, window_lag_lead, window_ntile_distribution,
-    # window_first_last, fn_array, fn_regexp, fn_datetime,
-    # fn_conditional, window_tumbling, stream_dedup_near_simhash,
-    # stream_join_click_purchase, text_quality_filter, text_lang_audit,
-    # dedup_minhash_signatures, dedup_ngram_jaccard,
-    # curation_shuffle_shards, sample_hash_deterministic,
-    # timeseries_gapfill_ffill, similarity_ivf_trained_topk,
-    # multimodal_jpeg_lossless, multimodal_image_phash_dedup,
-    # udf_grouped_agg, stream_delta_sink.
-    # (wave 21, round 10 per VERDICT r9 item 1): the third census
-    # rotation. CENSUS at the start of round 10: registry 326 entries,
-    # 205 driver-confirmed across rounds 1-9 (every one green in its
-    # latest appearance; the r9 window went 50/50), 121 never
-    # driver-run; zero-confirmed families: quality 0/1; weakest:
-    # orders-analytics 2/10, embedding 2/7, stream-composites 3/10,
-    # events 3/10, reshape 1/3, dedup 9/23, text 11/27,
-    # timeseries 3/7, plus ten 1/2 one-off families (sort-within,
-    # funnel, histogram, anomaly, part, lineitem, freq, split,
-    # customer, sample). This window keeps a 23-entry green-rep core
-    # (>=1 r9-green representative per SURVEY §2 family) and fills the
-    # other 27 slots with never-driver-run entries biased to those
-    # families (all pass the sf0.01 driver-sim locally this session);
-    # five of them (fn_variant_json, agg_string_agg, window_nth_value,
-    # graph_bfs_hops + the events DFT row's family sibling) were in the
-    # judge's independent 18/18 r9 sample, so the window and the
-    # sample cross-check each other. A late-round swap (the wave-19/20
-    # pattern) put the round-10 capability flagship
-    # stream_delta_backfill_files — maxFilesPerTrigger draining one
-    # 6-file commit in 3 compound-offset micro-batches, oracle-gated —
-    # in the r9-green stream_delta_cdf_source slot (streaming-delta
-    # keeps cdf_source green in the r9 ledger and the backfill row
-    # exercises the same source). Further swaps put the other round-10
-    # capability flagships in r9-green slots whose families keep green
-    # reps in the window or the r9 ledger:
-    # source_delta_liquid_clustering (domain metadata + CLUSTER BY
-    # driving a bare OPTIMIZE) for source_delta_cdf,
-    # source_delta_ict_travel (in-commit timestamps beating mtime skew)
-    # for text_bigram_perplexity (text keeps bpe_tokenize in-window),
-    # source_delta_alter_columns (enable-mapping migration +
-    # RENAME/DROP/ADD COLUMN) for dedup_star_connectivity_groups
-    # (dedup keeps dedup_exact in-window), and
-    # source_delta_row_tracking (stable row ids, backfill, DV-safe,
-    # OPTIMIZE materialization) for udf_cogrouped_map (C-X keeps its
-    # green rep in the r9 ledger). 32 never-run entries in the window
-    # -> cross-round union 205 + 32 = 237 if all green (VERDICT r9
-    # item 1 target: >=226).
-    # OUT (ALL r9-driver-green; each family keeps >=1 green rep in
-    # this window or the r9 ledger): source_delta_restore,
-    # source_delta_cdf_id_mapped, source_delta_nested_id_partitioned,
-    # events_user_paths, events_ab_test_ztest, sessionize_islands,
-    # pivot_events, cohort_retention, histogram_equidepth,
-    # lineitem_abc_pareto, attribution_multi_touch, scd2_order_status,
-    # cdc_snapshot_diff, split_train_val_test, mixture_balance_sources,
-    # basket_brand_affinity, customer_order_gap_stats,
-    # supplier_concentration_hhi, search_rrf_fusion, pack_sequences,
-    # orders_rfm_segmentation, embedding_quantize_int8,
-    # timeseries_ewma, stream_window_sliding, source_orc_roundtrip,
-    # curation_pipeline_funnel, sample_stratified_fixed.
-    # (wave 22, round 11 per VERDICT r10 items 1+8): the fourth census
-    # rotation. CENSUS at the start of round 11: registry 334 entries
-    # (336 after this round's two capability rows), 237 driver-confirmed
-    # across rounds 1-10 (49/50 hash-green in r10; the 50th was the
-    # oracle-less sort_within_partitions, which now carries a DERIVED
-    # oracle — in-query n_order_violations=0 via
-    # monotonically_increasing_id + lag over spark_partition_id, DuckDB
-    # twin = plain projection + literal 0 — and stays in-window to turn
-    # that slot hash-green), 97 never driver-run. Weakest families by
-    # confirmed/total: events 5/11, dedup 11/23, text 14/27, orders
-    # 5/10, embedding+similarity 10/16, timeseries 4/7, join 10/16,
-    # fn 10/16, graph 5/8, plus the 1/2 one-offs (customer, part).
-    # This window keeps a green-rep core (>=1 r10-green representative
-    # per SURVEY §2 family that has one; families whose rep rotates out
-    # keep r9/r10-ledger greens), adds the FOUR round-11 capability
-    # rows (source_delta_row_tracking_idmap — OPTIMIZE/MERGE id
-    # materialization on ID-mapped tables, the matrix cell round 10
-    # refused, VERDICT r10 item 2; source_delta_restore_cdf_evolved —
-    # RESTORE with CDF across an additive schema change, item 4;
-    # late swaps per the wave-19/20 precedent:
-    # source_delta_type_widening for fn_json_map's slot and
-    # source_delta_column_defaults for versioned_changes_feed's slot —
-    # both displaced reps stay green in the r10 ledger), and fills the
-    # remaining 27 slots with never-driver-run entries biased to the
-    # weak families above (ALL validated green against the sf0.01
-    # driver-sim this session, as were all four capability rows):
-    # 4 events, 4 dedup, 4 text, 3 orders, 3 embedding/similarity,
-    # 2 timeseries, 2 join, 2 fn, graph_modularity, customer_spend_gini,
-    # part_brand_share_shift. embedding_matryoshka_energy is included
-    # deliberately: its odd-dimension prefix-length divergence (ADVICE
-    # r10) was fixed this round and the driver should hash the fixed
-    # twin. 27 + 4 = 31 first-timers -> cross-round union 237 + 31 = 268
-    # if all green (VERDICT r10 item 1 target: >=257).
-    # OUT (ALL r10-driver-green; each family keeps >=1 green rep in
-    # this window or the r9/r10 ledger): source_delta_liquid_clustering,
-    # source_delta_ict_travel, source_delta_row_tracking,
-    # source_delta_zorder_skipping, quality_gate_orders,
-    # orders_benford_audit, orders_new_vs_returning, orders_growth_mom,
-    # embedding_label_centroids, embedding_norm_quality,
-    # stream_enrich_segments, stream_error_rate_hourly,
-    # stream_cdc_tombstones, events_activity_streaks,
-    # events_markov_transitions, reshape_posexplode,
-    # dedup_embedding_cosine, dedup_exact_normalized, text_tfidf_topk,
-    # text_vocab_build, text_zipf_fit, timeseries_max_drawdown,
-    # funnel_time_to_convert, histogram_value_bins, anomaly_mad_robust,
-    # graph_bfs_hops, fn_variant_json, window_nth_value, agg_string_agg.
-    # (wave 23, round 12 per VERDICT r11 items 1+2+8): the fifth census
-    # rotation. CENSUS at the start of round 12: registry 338 entries
-    # (340 after this round's two capability rows), strict hash-green
-    # union 265 across rounds 1-11 (windows-entered 268 — the delta is
-    # the three no_oracle sketch rows, stated per VERDICT r11 process
-    # finding 1), 70 never driver-run. This window keeps a 17-slot
-    # green-rep core (>=1 r11-green rep per SURVEY §2 family that has
-    # one; families whose reps rotate out keep r10/r11-ledger greens),
-    # adds the TWO round-12 capability rows (source_delta_merge_identity
-    # — engine-generated ids through MERGE, VERDICT r11 item 5;
-    # source_delta_cdf_mixed_derive — derived feed for non-CDF mixed
-    # commits, item 6), the THREE formerly-no_oracle sketch rows now
-    # carrying DERIVED oracles (VERDICT r11 item 2 executed: exact value
-    # + published-error-bound flag, the sort_within_partitions pattern —
-    # agg_approx_count_distinct, agg_hll_sketch_union,
-    # agg_percentiles_approx; zero no_oracle registry entries remain),
-    # and fills the remaining 28 slots with never-driver-run entries
-    # biased to the weakest families (4 dedup, 5 text incl. the
-    # now-oracle'd text_compression_ratio, 2 events, 2 orders,
-    # 1 timeseries, 2 join, 2 fn, 2 window, 2 graph, 2 agg,
-    # 2 versioned, 2 multimodal — ALL validated green against the
-    # sf0.01 driver-sim this session, as were the capability and sketch
-    # rows). 28 + 3 + 2 = 33 first-timers -> strict hash-green union
-    # 265 + 33 = 298 if all green (VERDICT r11 item 1 target: >=289).
-    # OUT (ALL r11-driver-green; each family keeps >=1 green rep in
-    # this window or the r10/r11 ledger): source_delta_row_tracking_idmap,
-    # source_delta_restore_cdf_evolved, source_delta_column_defaults,
-    # source_delta_type_widening, agg_bitmap_distinct,
-    # sort_within_partitions, events_periodicity_dft,
-    # events_burstiness_fano, events_behavior_entropy,
-    # events_error_burn_rate, dedup_simhash, dedup_containment_pairs,
-    # dedup_survivorship_best_record, dedup_threshold_sweep, text_stats,
-    # text_pii_redact, text_pmi_collocations, text_unigram_nll,
-    # orders_runs_test, orders_cohort_ltv_curve,
-    # orders_backlog_timeseries, embedding_matryoshka_energy,
-    # similarity_knn_graph, embedding_kcenter_coreset,
-    # timeseries_cusum_drift, timeseries_interval_union,
-    # join_lateral_topn, join_interval_overlap, fn_try_cast, fn_hash,
-    # graph_modularity, customer_spend_gini, part_brand_share_shift.
-    # (late round 12, post-census): four additive capability rows
-    # landed AFTER this window was validated —
-    # source_delta_restore_cdf_widened / _repartitioned (RESTORE+CDF
-    # across a type widening / a partitioning change),
-    # source_delta_variant_json (the protocol's Variant Data Type,
-    # Spark-native parquet VARIANT), and source_delta_collated_strings
-    # (the preview Collations chapter: __COLLATIONS schema metadata,
-    # case-insensitive joins from the read schema, skipping disabled on
-    # collated columns), all sf0.01 driver-sim green. They stay OUT of
-    # this window (it is validated as-is) and join the never-run tail,
-    # which after this round's 33 first-timers is 46 entries — 46 + 4
-    # green reps = one round-13 window, closing the whole registry.
-    "q1_pricing_summary", "scan_filter_project",
-    "source_db_api_roundtrip",
-    "source_rtcdb_string_scan",
-    # delta green rep (r11-green; the wider delta surface keeps 6 more
-    # r11-ledger greens)
-    "source_delta_alter_columns",
-    # round-12 capability flagships (both sf0.01 driver-sim green)
+    "q1_pricing_summary", "scan_filter_project", "source_db_api_roundtrip",
+    "source_rtcdb_string_scan", "source_delta_alter_columns",
     "source_delta_merge_identity", "source_delta_cdf_mixed_derive",
-    # the three formerly-no_oracle sketch rows, now DERIVED-oracle'd
-    # (VERDICT r11 item 2) — in-window to earn their first driver hash
     "agg_approx_count_distinct", "agg_hll_sketch_union",
-    "agg_percentiles_approx",
-    # C-IV joins green rep
-    "join_asof_nearest",
-    # C-V sort/set green rep (sort_within_partitions r11-green ledger)
-    "set_except_all",
-    # C-VI windows green rep
-    "window_running_frames",
-    # C-VIII event-time + streaming green reps
-    "stream_window_session", "stream_dedup_near_simhash_unordered",
-    # C-IX text green rep (oracle-gated trained BPE)
-    "text_bpe_tokenize",
-    # C-IX dedup green rep
-    "dedup_exact",
-    # C-IX similarity green rep (pinned-codebook PQ)
-    "similarity_pq_topk",
-    # C-IX multimodal green rep
-    "multimodal_mp3_bitstream_decode",
-    # streaming Delta green rep (exactly-once source, rate limits)
-    "stream_delta_backfill_files",
-    # events + profiling green reps
-    "events_peak_concurrency", "profile_columns",
-    # --- 28 never-driver-run entries, census-biased (wave 23) ---
-    # dedup (15/23 after r11)
-    "dedup_connected_groups", "dedup_materialize_survivors",
-    "dedup_prefix_filter_pairs", "dedup_rate_by_source",
-    # text (18/27 after r11) — incl. the now-oracle'd compression row
-    "text_fingerprint", "text_repetition_quality", "text_chunk_overlap",
-    "text_oov_rate", "text_compression_ratio",
-    # events (9/11 after r11)
-    "events_bot_cadence_detect", "events_json_schema_profile",
-    # orders-analytics
-    "orders_ks_drift_test", "orders_seasonal_naive_backtest",
-    # timeseries
-    "timeseries_stl_decompose",
-    # joins
-    "join_bloom_prefilter", "join_fuzzy_levenshtein",
-    # scalar functions
-    "fn_bitwise", "fn_datetime_intervals",
-    # windows
-    "window_topk_per_group", "window_sliding",
-    # graph
-    "graph_degree_distribution", "graph_degree_assortativity",
-    # aggregates
-    "agg_mode", "agg_corr_regression",
-    # versioned warehouse
-    "versioned_time_travel", "versioned_optimize_compact",
-    # multimodal (both locally green in the judge's r11 fresh sample)
-    "multimodal_audio_silence_trim", "multimodal_jpeg_420_restart",
-]
-
-_WAVE19 = [
-    # the wave-19 (round 8) window body is retained below for the
-    # ledger trail; _PRIORITY above supersedes it.
-    "source_delta_column_mapping",
-    # round-7 wave-2/3 capabilities, driver-unconfirmed until now, plus
-    # the round-8 Change Data Feed + MERGE INTO flagships (wave-2 swap:
-    # source_delta_merge_cdf takes stream_cdc_upsert's slot — r4..r7
-    # green, streaming keeps delta_sink + both near-simhash reps — so
-    # the window carries 21 never-driver-run entries)
-    "source_delta_delete_dv", "source_delta_changes", "source_delta_cdf",
-    "source_delta_merge_cdf",
-    # (wave 10, round 4): swap four doubly-green entries for the round-4
-    # capability flagships, all sf0.01 driver-sim green this session —
-    # agg_collect_array -> versioned_merge_upsert (copy-on-write MERGE),
-    # embedding_random_projection -> stream_cdc_upsert (CDC apply),
-    # multimodal_payload_meta -> multimodal_png_decode (real PNG codec),
-    # graph_common_neighbors -> matview_incremental_refresh (IVM).
-    # Families keep >=1 green rep: aggregates (count_distinct, percentiles),
-    # similarity (cosine, ivf), multimodal (decode_meta), graph (pagerank,
-    # triangle, lpa).
-    # C-I versioned: the never-run change feed + the r4-green MERGE rep
-    "versioned_changes_feed",
-    # C-III aggregates (rollup green rep + percentile residue + never-run
-    # roaring-bitmap distinct)
-    "agg_rollup", "agg_weighted_percentiles", "agg_bitmap_distinct",
-    # C-IV joins (semi/anti green rep + never-run nearest as-of)
-    "join_semi", "join_asof_nearest",
-    # (wave 18, round 7): the late-round Delta capability flagships take
-    # driver slots — source_delta_deletion_vectors (roaring DV decode +
-    # row-index anti-join), source_delta_optimize_vacuum (compaction +
-    # retention reclaim cycle), stream_delta_sink (exactly-once txn-action
-    # sink, fresh-checkpoint replay no-op asserted in-query). OUT (all
-    # r6-driver-green; their families keep prior-ledger green reps):
-    # timeseries_resample_interp, freq_heavy_hitters, reshape_unpivot.
-    # (wave 14, round 5): sort_multi_key_limit -> versioned_zorder_skipping
-    # (OPTIMIZE ... ZORDER BY: multi-dimensional clustering feeding the
-    # manifest's stats pruning) and dedup_span_fraction ->
-    # versioned_bloom_point_skipping (commit-time per-file Bloom index;
-    # point-lookup file skipping where range stats cannot prune). Both
-    # incoming queries oracle-matched at sf0.001+sf0.01 this session;
-    # both outgoing are r4 driver-green (C-V keeps set_intersect_all,
-    # dedup keeps exact/star/simhash green reps). Also
-    # stream_window_tumbling -> versioned_incremental_optimize
-    # (small_only_bytes compaction: O(small files) maintenance, carried
-    # large files byte-identical, metadata-only count_rows invariant;
-    # oracle-matched at sf0.001+sf0.01 this session) — outgoing is r4
-    # driver-green and streaming keeps stream_dedup_count green. Also
-    # source_rtcdb_native_roundtrip -> source_db_api_roundtrip (A1/A2/A3
-    # composed: Database.init catalog write, write_data row-list ingest,
-    # Database.open cold catalog re-read, SQL over the reopened table;
-    # previously unit-only). Outgoing is r4 driver-green; the native
-    # format keeps pruned_scan + string_scan as green reps.
-    # C-V sort / set (never-run EXCEPT ALL rep)
-    "set_except_all",
-    # C-VI windows (frames green rep + lag/lead residue + never-run
-    # ntile ranking and first/last analytic reps)
-    "window_running_frames", "window_lag_lead",
-    "window_ntile_distribution", "window_first_last",
-    # C-VII scalar functions (array/json green reps + datetime/conditional
-    # residue + never-run regex rep)
-    "fn_array", "fn_json_map", "fn_regexp", "fn_datetime", "fn_conditional",
-    # C-VIII event-time (tumbling residue; never-run STREAMING session
-    # windows replace the batch-session rep)
-    "window_tumbling", "stream_window_session",
-    # C-VIII streaming (near-dup gate + its UNORDERED-feed twin stay as
-    # the arbitrary-state/watermark green reps; never-run stream-stream
-    # join rep replaces the r7-green left-outer)
-    "stream_dedup_near_simhash", "stream_dedup_near_simhash_unordered",
-    "stream_join_click_purchase",
-    # C-IX text pipeline (oracle-gated trained BPE + LM perplexity stay;
-    # never-run quality-score and language-ID reps — the LLM-curation
-    # brief's operators — replace r7-green bm25/winnow)
-    "text_bpe_tokenize", "text_bigram_perplexity",
-    "text_quality_filter", "text_lang_audit",
-    # C-IX dedup (exact + oracle-gated star-connectivity stay; never-run
-    # MinHash signatures + n-gram Jaccard reps) + curation shard shuffle
-    "dedup_exact", "dedup_star_connectivity_groups",
-    "dedup_minhash_signatures", "dedup_ngram_jaccard",
-    "curation_shuffle_shards",
-    # sampling (0/4 family — first driver slot) + timeseries (1/8)
-    "sample_hash_deterministic", "timeseries_gapfill_ffill",
-    # C-IX similarity / ANN (the oracle-gated trained pair stays green)
-    "similarity_pq_topk", "similarity_ivf_trained_topk",
-    # C-IX multimodal (the round-8 hierarchical Annex-J flagship takes
-    # the r7-green arithmetic rep's slot; round-7 lossless SOF3 +
-    # never-run image pHash dedup — the family keeps arithmetic/
-    # progressive_420/apng green in the r7 ledger)
-    "multimodal_jpeg_hierarchical", "multimodal_jpeg_lossless",
-    "multimodal_image_phash_dedup",
-    # C-X UDFs (UDAF green rep)
-    "udf_grouped_agg",
-    # streaming Delta: exactly-once sink (r7 flagship) + the round-8
-    # STREAMING SOURCE (Spark-4 Python streaming data source over the
-    # commit log; versioned_merge_upsert rotates out r4/r7-green — the
-    # warehouse family keeps versioned_changes_feed in-window)
-    "stream_delta_sink", "stream_delta_source",
+    "agg_percentiles_approx", "join_asof_nearest", "set_except_all",
+    "window_running_frames", "stream_window_session",
+    "stream_dedup_near_simhash_unordered", "text_bpe_tokenize", "dedup_exact",
+    "similarity_pq_topk", "multimodal_mp3_bitstream_decode",
+    "stream_delta_backfill_files", "events_peak_concurrency",
+    "profile_columns", "dedup_connected_groups", "dedup_materialize_survivors",
+    "dedup_prefix_filter_pairs", "dedup_rate_by_source", "text_fingerprint",
+    "text_repetition_quality", "text_chunk_overlap", "text_oov_rate",
+    "text_compression_ratio", "events_bot_cadence_detect",
+    "events_json_schema_profile", "orders_ks_drift_test",
+    "orders_seasonal_naive_backtest", "timeseries_stl_decompose",
+    "join_bloom_prefilter", "join_fuzzy_levenshtein", "fn_bitwise",
+    "fn_datetime_intervals", "window_topk_per_group", "window_sliding",
+    "graph_degree_distribution", "graph_degree_assortativity", "agg_mode",
+    "agg_corr_regression", "versioned_time_travel",
+    "versioned_optimize_compact", "multimodal_audio_silence_trim",
+    "multimodal_jpeg_420_restart",
 ]
 
 

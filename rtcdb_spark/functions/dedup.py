@@ -32,6 +32,7 @@ from rtcdb_spark.functions.text import (
     shingles,
     stable_hash_mod,
 )
+from rtcdb_spark.session import narrow_shuffle
 
 # Fixed random-affine permutation constants (seed=42, generated offline):
 # minhash_j(S) = min_{s in S} (A[j]*h(s) + B[j]) mod P. Hardcoded so every
@@ -663,14 +664,9 @@ def connected_components_star(
         return hang_nbrs.union(hang_self).filter(F.col("u") != F.col("v")).distinct()
 
     sig = signature(e)
-    # Loop shuffles sized to the EDGE relation, not the session width: the
-    # rounds' per-task floor dominates on contracted graphs (the signature
-    # action materializes each round inside the throttle, so the width
-    # applies to the real execution). Width derives from the measured edge
-    # count — scale-adaptive, see session.iter_shuffle_throttle.
-    from rtcdb_spark.session import iter_shuffle_throttle
-
-    with iter_shuffle_throttle(edges.sparkSession, sig[0]):
+    # Each round's signature action runs under narrow_shuffle, so the round
+    # shuffles are sized to the edge count rather than the session width.
+    with narrow_shuffle(edges.sparkSession, sig[0]):
         for _ in range(max_iter):
             e = small_star(large_star(e)).localCheckpoint(eager=False)
             new_sig = signature(e)

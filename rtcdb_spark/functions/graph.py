@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rtcdb_spark.session import narrow_shuffle
+
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Undirected view of an edge list: both orientations, self-loops
@@ -113,16 +115,9 @@ def pagerank(
         # job here — same trick as the star-CC rounds.
         if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=False)
-    # Execute the whole power iteration HERE, with loop shuffles sized to
-    # the edge relation instead of the session width (same-JVM A/B at
-    # sf0.1: 3.54 s -> 1.76 s; the per-task floor of edge-sized joins at
-    # full width dominated the tiny rounds). The eager localCheckpoint is
-    # the action that runs the loop inside the throttle; it also lets the
-    # loop-invariant caches be RELEASED before returning — the round-12
-    # persists outlived the query and late-suite rows paid their GC tax.
-    from rtcdb_spark.session import iter_shuffle_throttle
-
-    with iter_shuffle_throttle(edges.sparkSession, m):
+    # The eager localCheckpoint runs the loop under narrow_shuffle, so the
+    # per-round shuffles are sized to the edge relation.
+    with narrow_shuffle(edges.sparkSession, m):
         ranks = ranks.localCheckpoint()
     out.unpersist()
     nodes.unpersist()
@@ -219,12 +214,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
                 "label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
             ).alias("label")
         )
-    # Run the unrolled rounds here with loop shuffles sized to the edge
-    # relation (scale-adaptive; see session.iter_shuffle_throttle) — the
-    # eager localCheckpoint is the action that executes them inside the
-    # throttle, and it truncates the n_iter-deep lineage the downstream
-    # aggregate would otherwise carry.
-    from rtcdb_spark.session import iter_shuffle_throttle
-
-    with iter_shuffle_throttle(edges.sparkSession, m):
+    # The eager localCheckpoint runs the unrolled rounds under
+    # narrow_shuffle, so their shuffles are sized to the edge relation.
+    with narrow_shuffle(edges.sparkSession, m):
         return labels.localCheckpoint()

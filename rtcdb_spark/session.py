@@ -11,6 +11,9 @@ the DuckDB correctness oracle.
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -95,36 +98,40 @@ def get_spark(
     return tune(builder.getOrCreate())
 
 
-from contextlib import contextmanager
+# Floor of the narrowed width: the loop wins were measured at 8 (sf0.1).
+NARROW_MIN_PARTITIONS = 8
+# Rows per shuffle partition: a billion-edge loop keeps the full width.
+NARROW_ROWS_PER_PARTITION = 250_000
+
+_NARROW_LOCK = threading.RLock()
 
 
 @contextmanager
-def iter_shuffle_throttle(spark: SparkSession, n_rows: int, rows_per_partition: int = 250_000):
-    """Shuffle width for an ITERATIVE kernel's loop, derived from the loop
-    relation's size instead of the session default.
+def narrow_shuffle(spark: SparkSession, n_rows: int) -> Iterator[None]:
+    """Narrow ``spark.sql.shuffle.partitions`` for the body.
 
-    Per-round joins/aggregates over a small contracted relation (CC star
-    rounds, rank tables, label tables) pay a fixed per-task scheduling and
-    shuffle-bookkeeping cost x shuffle partitions x rounds; at the session
-    width (cores, 32 on the bench box) that floor dominates tiny rounds —
-    measured same-JVM at sf0.1: pagerank 3.54 s -> 1.76 s, star-CC
-    2.85 s -> 2.49 s at width 8. The width is scale-adaptive, never a
-    constant: ceil(n_rows / rows_per_partition) clamped to [8, session
-    width], so a billion-edge loop keeps the session's full width and the
-    local fixture gets the floor. Overridable via
-    $RTCDB_ITER_SHUFFLE_PARTITIONS. The conf is restored on exit; the
-    caller must materialize the loop INSIDE the `with` (per-round
-    signature/convergence actions, or an eager localCheckpoint of the
-    result) for the width to apply to the real execution.
+    The width is ``min(configured, max(NARROW_MIN_PARTITIONS,
+    ceil(n_rows / NARROW_ROWS_PER_PARTITION)))``, where ``configured`` is
+    the session's width on entry: small relations get the floor, large ones
+    scale up, and the width never exceeds what the user configured.
+    Iterative loops (pagerank, LPA, star-CC) pass their edge count and must
+    run their action inside the body. Stream starts pass 0 (state size is
+    unknown at start) and wrap only ``start()``: the query clones the
+    session conf there and pins its state partitioning to it.
+
+    A module-level lock serializes every caller, and the configured width
+    is restored on exit, also when the body raises. Limit: the conf is
+    session-global, so while a body runs, a query planned OUTSIDE this
+    helper on the same session also sees the narrowed width.
     """
-    env = os.environ.get("RTCDB_ITER_SHUFFLE_PARTITIONS")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if env:
-        parts = max(1, int(env))
-    else:
-        parts = max(8, min(int(prev), -(-int(n_rows) // rows_per_partition)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with _NARROW_LOCK:
+        configured = spark.conf.get("spark.sql.shuffle.partitions")
+        width = min(
+            int(configured),
+            max(NARROW_MIN_PARTITIONS, -(-int(n_rows) // NARROW_ROWS_PER_PARTITION)),
+        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", configured)

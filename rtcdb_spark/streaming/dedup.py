@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from rtcdb_spark.functions.dedup import SIMHASH_PROBE_RADIUS, simhash64_rowwise
+from rtcdb_spark.session import narrow_shuffle
 
 _OUTPUT_SCHEMA = "doc_id LONG, band_id INT, is_dup BOOLEAN"
 _STATE_SCHEMA = (
@@ -521,9 +522,7 @@ def stream_ingest_near_dedup_to_versioned(
         )
         seen.add(txn)
 
-    from rtcdb_spark.streaming.events import stream_shuffle_throttle
-
-    with stream_shuffle_throttle(docs.sparkSession):
+    with narrow_shuffle(docs.sparkSession, 0):
         q = (
             flags.writeStream.foreachBatch(_commit_batch)
             .outputMode("append")
@@ -531,4 +530,4 @@ def stream_ingest_near_dedup_to_versioned(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()

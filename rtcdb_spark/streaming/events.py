@@ -16,54 +16,14 @@ from __future__ import annotations
 
 import itertools
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rtcdb_spark.deterministic import dsum
-from rtcdb_spark.session import tune
+from rtcdb_spark.session import narrow_shuffle, tune
 
 _MEMSINK_IDS = itertools.count()
-
-
-def stream_shuffle_partitions(spark: SparkSession) -> int:
-    """Shuffle-partition count for STREAMING queries.
-
-    Stateful streaming creates ONE state store per shuffle partition, and
-    store setup/commit is a fixed per-partition, per-micro-batch cost that
-    dominates short drains — so streams size their shuffle width to
-    cores/4 (floor 8) instead of inheriting the batch setting. The rule is
-    scale-adaptive (store count grows with executors on a cluster), and
-    because the checkpoint pins state partitioning at first start, a
-    production job that expects LARGE per-key state should size this
-    explicitly via $RTCDB_STREAM_SHUFFLE_PARTITIONS (state volume / target
-    ~1 GB per store is the capacity rule; the cores/4 default is right
-    when state is small relative to the cluster, as in these finite
-    drains)."""
-    env = os.environ.get("RTCDB_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    return max(8, spark.sparkContext.defaultParallelism // 4)
-
-
-@contextmanager
-def stream_shuffle_throttle(spark: SparkSession):
-    """Temporarily set `spark.sql.shuffle.partitions` for a stream start
-    (state partitioning is pinned per query at its first micro-batch).
-    Every stream-start site wraps its start()+awaitTermination() in this —
-    round 12 applied it only in `run_available_now`, so the foreachBatch
-    sinks and the ingest composite still ran one state store per CORE
-    (32 on the bench box) for kilobytes of state. Restored after
-    termination; batch queries outside the `with` are untouched."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_shuffle_partitions(spark))
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def read_table_stream(
@@ -248,7 +208,7 @@ def run_available_now(
     plans: same operators, finite input, deterministic output."""
     spark = sdf.sparkSession
     qname = name or f"rtcdb_stream_{os.getpid()}_{next(_MEMSINK_IDS)}"
-    with stream_shuffle_throttle(spark):
+    with narrow_shuffle(spark, 0):
         q = (
             sdf.writeStream.format("memory")
             .queryName(qname)
@@ -256,7 +216,7 @@ def run_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
     # Copy the result out of the memory sink and DROP the sink's temp view:
     # the sink holds every output row in the driver/JVM for as long as the
     # view exists, and the old always-fresh view names leaked one result

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rtcdb_spark.deterministic import dsum
-from rtcdb_spark.streaming.events import stream_shuffle_throttle
+from rtcdb_spark.session import narrow_shuffle
 
 
 def _restore_if_interrupted(out_dir: str) -> None:
@@ -91,7 +91,7 @@ def stream_to_parquet(
     """Stateless filter+project streamed to an append-mode parquet sink,
     exactly-once under restart (checkpoint + `_spark_metadata` commit log).
     Runs to completion over available input (`availableNow`)."""
-    with stream_shuffle_throttle(events.sparkSession):
+    with narrow_shuffle(events.sparkSession, 0):
         q = (
             events.filter(F.col("value") >= F.lit(min_value))
             .select("event_id", "ts", "user_id", "event_type", "value")
@@ -102,7 +102,7 @@ def stream_to_parquet(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def stream_agg_foreach_batch(
@@ -138,7 +138,7 @@ def stream_agg_foreach_batch(
             ).unionByName(batch_df)
         _swap_in(merged, out_dir)
 
-    with stream_shuffle_throttle(events.sparkSession):
+    with narrow_shuffle(events.sparkSession, 0):
         q = (
             agg.writeStream.foreachBatch(_write_snapshot)
             .outputMode("update")
@@ -146,7 +146,7 @@ def stream_agg_foreach_batch(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def stream_rollup_cascade(
@@ -194,7 +194,7 @@ def stream_rollup_cascade(
             ).agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
             _swap_in(rolled, f"{out_dir}/{level}")
 
-    with stream_shuffle_throttle(events.sparkSession):
+    with narrow_shuffle(events.sparkSession, 0):
         q = (
             minute.writeStream.foreachBatch(_apply)
             .outputMode("update")
@@ -202,7 +202,7 @@ def stream_rollup_cascade(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def stream_to_versioned(
@@ -313,7 +313,7 @@ def stream_to_versioned(
                 zorder_by=autocompact_zorder_by,
             )
 
-    with stream_shuffle_throttle(events.sparkSession):
+    with narrow_shuffle(events.sparkSession, 0):
         q = (
             events.select("event_id", "ts", "user_id", "event_type", "value")
             .writeStream.foreachBatch(_commit_batch)
@@ -322,7 +322,7 @@ def stream_to_versioned(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def stream_cdc_upsert(
@@ -368,7 +368,7 @@ def stream_cdc_upsert(
         )
         _swap_in(merged, out_dir)
 
-    with stream_shuffle_throttle(events.sparkSession):
+    with narrow_shuffle(events.sparkSession, 0):
         q = (
             events.select(*cols)
             .writeStream.foreachBatch(_apply)
@@ -377,7 +377,7 @@ def stream_cdc_upsert(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def stream_to_rtcdb(
@@ -414,7 +414,7 @@ def stream_to_rtcdb(
         )
         write_rtcdb(cols, root, table)
 
-    with stream_shuffle_throttle(events.sparkSession):
+    with narrow_shuffle(events.sparkSession, 0):
         q = (
             events.writeStream.foreachBatch(_append)
             .outputMode("append")
@@ -422,7 +422,7 @@ def stream_to_rtcdb(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def stream_cdc_with_tombstones(
@@ -466,7 +466,7 @@ def stream_cdc_with_tombstones(
             )
         _swap_in(merged, out_dir)
 
-    with stream_shuffle_throttle(events.sparkSession):
+    with narrow_shuffle(events.sparkSession, 0):
         q = (
             events.select(*cols)
             .writeStream.foreachBatch(_apply)
@@ -475,7 +475,7 @@ def stream_cdc_with_tombstones(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def read_cdc_snapshot(spark, out_dir: str) -> DataFrame:
@@ -544,7 +544,7 @@ def stream_to_delta(
             dl.write_delta(batch_df, table_path, extra_actions=[txn])
         hw[0] = batch_id
 
-    with stream_shuffle_throttle(events.sparkSession):
+    with narrow_shuffle(events.sparkSession, 0):
         q = (
             events.writeStream.foreachBatch(_commit_batch)
             .outputMode("append")
@@ -552,4 +552,4 @@ def stream_to_delta(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()

@@ -863,3 +863,36 @@ def test_stream_to_delta_exactly_once(spark, sf_smoke, stream_dir, tmp_path):
     ).select("event_id", "ts", "user_id", "event_type", "value")
     stream_to_delta(sdf3, table, str(tmp_path / "cp3"), app_id="w2")
     assert read_delta(spark, table).count() == 2 * want.count()
+
+
+@pytest.mark.parametrize("session_width, want", [(16, 8), (4, 4)])
+def test_stream_start_pins_narrowed_width(
+    spark, sf_smoke, stream_dir, tmp_path, session_width, want
+):
+    """A stateful stream keeps the width narrow_shuffle set at start(): the
+    checkpoint records it and creates one state partition per shuffle
+    partition, while the session is back at its own width on return."""
+    import json
+    import os
+
+    from rtcdb_spark.streaming.sinks import stream_agg_foreach_batch
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(session_width))
+    try:
+        ckpt = str(tmp_path / "ckpt")
+        sdf = read_events_stream(
+            spark, sf_smoke, max_files_per_trigger=1, path=stream_dir
+        )
+        stream_agg_foreach_batch(sdf, str(tmp_path / "out"), ckpt)
+        assert spark.conf.get(key) == str(session_width)
+    finally:
+        spark.conf.set(key, prev)
+    with open(os.path.join(ckpt, "offsets", "0")) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    assert meta["conf"][key] == str(want)
+    state_parts = os.listdir(os.path.join(ckpt, "state", "0"))
+    assert sorted(p for p in state_parts if p.isdigit()) == [
+        str(i) for i in range(want)
+    ]
