@@ -18,6 +18,16 @@ reference file:line):
   the parquet scan (row-group stat skipping = the reference's sparse-index
   pruning design) and prunes columns (= per-column files).
 
+Storage: every catalog table is one ``VersionedTable``
+(``sources/versioned.py``) rooted at ``<db>/<table>``. Each append is a
+commit, and the commit records every new file's per-column min/max in the
+table's log — the reference likewise writes its sparse index inline with
+``write_data`` (src/storage.rs:72-106) — so ``indexed_scan`` prunes from
+stats that can never lag the data, ``merge`` publishes through the log's
+atomic conditional put (the table is readable throughout), and
+``db.versioned(table)`` exposes the same table's history, time travel and
+maintenance (``optimize``, ``vacuum``).
+
 Differences by design, not accident:
 - Types beyond Uint64/String (reference src/data.rs:4-7) are supported via a
   dtype map — the driver fixtures need timestamps, doubles, arrays.
@@ -39,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rtcdb_spark.session import tune
+from rtcdb_spark.sources.versioned import _LOG_DIR, VersionedTable
 
 # dtype name ↔ Spark type. "uint64"/"string" are the reference's two types
 # (src/data.rs:4-7); the rest are the new engine's extensions (SURVEY §1.4).
@@ -148,29 +159,35 @@ class Database:
         self.append(table, df)
 
     def append(self, table: str, df: DataFrame) -> None:
-        """Columnar append of a DataFrame (the batch/bulk form of write_data)."""
+        """Columnar append of a DataFrame (the batch/bulk form of write_data):
+        one commit to the table's log, which records the new files' min/max
+        stats."""
+        self._check_frame(table, df)
+        sort_cols = [c for c, _ in self._meta(table).columns]
+        self.versioned(table).commit(df.sortWithinPartitions(*sort_cols))
+
+    def _check_frame(self, table: str, df: DataFrame) -> None:
+        """``df`` must carry the catalog's columns: same names, same order,
+        same types, so every commit records the catalog schema and reads
+        return it. A mismatch raises before any file is written."""
         meta = self._meta(table)
-        schema = meta.spark_schema()
-        if [f.name for f in df.schema.fields] != [f.name for f in schema.fields]:
-            raise SchemaError(
-                f"schema mismatch for {table}: {df.columns} vs {[c for c, _ in meta.columns]}"
-            )
-        sort_cols = [c for c, _ in meta.columns]
-        (
-            df.sortWithinPartitions(*sort_cols)
-            .write.mode("append")
-            .parquet(self._table_path(table))
-        )
+        want = [(f.name, f.dataType.simpleString()) for f in meta.spark_schema().fields]
+        got = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+        if got != want:
+            raise SchemaError(f"schema mismatch for {table}: {got} vs {want}")
 
     # -- read path ------------------------------------------------------—--
 
     def table(self, name: str) -> DataFrame:
         """Full table as a DataFrame (↔ the read_all stub, src/storage.rs:299,
-        but lazy and actually functional — see SURVEY §4.3 bug 2)."""
-        self._meta(name)
-        return self.spark.read.schema(self._meta(name).spark_schema()).parquet(
-            self._table_path(name)
-        )
+        but lazy and actually functional — see SURVEY §4.3 bug 2): the
+        latest version, planned from its manifest with the catalog schema.
+        A table nothing was written to yet is empty, not an error."""
+        meta = self._meta(name)
+        vt = self.versioned(name)
+        if vt.latest_version() is None:
+            return self.spark.createDataFrame([], meta.spark_schema())
+        return vt.read()
 
     def scan(
         self,
@@ -211,43 +228,35 @@ class Database:
         src/storage.rs:224-297; README.md:14-19) — this is the warehouse
         primitive that supersedes it.
 
-        Implementation is copy-on-write: compute the merged relation
-        (one key shuffle — see operators.relational.merge_upsert), write it
-        to a staging directory, then atomically swap directories. At 100 TB
-        the same pattern narrows to rewriting only partitions that contain
-        matched keys (dynamic partition overwrite) or an ACID table format's
-        pointer-swap commit; the staging-then-swap here models that commit.
+        ``source`` passes the same catalog schema check as ``append``, then
+        ``VersionedTable.merge_upsert`` rewrites only the files holding a
+        matched key and publishes a ``merge`` version through the log's
+        atomic conditional put: the table stays readable throughout, and
+        earlier versions stay readable until ``db.versioned(table).vacuum``
+        deletes the replaced files. Rewritten files hold the surviving rows
+        followed by ``source``'s rows and are not re-sorted, so their
+        min/max ranges can be wider than an append's. A ``source`` with
+        more than one row per key raises ``ValueError`` (reduce it first).
         """
-        import shutil
+        self._check_frame(table, source)
+        self.versioned(table).merge_upsert(source, keys)
 
-        from rtcdb_spark.operators.relational import merge_upsert
-
-        meta = self._meta(table)
-        merged = merge_upsert(self.table(table), source, keys)
-        sort_cols = [c for c, _ in meta.columns]
-        final = self._table_path(table)
-        tmp = final + ".merge_tmp"
-        (
-            merged.sortWithinPartitions(*sort_cols)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        shutil.rmtree(final)
-        os.rename(tmp, final)
-
-    # -- sparse index (file-level manifest) ----------------------------—--
+    # -- sparse index (per-file min/max in the commit log) -----------—--
 
     def build_index(self, table: str, columns: list[str]) -> str:
-        """Build the file-level min/max manifest for ``columns`` — the engine's
-        form of the reference's ``<table>.<col>.index`` sparse index files
-        (reference src/storage.rs:72-106, 353-355). The reference writes index
-        entries inline during ``write_data``; here indexing is an explicit
-        (re-runnable, distributed) pass so appends stay index-free and cheap.
+        """The engine's form of the reference's ``<table>.<col>.index``
+        sparse index files (reference src/storage.rs:72-106, 353-355).
+        Like the reference's index, which ``write_data`` writes inline, the
+        per-file min/max of every column is recorded in the table's log by
+        each commit, so there is nothing to build and no Spark job runs:
+        this checks ``columns`` against the catalog (``SchemaError`` for an
+        unknown one) and returns the log directory that holds the stats.
         """
-        from rtcdb_spark.sources.manifest import build_file_index
-
-        self._meta(table)
-        return build_file_index(self.spark, self._table_path(table), columns)
+        known = {c for c, _ in self._meta(table).columns}
+        unknown = [c for c in columns if c not in known]
+        if unknown:
+            raise SchemaError(f"no such column in {table}: {', '.join(unknown)}")
+        return os.path.join(self._table_path(table), _LOG_DIR)
 
     def indexed_scan(
         self,
@@ -255,35 +264,42 @@ class Database:
         intervals: dict[str, tuple],
         columns: list[str] | None = None,
     ) -> DataFrame:
-        """Scan with manifest-driven file skipping — the reference's designed
-        stage-1/2 read path (index search + zone-map pruning, README.md:51-56)
-        made real at file granularity. Exact: the interval predicate is
-        re-applied row-level after pruning. Falls back to a plain filtered
-        scan when no index has been built."""
-        from rtcdb_spark.sources.manifest import pruned_scan
-
+        """Scan with file skipping from the commit log's per-file stats — the
+        reference's designed stage-1/2 read path (index search + zone-map
+        pruning, README.md:51-56) made real at file granularity. Keeps the
+        files that ``VersionedTable.plan_files`` keeps for every
+        ``col: (lo, hi)`` closed interval (``None`` = open end; a Column
+        bound filters rows but prunes no file), scans them with the
+        recorded schema, then re-applies the exact row filter, so the
+        result always equals the filtered ``scan``. The stats are written
+        by the commit that adds each file, so no rebuild is ever needed
+        after ``write_data``, ``append`` or ``merge``."""
         self._meta(table)
-        return pruned_scan(self.spark, self._table_path(table), intervals, columns)
+        cond = F.lit(True)
+        for col, (lo, hi) in intervals.items():
+            if lo is not None:
+                cond = cond & (F.col(col) >= F.lit(lo))
+            if hi is not None:
+                cond = cond & (F.col(col) <= F.lit(hi))
+        vt = self.versioned(table)
+        v = vt.latest_version()
+        if v is None:
+            df = self.table(table).filter(cond)
+        else:
+            keep = vt._read_manifest(v)["files"]
+            for col, (lo, hi) in intervals.items():
+                if isinstance(lo, Column) or isinstance(hi, Column):
+                    continue  # stats hold Python values: a Column prunes nothing
+                kept = set(vt.plan_files(col, lo, hi, v)[0])
+                keep = [f for f in keep if f in kept]
+            df = vt._scan_kept(v, keep, cond)
+        return df.select(*columns) if columns else df
 
-
-def _versioned_root(db: "Database", name: str) -> str:
-    return os.path.join(db.path, f"_versioned_{name}")
-
-
-def versioned_table(db: "Database", name: str):
-    """Open (creating on first use) a snapshot-versioned table inside this
-    database's directory — the full lakehouse surface (ACID multi-writer
-    commits, time travel, change feed, MERGE/DELETE/OPTIMIZE, shallow
-    clone, schema evolution) hanging off the reference-shaped embedded
-    API. Stored under ``<db>/_versioned_<name>`` so it coexists with the
-    plain parquet tables the ``Database`` catalog manages.
-
-    Free function (not a method) to keep the ``Database`` dataclass at
-    exact reference-API parity; re-exported as ``Database.versioned`` for
-    convenience."""
-    from rtcdb_spark.sources.versioned import VersionedTable
-
-    return VersionedTable(db.spark, _versioned_root(db, name))
-
-
-Database.versioned = versioned_table  # noqa: E305
+    def versioned(self, name: str) -> VersionedTable:
+        """The ``VersionedTable`` at ``<db>/<name>``, created on first use.
+        For a catalog table this is the table the catalog API reads and
+        writes, with its full lakehouse surface (history, time travel,
+        change feed, MERGE/DELETE/OPTIMIZE, shallow clone, vacuum); any
+        other name is a versioned table outside the catalog, stored in the
+        same directory."""
+        return VersionedTable(self.spark, self._table_path(name))

@@ -1124,7 +1124,16 @@ def _write_commit(
             fh.write(json.dumps(a) + "\n")
         fh.flush()
         os.fsync(fh.fileno())
-    os.rename(tmp, target)
+    # Conditional put: the exists() check above only fails fast. A writer
+    # that publishes version N after it is the race the link settles —
+    # os.link fails if N exists, where os.rename would silently replace a
+    # commit whose writer has already returned success.
+    try:
+        os.link(tmp, target)
+    except FileExistsError:
+        raise ValueError(f"Delta version {version} already committed") from None
+    finally:
+        os.remove(tmp)
 
 
 def _meta_action(
@@ -5214,9 +5223,17 @@ def delta_plan_files(
     partition pruning, which needs no stats at all; null partition
     values are always kept (a closed interval cannot prove a null
     absent). O(live files) driver-side metadata, no Spark job."""
+    meta, adds, _state = _snapshot_state(path, version)
+    return _plan_snapshot_files(meta, adds, col, lo, hi), len(adds)
+
+
+def _plan_snapshot_files(
+    meta: dict, adds: dict[str, dict], col: str, lo, hi
+) -> list[str]:
+    """`delta_plan_files` over an already-replayed snapshot (its
+    ``metaData`` and live add actions by path): the sorted kept paths."""
     from pyspark.sql.types import StructType
 
-    meta, adds, _state = _snapshot_state(path, version)
     want = StructType.fromJson(json.loads(meta["schemaString"]))
     key = col
     mode = (meta.get("configuration") or {}).get(
@@ -5243,7 +5260,7 @@ def delta_plan_files(
         # 'APPLE' under UTF8_LCASE) — a binary interval proves nothing,
         # so pruning on this column keeps every file. Sound, never
         # fast-wrong.
-        return sorted(adds), len(adds)
+        return sorted(adds)
     is_string = isinstance(col_dt, StringType)
     pv_parse = None
     if key in pcols:
@@ -5294,7 +5311,19 @@ def delta_plan_files(
         ):
             continue
         keep.append(p)
-    return keep, len(adds)
+    return keep
+
+
+def _plan_snapshot_conjuncts(
+    meta: dict, adds: dict[str, dict], preds: list[tuple]
+) -> list[str]:
+    """The intersection of each ``(col, lo, hi)`` conjunct's kept paths
+    over one snapshot, sorted. Zero conjuncts AND to TRUE (ADVICE r10):
+    every live file is kept."""
+    keep = set(adds)
+    for col, lo, hi in preds:
+        keep &= set(_plan_snapshot_files(meta, adds, col, lo, hi))
+    return sorted(keep)
 
 
 def delta_plan_files_multi(
@@ -5310,17 +5339,8 @@ def delta_plan_files_multi(
     FOR: after clustering on (a, b), a query with ranges on both
     prunes multiplicatively. O(live files × predicates) driver-side
     metadata."""
-    keep: set | None = None
-    total = 0
-    for col, lo, hi in preds:
-        ks, total = delta_plan_files(path, col, lo, hi, version)
-        keep = set(ks) if keep is None else keep & set(ks)
-    if keep is None:
-        # AND over zero conjuncts is TRUE (ADVICE r10): an empty preds
-        # list must keep every live file, not silently read nothing
-        _meta, adds, _state = _snapshot_state(path, version)
-        return sorted(adds), len(adds)
-    return sorted(keep), total
+    meta, adds, _state = _snapshot_state(path, version)
+    return _plan_snapshot_conjuncts(meta, adds, preds), len(adds)
 
 
 def read_delta_pruned_multi(
@@ -5331,13 +5351,13 @@ def read_delta_pruned_multi(
 ) -> DataFrame:
     """Multi-predicate pruned read: conjunctive file skipping THEN the
     exact row-level filters — same contract as `read_delta_pruned`,
-    several dimensions at once."""
+    several dimensions at once. The log is replayed once per call: the
+    plan and the scan come from the same snapshot."""
     from pyspark.sql import functions as F
 
     meta, adds, _state = _snapshot_state(path, version)
-    keep, _total = delta_plan_files_multi(path, preds, version)
-    sub = {p: adds[p] for p in keep}
-    df = _scan_snapshot(spark, path, meta, sub)
+    keep = _plan_snapshot_conjuncts(meta, adds, preds)
+    df = _scan_snapshot(spark, path, meta, {p: adds[p] for p in keep})
     cond = F.lit(True)
     for col, lo, hi in preds:
         if lo is not None:
@@ -5362,18 +5382,7 @@ def read_delta_pruned(
     exactly as in `read_delta`. On a 100 TB table OPTIMIZE'd with
     ``zorder_by`` this turns a range query on any clustered column into
     an O(matching files) scan before parquet row-group pruning starts."""
-    from pyspark.sql import functions as F
-
-    meta, adds, _state = _snapshot_state(path, version)
-    keep, _total = delta_plan_files(path, col, lo, hi, version)
-    sub = {p: adds[p] for p in keep}
-    df = _scan_snapshot(spark, path, meta, sub)
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (F.col(col) >= F.lit(lo))
-    if hi is not None:
-        cond = cond & (F.col(col) <= F.lit(hi))
-    return df.filter(cond)
+    return read_delta_pruned_multi(spark, path, [(col, lo, hi)], version)
 
 
 def delta_version_at(path: str, ts_ms: int) -> int:

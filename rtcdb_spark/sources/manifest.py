@@ -20,9 +20,11 @@ built here from first principles on plain parquet:
 - ``pruned_scan``: reads the manifest (rows scale with *file count*, not
   bytes — at 100 TB with 1 GB files that is ~100k rows, i.e. driver-trivial;
   Spark's own planner does driver-side file listing of the same magnitude),
-  keeps files whose [min, max] interval intersects the predicate interval,
-  and builds a scan over only those files. The residual row-level predicate
-  is re-applied, so results are exact even though file stats are coarse.
+  drops the table's current files whose [min, max] interval misses the
+  predicate interval, and builds a scan over the rest — files the manifest
+  does not list (appended after the build) included. The residual
+  row-level predicate is re-applied, so results are exact even though file
+  stats are coarse or stale.
 
 Soundness note: pruning only ever *keeps* a file whose interval might match —
 a file is skipped only when ``max < lo`` or ``min > hi``, which cannot hold
@@ -35,7 +37,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 Interval = tuple[object, object]  # (lo, hi), either side may be None
@@ -75,6 +77,18 @@ def build_file_index(
     return index_path
 
 
+def _overlaps(intervals: dict[str, Interval]) -> Column:
+    """The manifest-row condition "this file's [min, max] can meet every
+    interval" (closed; ``None`` bounds are open-ended)."""
+    cond = F.lit(True)
+    for c, (lo, hi) in intervals.items():
+        if lo is not None:
+            cond = cond & (F.col(f"max_{c}") >= F.lit(lo))
+        if hi is not None:
+            cond = cond & (F.col(f"min_{c}") <= F.lit(hi))
+    return cond
+
+
 def select_files(
     spark: SparkSession,
     index_path: str,
@@ -86,12 +100,7 @@ def select_files(
     ``min_c > hi``. ``None`` bounds are open-ended.
     """
     manifest = spark.read.parquet(index_path)
-    cond = F.lit(True)
-    for c, (lo, hi) in intervals.items():
-        if lo is not None:
-            cond = cond & (F.col(f"max_{c}") >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (F.col(f"min_{c}") <= F.lit(hi))
+    cond = _overlaps(intervals)
     total = manifest.count()
     # Driver-side collect is METADATA-sized: one row per surviving data file,
     # never data rows (the same driver-resident file list every format keeps —
@@ -113,19 +122,31 @@ def pruned_scan(
     """Manifest-pruned scan: skip files whose stats exclude the predicate,
     then re-apply the predicate row-level on the survivors (exactness).
 
-    Falls back to a plain filtered scan if no manifest exists — pruning is an
-    optimization, never a correctness dependency.
+    The table's CURRENT file listing decides what is read; the manifest
+    only removes files from it. A file added after ``build_file_index``
+    has no manifest row and is always read, and a listed file that no
+    longer exists is never asked for — so a stale manifest costs pruning,
+    never rows. Without a manifest this is a plain filtered scan: pruning
+    is an optimization, never a correctness dependency.
     """
     index_path = index_path or index_path_for(data_path)
-    schema = spark.read.parquet(data_path).schema
+    table = spark.read.parquet(data_path)
     if os.path.isdir(index_path):
-        files, _ = select_files(spark, index_path, intervals)
+        # one metadata-sized collect: (file, may-match) per manifest row
+        listed = {
+            r["_file"]: r["hit"]
+            for r in spark.read.parquet(index_path)
+            .select("_file", _overlaps(intervals).alias("hit"))
+            .collect()
+        }
+        # an all-NULL column's min/max make `hit` NULL: no row can match
+        files = [f for f in table.inputFiles() if listed.get(f, True)]
         if not files:
-            df = spark.createDataFrame([], schema)
+            df = spark.createDataFrame([], table.schema)
         else:
-            df = spark.read.schema(schema).parquet(*files)
+            df = spark.read.schema(table.schema).parquet(*files)
     else:
-        df = spark.read.schema(schema).parquet(data_path)
+        df = table
     for c, (lo, hi) in intervals.items():
         if lo is not None:
             df = df.filter(F.col(c) >= F.lit(lo))

@@ -39,9 +39,10 @@ for values < 2^63; a genuine u64 above that raises a clear error telling
 the user to re-read with ``.option("u64", "decimal")``, which maps the
 column to ``DecimalType(20, 0)`` and decodes the full u64 domain
 losslessly. ``String`` is UTF-8 → ``StringType``. The write path accepts
-only Long/String frames (validated up front) and encodes every column of
-a block before writing any byte of it, so a type or range error can never
-leave the append-only column files out of step.
+only Long/String frames (validated up front) and encodes the whole frame
+into a staging directory before appending any byte, so a type or range
+error can never leave the append-only column files partly written or out
+of step.
 
 Scale notes: the index files are metadata (40 B per 1024 rows per column
 — 4 GB of index per *trillion* rows/column), so the driver plans from
@@ -61,7 +62,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import struct
+import uuid
 from typing import Iterator
 
 import pyarrow as pa
@@ -230,37 +233,22 @@ def write_rtcdb(df: DataFrame, root: str, table: str) -> int:
     Before appending, any reference-padded data files are compacted to
     spec layout (appending physical-EOF offsets to a padded file would
     corrupt it — ADVICE r3) and the schema is validated whole, so no file
-    is opened for a frame the format cannot hold."""
-    os.makedirs(root, exist_ok=True)
-    cols = _check_schema(df)
-    meta_path = os.path.join(root, "metadata.json")
-    meta = {"tables": []}
-    if os.path.exists(meta_path):
-        meta = load_metadata(root)
-    if not any(t["name"] == table for t in meta["tables"]):
-        meta["tables"].append({"name": table, "columns": cols})
-        with open(meta_path, "w") as f:
-            json.dump(meta, f, indent=2)
+    is opened for a frame the format cannot hold.
 
+    All rows or none: every block is encoded into a staging directory under
+    ``root`` first, and only a fully encoded frame is appended to the
+    table's column files (a range error in the last block leaves the table
+    as it was). The table is registered in ``metadata.json`` after its data
+    has landed."""
+    cols = _check_schema(df)
     compact_padded(root, table, cols)
-    data_f = {c["name"]: open(_data_path(root, table, c["name"]), "ab") for c in cols}
-    index_f = {c["name"]: open(_index_path(root, table, c["name"]), "ab") for c in cols}
-    pos = {c["name"]: data_f[c["name"]].tell() for c in cols}
-    n_rows = 0
+    stage = _new_stage(root)
     try:
-        block: list = []
-        for row in df.toLocalIterator():
-            block.append(row)
-            if len(block) == ROWS_PER_BLOCK:
-                _flush_block(block, cols, data_f, index_f, pos)
-                n_rows += len(block)
-                block = []
-        if block:
-            _flush_block(block, cols, data_f, index_f, pos)
-            n_rows += len(block)
+        n_rows = _stage_rows(df.toLocalIterator(), cols, stage)
+        _append_parts(root, table, cols, stage, [0])
     finally:
-        for f in list(data_f.values()) + list(index_f.values()):
-            f.close()
+        shutil.rmtree(stage, ignore_errors=True)
+    _register_table(root, table, cols)
     return n_rows
 
 
@@ -288,23 +276,9 @@ def write_rtcdb_distributed(
     in local mode, a shared filesystem on a real cluster (same contract
     as any single-file sink).
     """
-    import shutil
-    import uuid
-
-    os.makedirs(root, exist_ok=True)
     cols = _check_schema(df)
-    meta_path = os.path.join(root, "metadata.json")
-    meta = {"tables": []}
-    if os.path.exists(meta_path):
-        meta = load_metadata(root)
-    if not any(t["name"] == table for t in meta["tables"]):
-        meta["tables"].append({"name": table, "columns": cols})
-        with open(meta_path, "w") as f:
-            json.dump(meta, f, indent=2)
     compact_padded(root, table, cols)
-
-    stage = os.path.join(root, f"_stage-{uuid.uuid4().hex[:12]}")
-    os.makedirs(stage)
+    stage = _new_stage(root)
     colspec = [(c["name"], c["dtype"]) for c in cols]
 
     def encode_partition(batches):
@@ -313,8 +287,6 @@ def write_rtcdb_distributed(
         Module helpers are re-imported here (not closed over) — the lz4
         Codec handle is not picklable, and worker-side import is the
         standard pattern for executor code anyway."""
-        import os
-
         import pandas as pd
         import pyarrow as pa
         from pyspark import TaskContext
@@ -323,6 +295,7 @@ def write_rtcdb_distributed(
             ROWS_PER_BLOCK,
             _encode_block,
             _ENTRY,
+            _part_path,
         )
 
         _codec = pa.Codec("lz4_raw")
@@ -338,8 +311,8 @@ def write_rtcdb_distributed(
             for name, dtype in colspec:
                 if name not in files:
                     files[name] = (
-                        open(os.path.join(stage, f"part-{pid:05d}.{name}.data"), "wb"),
-                        open(os.path.join(stage, f"part-{pid:05d}.{name}.index"), "wb"),
+                        open(_part_path(stage, pid, name, "data"), "wb"),
+                        open(_part_path(stage, pid, name, "index"), "wb"),
                     )
             encoded = [
                 # .tolist() yields native python int/str (numpy.int64 would
@@ -370,37 +343,88 @@ def write_rtcdb_distributed(
             ixh.close()
         yield pd.DataFrame({"pid": [pid], "n_rows": [n_rows]})
 
-    parts = df.mapInPandas(encode_partition, "pid long, n_rows long").collect()
-    total = int(sum(r.n_rows for r in parts))
-    pids = sorted(r.pid for r in parts if r.n_rows > 0)
-
     try:
-        for name, _dtype in colspec:
-            dpath, ipath = _data_path(root, table, name), _index_path(root, table, name)
-            base = os.path.getsize(dpath) if os.path.exists(dpath) else 0
-            with open(dpath, "ab") as dout, open(ipath, "ab") as iout:
-                for pid in pids:
-                    pdata = os.path.join(stage, f"part-{pid:05d}.{name}.data")
-                    pindex = os.path.join(stage, f"part-{pid:05d}.{name}.index")
-                    with open(pindex, "rb") as f:
-                        buf = f.read()
-                    for off in range(0, len(buf), 40):
-                        start, csize, dsize, lo8, hi8 = _ENTRY.unpack_from(buf, off)
-                        iout.write(_ENTRY.pack(base + start, csize, dsize, lo8, hi8))
-                    with open(pdata, "rb") as f:
-                        shutil.copyfileobj(f, dout)
-                    base += os.path.getsize(pdata)
+        parts = df.mapInPandas(encode_partition, "pid long, n_rows long").collect()
+        _append_parts(root, table, cols, stage, sorted(r.pid for r in parts if r.n_rows > 0))
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-    return total
+    _register_table(root, table, cols)
+    return int(sum(r.n_rows for r in parts))
+
+
+def _new_stage(root: str) -> str:
+    """A fresh private staging directory under ``root`` (the caller
+    removes it whether the write landed or raised)."""
+    stage = os.path.join(root, f"_stage-{uuid.uuid4().hex[:12]}")
+    os.makedirs(stage)
+    return stage
+
+
+def _part_path(stage: str, pid: int, col: str, kind: str) -> str:
+    return os.path.join(stage, f"part-{pid:05d}.{col}.{kind}")
+
+
+def _stage_rows(rows: Iterator, cols: list[dict], stage: str) -> int:
+    """Encode ``rows`` in 1024-row blocks into staged part 0; returns the
+    row count."""
+    data_f = {c["name"]: open(_part_path(stage, 0, c["name"], "data"), "wb") for c in cols}
+    index_f = {c["name"]: open(_part_path(stage, 0, c["name"], "index"), "wb") for c in cols}
+    pos = {c["name"]: 0 for c in cols}
+    n_rows = 0
+    try:
+        block: list = []
+        for row in rows:
+            block.append(row)
+            if len(block) == ROWS_PER_BLOCK:
+                _flush_block(block, cols, data_f, index_f, pos)
+                n_rows += len(block)
+                block = []
+        if block:
+            _flush_block(block, cols, data_f, index_f, pos)
+            n_rows += len(block)
+    finally:
+        for f in list(data_f.values()) + list(index_f.values()):
+            f.close()
+    return n_rows
+
+
+def _append_parts(root: str, table: str, cols: list[dict], stage: str, pids: list[int]) -> None:
+    """Append fully encoded staged parts to the table's column files, in
+    ``pids`` order: data bytes stream file to file, and each 40-byte index
+    entry's part-local start offset is rebased by the running column
+    length. O(1) driver memory; runs only after every block encoded."""
+    for c in cols:
+        name = c["name"]
+        dpath, ipath = _data_path(root, table, name), _index_path(root, table, name)
+        base = os.path.getsize(dpath) if os.path.exists(dpath) else 0
+        with open(dpath, "ab") as dout, open(ipath, "ab") as iout:
+            for pid in pids:
+                pdata = _part_path(stage, pid, name, "data")
+                with open(_part_path(stage, pid, name, "index"), "rb") as f:
+                    buf = f.read()
+                for off in range(0, len(buf), 40):
+                    start, csize, dsize, lo8, hi8 = _ENTRY.unpack_from(buf, off)
+                    iout.write(_ENTRY.pack(base + start, csize, dsize, lo8, hi8))
+                with open(pdata, "rb") as f:
+                    shutil.copyfileobj(f, dout)
+                base += os.path.getsize(pdata)
+
+
+def _register_table(root: str, table: str, cols: list[dict]) -> None:
+    """Add ``table`` to ``root``'s ``metadata.json`` unless it is listed."""
+    meta_path = os.path.join(root, "metadata.json")
+    meta = load_metadata(root) if os.path.exists(meta_path) else {"tables": []}
+    if not any(t["name"] == table for t in meta["tables"]):
+        meta["tables"].append({"name": table, "columns": cols})
+        with open(meta_path, "w") as f:
+            json.dump(meta, f, indent=2)
 
 
 def _flush_block(block, cols, data_f, index_f, pos) -> None:
     # Encode EVERY column before writing ANY bytes: _encode_block raises on
-    # type/range errors, and a raise after a partial write would leave the
-    # column files permanently out of step in this append-only format
-    # (ADVICE r3). With all buffers in hand, the writes below are plain
-    # appends that only fail on I/O errors — which hit all columns alike.
+    # type/range errors, so the staged parts never hold a half-written
+    # block (ADVICE r3); the writers append staged parts to the table only
+    # after the last block encoded.
     encoded = []
     for c in cols:
         raw, lo8, hi8 = _encode_block([r[c["name"]] for r in block], c["dtype"])

@@ -121,6 +121,15 @@ class VersionedTable:
         vs = self.versions()
         return vs[-1] if vs else None
 
+    def _resolve(self, version: int | None) -> int:
+        """``version``, or the head when ``None``; raises on an empty
+        table. Planners and the scan take the resolved number, so a commit
+        landing between planning and scanning cannot mix two snapshots."""
+        v = self.latest_version() if version is None else version
+        if v is None:
+            raise ValueError("table has no commits")
+        return v
+
     # -- sharded manifests (Iceberg manifest-list shape) -------------------
 
     def _write_segment(self, files: list[str], stats: dict) -> str:
@@ -815,9 +824,7 @@ class VersionedTable:
         100 TB table answers COUNT(*) in manifest-read time, same trick as
         the reference's sparse index serving get_min/get_max without block
         decodes (reference README.md:49)."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError("table has no commits")
+        v = self._resolve(version)
         m = self._read_manifest(v)
         stats = m.get("stats", {})
         total = 0
@@ -844,9 +851,7 @@ class VersionedTable:
         back to one footer read for a stats-less legacy file; raises if
         the column has no stats anywhere (e.g. an all-NULL or binary
         column — the caller must scan)."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError("table has no commits")
+        v = self._resolve(version)
         m = self._read_manifest(v)
         stats = m.get("stats", {})
         mn = mx = None
@@ -870,9 +875,7 @@ class VersionedTable:
         intersect the closed interval [lo, hi], plus the total file count.
         Sound by construction — a file without stats for ``col`` is always
         kept; pruning can only skip files whose stats PROVE emptiness."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError("table has no commits")
+        v = self._resolve(version)
         m = self._read_manifest(v)
         stats = m.get("stats", {})
         keep = []
@@ -896,18 +899,27 @@ class VersionedTable:
         pruning even starts."""
         from pyspark.sql import functions as F
 
-        keep, _total = self.plan_files(col, lo, hi, version)
-        if not keep:
-            return self.read(version).filter(F.lit(False))
-        v = self.latest_version() if version is None else version
-        df = self._reader(self._read_manifest_raw(v)).parquet(
-            *[os.path.join(self.root, f) for f in keep]
-        )
+        v = self._resolve(version)
+        keep, _total = self.plan_files(col, lo, hi, v)
         cond = F.lit(True)
         if lo is not None:
             cond = cond & (F.col(col) >= F.lit(lo))
         if hi is not None:
             cond = cond & (F.col(col) <= F.lit(hi))
+        return self._scan_kept(v, keep, cond)
+
+    def _scan_kept(self, version: int, keep: list[str], cond) -> DataFrame:
+        """The pruned-read body every planner shares: scan only the ``keep``
+        files of ``version`` with its recorded schema, then apply the exact
+        row filter ``cond`` (a Column) — pruning changes the plan, never
+        the result. No kept file yields the version's empty relation."""
+        from pyspark.sql import functions as F
+
+        if not keep:
+            return self.read(version).filter(F.lit(False))
+        df = self._reader(self._read_manifest_raw(version)).parquet(
+            *[os.path.join(self.root, f) for f in keep]
+        )
         return df.filter(cond)
 
     def plan_files_distributed(
@@ -935,9 +947,7 @@ class VersionedTable:
         scheduling cost the driver loop doesn't pay)."""
         import pandas as pd
 
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError("table has no commits")
+        v = self._resolve(version)
         raw = self._read_manifest_raw(v)
         seg_names = self._segments_of(v, raw)
         total = self._n_files_of(v)
@@ -1078,9 +1088,7 @@ class VersionedTable:
         see _build_blooms; anything else could false-negative)."""
         if value is None:
             raise ValueError("point lookup on NULL is never equal; no planning")
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError("table has no commits")
+        v = self._resolve(version)
         # bool is an int subclass but renders 'True' vs Spark's 'true'
         bloomable = isinstance(value, (int, str)) and not isinstance(value, bool)
         m = self._read_manifest(v)
@@ -1109,14 +1117,9 @@ class VersionedTable:
         filter — a plan change, never a result change."""
         from pyspark.sql import functions as F
 
-        keep, _total = self.plan_files_point(col, value, version)
-        if not keep:
-            return self.read(version).filter(F.lit(False))
-        v = self.latest_version() if version is None else version
-        df = self._reader(self._read_manifest_raw(v)).parquet(
-            *[os.path.join(self.root, f) for f in keep]
-        )
-        return df.filter(F.col(col) == F.lit(value))
+        v = self._resolve(version)
+        keep, _total = self.plan_files_point(col, value, v)
+        return self._scan_kept(v, keep, F.col(col) == F.lit(value))
 
     # -- predicate-routed read (auto data skipping) --------------------------
 
@@ -1151,9 +1154,7 @@ class VersionedTable:
         user writes a WHERE clause, the skipping finds it."""
         import re
 
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError("table has no commits")
+        v = self._resolve(version)
         m = self._read_manifest(v)
         keep = set(m["files"])
 
@@ -1198,14 +1199,9 @@ class VersionedTable:
         change, never a result change."""
         from pyspark.sql import functions as F
 
-        keep, _total = self.plan_files_where(predicate, version)
-        if not keep:
-            return self.read(version).filter(F.lit(False))
-        v = self.latest_version() if version is None else version
-        df = self._reader(self._read_manifest_raw(v)).parquet(
-            *[os.path.join(self.root, f) for f in keep]
-        )
-        return df.filter(F.expr(predicate))
+        v = self._resolve(version)
+        keep, _total = self.plan_files_where(predicate, v)
+        return self._scan_kept(v, keep, F.expr(predicate))
 
     def clone(self, dest_root: str, version: int | None = None) -> "VersionedTable":
         """Zero-copy shallow clone (Delta's SHALLOW CLONE): create a new
@@ -1219,9 +1215,7 @@ class VersionedTable:
         data dir). The flip side of zero-copy: the clone is only readable
         while the source retains the referenced files — vacuuming the
         SOURCE can break clones, the same contract Delta documents."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError("table has no commits")
+        v = self._resolve(version)
         src = self._read_manifest(v)
         dest = VersionedTable(self.spark, dest_root)
         if dest.latest_version() is not None:
@@ -1287,9 +1281,7 @@ class VersionedTable:
         reason Delta/Iceberg store the schema in metadata; on an evolved
         table this also means old files surface the later columns as NULL
         without paying ``mergeSchema``'s per-file footer pass."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError("table has no commits")
+        v = self._resolve(version)
         m = self._read_manifest(v)
         paths = [os.path.join(self.root, f) for f in m["files"]]
         reader = self._reader(m if not merge_schema else None)

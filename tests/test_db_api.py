@@ -103,6 +103,14 @@ def test_schema_mismatch_on_append(db, spark):
         db.append("events", df)
 
 
+def test_append_rejects_wrong_types(db, spark):
+    # a double column must not land in a uint64 column (nothing is written)
+    df = spark.createDataFrame([("a", 1.5, 1)], "event string, timestamp double, id long")
+    with pytest.raises(SchemaError):
+        db.append("events", df)
+    assert db.table("events").count() == 0
+
+
 def test_sql_surface(spark, tmp_path):
     db = Database.init(spark, str(tmp_path / "sqldb"), [EVENTS])
     db.write_data(
@@ -153,3 +161,87 @@ def test_database_versioned_table_roundtrip(spark, tmp_path):
     # reopening the database reaches the same table
     db2 = Database.open(spark, str(tmp_path / "db"))
     assert db2.versioned("metrics").latest_version() == 1
+
+
+# -- catalog tables are VersionedTables: stats written by every commit -----
+
+KV = TableMeta("kv", [("k", "uint64"), ("v", "string")])
+
+
+def _kv_rows(lo: int, hi: int, tag: str = "v") -> list[list]:
+    return [[k, f"{tag}{k}"] for k in range(lo, hi)]
+
+
+def _sorted_rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_indexed_scan_exact_without_rebuild(spark, tmp_path):
+    # An index built before the second write must not hide its rows: the
+    # commit that adds a file records its stats.
+    db = Database.init(spark, str(tmp_path / "db"), [KV])
+    db.write_data("kv", _kv_rows(0, 100))
+    db.build_index("kv", ["k"])
+    db.write_data("kv", _kv_rows(100, 200))
+    got = db.indexed_scan("kv", {"k": (50, 150)})
+    want = db.scan("kv", predicate="k BETWEEN 50 AND 150")
+    assert _sorted_rows(got) == _sorted_rows(want)
+    assert got.count() == 101
+
+
+def test_indexed_scan_matches_scan_after_merge(spark, tmp_path):
+    db = Database.init(spark, str(tmp_path / "db"), [KV])
+    db.write_data("kv", _kv_rows(0, 100))
+    db.build_index("kv", ["k"])
+    src = spark.createDataFrame(_kv_rows(40, 60, "new") + _kv_rows(200, 210, "ins"), "k long, v string")
+    db.merge("kv", src, ["k"])
+    got = db.indexed_scan("kv", {"k": (30, 205)}, columns=["k", "v"])
+    want = db.scan("kv", columns=["k", "v"], predicate="k BETWEEN 30 AND 205")
+    assert _sorted_rows(got) == _sorted_rows(want)
+    assert {r["v"] for r in got.filter("k = 50").collect()} == {"new50"}
+    assert got.count() == 70 + 6
+
+
+def test_indexed_scan_prunes_disjoint_appends(spark, tmp_path):
+    db = Database.init(spark, str(tmp_path / "db"), [KV])
+    for lo in range(0, 400, 100):
+        db.append("kv", spark.createDataFrame(_kv_rows(lo, lo + 100), "k long, v string").coalesce(1))
+    got = db.indexed_scan("kv", {"k": (120, 180)})
+    assert len(got.inputFiles()) < len(db.table("kv").inputFiles()) == 4
+    assert _sorted_rows(got) == _sorted_rows(db.scan("kv", predicate="k BETWEEN 120 AND 180"))
+
+
+def test_indexed_scan_takes_column_bounds(db):
+    import pyspark.sql.functions as F
+
+    db.write_data("events", ROWS)
+    got = db.indexed_scan("events", {"timestamp": (F.lit(1005), 1010)}, columns=["id"])
+    assert sorted(r["id"] for r in got.collect()) == [2, 3]
+
+
+def test_build_index_rejects_unknown_column(db):
+    with pytest.raises(SchemaError):
+        db.build_index("events", ["no_such_column"])
+
+
+def test_versioned_is_the_catalog_table(db):
+    db.write_data("events", ROWS)
+    vt = db.versioned("events")
+    assert vt.latest_version() == 0
+    assert sorted(list(r) for r in vt.read().collect()) == sorted(ROWS)
+
+
+def test_table_before_any_write_is_empty(db):
+    df = db.table("events")
+    assert df.count() == 0
+    assert df.columns == ["event", "timestamp", "id"]
+    assert db.indexed_scan("events", {"id": (1, 2)}).count() == 0
+
+
+def test_merge_rejects_duplicate_source_keys(spark, tmp_path):
+    db = Database.init(spark, str(tmp_path / "db"), [KV])
+    db.write_data("kv", _kv_rows(0, 10))
+    src = spark.createDataFrame([(1, "a"), (1, "b")], "k long, v string")
+    with pytest.raises(ValueError):
+        db.merge("kv", src, ["k"])
+    assert db.table("kv").count() == 10

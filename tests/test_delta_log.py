@@ -99,6 +99,34 @@ class TestDeltaRoundtrip:
         assert _rows(back.select("k", "bucket")) == _rows(df)
 
 
+class TestCommitPublish:
+    def test_race_past_the_exists_check_never_replaces_a_commit(
+        self, spark, tmp_path, monkeypatch
+    ):
+        # A writer that passed the exists() check before a rival published
+        # version N must fail, not overwrite the rival's commit.
+        import rtcdb_spark.sources.delta_log as dl
+
+        path = str(tmp_path / "t")
+        write_delta(spark.range(3).select(F.col("id").alias("k")), path)
+        target = os.path.join(path, "_delta_log", f"{0:020d}.json")
+        with open(target, "rb") as fh:
+            published = fh.read()
+        real_exists = os.path.exists
+        monkeypatch.setattr(
+            dl.os.path, "exists", lambda p: False if p == target else real_exists(p)
+        )
+        with pytest.raises(ValueError, match="already committed"):
+            dl._write_commit(path, 0, [{"commitInfo": {"operation": "RIVAL"}}])
+        monkeypatch.undo()
+        with open(target, "rb") as fh:
+            assert fh.read() == published
+        assert sorted(os.listdir(os.path.join(path, "_delta_log"))) == [
+            f"{0:020d}.json"
+        ]
+        assert _rows(read_delta(spark, path)) == [(0,), (1,), (2,)]
+
+
 class TestDeltaZeroCopyExport:
     def test_versioned_snapshot_exports_metadata_only(self, spark, tmp_path):
         from rtcdb_spark.sources.versioned import VersionedTable
@@ -5018,6 +5046,39 @@ class TestMultiPredicateSkipping:
             if (i * 2654435761) % 4000 <= 500
         )
         assert got == want
+
+
+    def test_pruned_reads_replay_log_once(self, spark, tmp_path, monkeypatch):
+        # The plan and the scan of one pruned read come from one snapshot.
+        import rtcdb_spark.sources.delta_log as dl
+
+        path = str(tmp_path / "t")
+        write_delta(
+            spark.range(100).select(
+                F.col("id").alias("a"), (F.col("id") % 7).alias("b")
+            ).repartitionByRange(4, "a"),
+            path,
+        )
+        append_delta(spark.range(100, 150).select(
+            F.col("id").alias("a"), (F.col("id") % 7).alias("b")
+        ), path)
+        calls = []
+        real = dl._snapshot_state
+
+        def counting(*args, **kwargs):
+            calls.append(args)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(dl, "_snapshot_state", counting)
+        one = dl.read_delta_pruned(spark, path, "a", 10, 120)
+        assert len(calls) == 1
+        calls.clear()
+        two = dl.read_delta_pruned_multi(spark, path, [("a", 10, 120), ("b", 0, 3)])
+        assert len(calls) == 1
+        assert sorted(r["a"] for r in one.collect()) == list(range(10, 121))
+        assert sorted(r["a"] for r in two.collect()) == [
+            i for i in range(10, 121) if i % 7 <= 3
+        ]
 
 
 class TestVacuumDryRunDescribeDetail:

@@ -102,3 +102,29 @@ def test_database_build_index_and_indexed_scan(spark, sf_smoke, tmp_path):
     got = db.indexed_scan("events", {"ts": (1100, 1199)}).count()
     want = db.scan("events", predicate=(F.col("ts") >= 1100) & (F.col("ts") <= 1199)).count()
     assert got == want == 100
+
+
+def test_pruned_scan_reads_files_added_after_build(spark, sf_smoke, tmp_path):
+    # A stale manifest may cost pruning, never rows: a file appended after
+    # build_file_index is read, and a listed file since deleted is not.
+    import os
+
+    path = str(tmp_path / "li")
+    li = load_table(spark, sf_smoke, "lineitem").select("l_orderkey", "l_quantity")
+    li.repartitionByRange(4, "l_orderkey").write.parquet(path)
+    build_file_index(spark, path, ["l_orderkey"])
+    listed = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    li.filter("l_orderkey <= 500").coalesce(1).write.mode("append").parquet(path)
+    os.remove(os.path.join(path, listed[-1]))
+    iv = {"l_orderkey": (1, 500)}
+    got = pruned_scan(spark, path, iv)
+    want = spark.read.parquet(path).filter("l_orderkey BETWEEN 1 AND 500")
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert want.count() > 0
+
+
+def test_pruned_scan_skips_listed_files(spark, indexed_lineitem):
+    lo = F.lit("1995-06-01").cast("timestamp")
+    hi = F.lit("1995-06-30").cast("timestamp")
+    got = pruned_scan(spark, indexed_lineitem, {"l_shipdate": (lo, hi)})
+    assert 0 < len(got.inputFiles()) < 8

@@ -294,6 +294,26 @@ def test_failed_write_never_leaves_columns_out_of_step(spark, tmp_path):
         assert os.path.getsize(f"{root}/t.{col}.data") == sum(e[1] for e in entries)
 
 
+def test_failed_write_appends_no_rows(spark, tmp_path):
+    """A range error in a late block must not leave the blocks before it
+    appended: a write lands whole or not at all, and a table is registered
+    in metadata.json only once its data has landed."""
+    import os
+
+    root = str(tmp_path / "db")
+    write_rtcdb(spark.range(1000).selectExpr("id AS k", "CAST(id AS STRING) AS s"), root, "t")
+    bad = spark.range(3000).selectExpr(
+        "CASE WHEN id = 2500 THEN -1 ELSE id END AS k", "CAST(id AS STRING) AS s"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="Uint64 out of range"):
+        write_rtcdb(bad, root, "t")
+    assert read_rtcdb(spark, root, "t").count() == 1000
+    with pytest.raises(Exception, match="Uint64 out of range"):
+        write_rtcdb(bad, root, "u")
+    assert [t["name"] for t in load_metadata(root)["tables"]] == ["t"]
+    assert not [n for n in os.listdir(root) if n.startswith("_stage-")]
+
+
 def test_unsupported_schema_rejected_before_any_file_io(spark, tmp_path):
     import os
 
