@@ -45,11 +45,11 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rtcdb_spark.session import tune
 from rtcdb_spark.sources.versioned import _LOG_DIR, VersionedTable
+from rtcdb_spark.sources.zonemap import interval_filter
 
 # dtype name ↔ Spark type. "uint64"/"string" are the reference's two types
 # (src/data.rs:4-7); the rest are the new engine's extensions (SURVEY §1.4).
@@ -155,7 +155,9 @@ class Database:
         for i, row in enumerate(rows):
             if len(row) != width:  # the reference panics on ragged rows
                 raise SchemaError(f"row {i} has {len(row)} cells, expected {width}")
-        df = self.spark.createDataFrame(rows, schema)
+        # one partition, so one file per call; coalesce(1) would also run the
+        # list's per-row conversion in one task (4 cores: 1.37 s vs 0.68 s)
+        df = self.spark.createDataFrame(rows, schema).repartition(1)
         self.append(table, df)
 
     def append(self, table: str, df: DataFrame) -> None:
@@ -266,33 +268,22 @@ class Database:
     ) -> DataFrame:
         """Scan with file skipping from the commit log's per-file stats — the
         reference's designed stage-1/2 read path (index search + zone-map
-        pruning, README.md:51-56) made real at file granularity. Keeps the
-        files that ``VersionedTable.plan_files`` keeps for every
-        ``col: (lo, hi)`` closed interval (``None`` = open end; a Column
-        bound filters rows but prunes no file), scans them with the
-        recorded schema, then re-applies the exact row filter, so the
-        result always equals the filtered ``scan``. The stats are written
-        by the commit that adds each file, so no rebuild is ever needed
-        after ``write_data``, ``append`` or ``merge``."""
+        pruning, README.md:51-56) made real at file granularity: one
+        ``VersionedTable.read_pruned_multi`` over the ``col: (lo, hi)``
+        closed intervals (``None`` = open end; a Column bound filters rows
+        but prunes no file). It keeps the files whose stats can meet every
+        interval, scans them with the recorded schema, then re-applies the
+        exact row filter, so the result always equals the filtered
+        ``scan``. The stats are written by the commit that adds each file,
+        so no rebuild is ever needed after ``write_data``, ``append`` or
+        ``merge``."""
         self._meta(table)
-        cond = F.lit(True)
-        for col, (lo, hi) in intervals.items():
-            if lo is not None:
-                cond = cond & (F.col(col) >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (F.col(col) <= F.lit(hi))
+        preds = [(c, lo, hi) for c, (lo, hi) in intervals.items()]
         vt = self.versioned(table)
-        v = vt.latest_version()
-        if v is None:
-            df = self.table(table).filter(cond)
+        if vt.latest_version() is None:
+            df = self.table(table).filter(interval_filter(preds))
         else:
-            keep = vt._read_manifest(v)["files"]
-            for col, (lo, hi) in intervals.items():
-                if isinstance(lo, Column) or isinstance(hi, Column):
-                    continue  # stats hold Python values: a Column prunes nothing
-                kept = set(vt.plan_files(col, lo, hi, v)[0])
-                keep = [f for f in keep if f in kept]
-            df = vt._scan_kept(v, keep, cond)
+            df = vt.read_pruned_multi(preds)
         return df.select(*columns) if columns else df
 
     def versioned(self, name: str) -> VersionedTable:

@@ -135,6 +135,8 @@ from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rtcdb_spark.sources import zonemap
+
 _LOG = "_delta_log"
 
 
@@ -1155,67 +1157,15 @@ _PROTOCOL = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
 
 
 def _file_stats(full: str) -> dict:
-    """Delta per-file ``stats`` JSON from one parquet footer read:
-    numRecords plus minValues/maxValues/nullCount for top-level
-    primitive columns (the fields real writers record and data skipping
-    plans from). Columns whose footer lacks usable min/max (or whose
-    values don't JSON-serialize, e.g. raw binary) are simply omitted —
-    absence means "never prune on this column", the sound default."""
-    import datetime
-
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(full)
-    md = pf.metadata
-    mins: dict[str, Any] = {}
-    maxs: dict[str, Any] = {}
-    nulls: dict[str, int] = {}
-
-    def _json_ok(v):
-        if isinstance(v, (datetime.datetime, datetime.date)):
-            return v.isoformat(sep=" ") if isinstance(
-                v, datetime.datetime
-            ) else v.isoformat()
-        if isinstance(v, (bool, int, float, str)):
-            return v
-        return None
-
-    if md.num_row_groups == 0:
-        return {"numRecords": md.num_rows}
-    # row-group .column(i) indexes LEAF columns (flattened), NOT the
-    # top-level arrow fields — name each leaf by its dotted schema path
-    # and keep only top-level primitives (no '.' in the path)
-    leaf_names = [
-        md.row_group(0).column(ci).path_in_schema
-        for ci in range(md.row_group(0).num_columns)
-    ]
-    for ci, name in enumerate(leaf_names):
-        if "." in name:
-            continue  # nested leaf: top-level stats only
-        lo = hi = None
-        nn = 0
-        ok = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-            nn += st.null_count if st.null_count is not None else 0
-        if not ok:
-            continue
-        jlo, jhi = _json_ok(lo), _json_ok(hi)
-        if jlo is None or jhi is None:
-            continue
-        mins[name] = jlo
-        maxs[name] = jhi
-        nulls[name] = int(nn)
-    out: dict[str, Any] = {"numRecords": md.num_rows}
-    if mins:
-        out["minValues"] = mins
-        out["maxValues"] = maxs
-        out["nullCount"] = nulls
+    """Delta per-file ``stats`` JSON from one footer read: numRecords plus
+    minValues/maxValues/nullCount for the columns ``zonemap.footer_stats``
+    proves. An omitted column is never pruned on, the sound default."""
+    rows, cols = zonemap.footer_stats(full)
+    out: dict[str, Any] = {"numRecords": rows}
+    if cols:
+        out["minValues"] = {c: s[0] for c, s in cols.items()}
+        out["maxValues"] = {c: s[1] for c, s in cols.items()}
+        out["nullCount"] = {c: s[2] for c, s in cols.items()}
     return out
 
 
@@ -1983,9 +1933,9 @@ def _assign_identity(df: DataFrame, meta: dict) -> DataFrame:
 def _identity_high_water(adds: list[dict], path: str, meta: dict) -> dict | None:
     """Post-write high-water recovery: the max (min for negative step)
     of each identity column over the NEW files, read from parquet
-    footer statistics — O(new files) metadata, no data scan. Returns
-    the updated metaData action dict, or None if nothing moved."""
-    import pyarrow.parquet as pq
+    footer statistics (``zonemap.footer_stats``) — O(new files)
+    metadata, no data scan. Returns the updated metaData action dict, or
+    None if nothing moved."""
     from pyspark.sql.types import StructType
 
     id_fields = _identity_fields(meta)
@@ -1993,37 +1943,27 @@ def _identity_high_water(adds: list[dict], path: str, meta: dict) -> dict | None
         return None
     extremes: dict[str, int] = {}
     for a in adds:
-        full = _resolve(path, a["add"]["path"])
-        pf = pq.ParquetFile(full)
-        names = pf.schema_arrow.names
+        rows, cols = zonemap.footer_stats(_resolve(path, a["add"]["path"]))
+        if rows == 0:
+            continue
         for f in id_fields:
             # column-mapped tables stage files under PHYSICAL names; the
             # logical name is absent from the footer (ADVICE r8 high: the
             # logical lookup silently skipped, the highWaterMark never
             # advanced, and the next append re-issued the same ids)
             phys = _physical_name(f)
-            if phys not in names:
+            if phys not in cols:
                 raise ValueError(
-                    f"identity column {f.name!r} (physical {phys!r}) is "
-                    "absent from a staged file's footer; cannot advance "
-                    "the high-water mark"
+                    f"identity column {f.name!r} (physical {phys!r}): a "
+                    "staged file's footer has no min/max statistics for "
+                    "it; cannot advance the high-water mark"
                 )
-            ci = names.index(phys)
-            for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError(
-                        f"identity column {f.name!r}: staged file lacks "
-                        "min/max statistics; cannot advance the high-water "
-                        "mark"
-                    )
-                step = int(
-                    (f.metadata or {}).get("delta.identity.step", 1)
-                )
-                cand = int(st.max if step > 0 else st.min)
-                cur = extremes.get(f.name)
-                if cur is None or (cand > cur if step > 0 else cand < cur):
-                    extremes[f.name] = cand
+            step = int((f.metadata or {}).get("delta.identity.step", 1))
+            lo, hi, _nulls = cols[phys]
+            cand = int(hi if step > 0 else lo)
+            cur = extremes.get(f.name)
+            if cur is None or (cand > cur if step > 0 else cand < cur):
+                extremes[f.name] = cand
     if not extremes:
         return None
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -5262,6 +5202,8 @@ def _plan_snapshot_files(
         # fast-wrong.
         return sorted(adds)
     is_string = isinstance(col_dt, StringType)
+    if col_dt is not None:
+        lo, hi = (zonemap.decode(b, col_dt.simpleString()) for b in (lo, hi))
     pv_parse = None
     if key in pcols:
         dt = next(
@@ -5274,12 +5216,12 @@ def _plan_snapshot_files(
                 return int(v)
             if dt in ("double", "float"):
                 return float(v)
-            return v  # strings/dates compare in their serialized order
+            return v  # text; date/timestamp text compares as an instant
 
     keep = []
     for p in sorted(adds):
         a = adds[p]
-        bounds = None
+        bounds = (None, None)  # unknown: never pruned
         if pv_parse is not None:
             raw = (a.get("partitionValues") or {}).get(key)
             if raw is not None:
@@ -5287,7 +5229,7 @@ def _plan_snapshot_files(
                     v = pv_parse(raw)
                     bounds = (v, v)  # exact value: tightest possible
                 except (ValueError, TypeError):
-                    bounds = None
+                    pass
         else:
             s = a.get("stats")
             if s:
@@ -5296,21 +5238,13 @@ def _plan_snapshot_files(
                     mn = (st.get("minValues") or {}).get(key)
                     mx = (st.get("maxValues") or {}).get(key)
                     if mn is not None and mx is not None:
-                        bounds = (mn, mx)
-                        if is_string and st.get("tightBounds") is False:
-                            # non-tight string max may be a truncated,
-                            # unpadded prefix (a LOWER bound) — it can
-                            # never prove `max < lo`; min stays sound
-                            bounds = (mn, None)
+                        # non-tight string max: see delta_plan_files
+                        loose = is_string and st.get("tightBounds") is False
+                        bounds = (mn, None if loose else mx)
                 except (ValueError, TypeError):
-                    bounds = None
-        if bounds is not None and (
-            (hi is not None and bounds[0] > hi)
-            or (lo is not None and bounds[1] is not None
-                and bounds[1] < lo)
-        ):
-            continue
-        keep.append(p)
+                    pass
+        if zonemap.may_overlap(*bounds, lo, hi):
+            keep.append(p)
     return keep
 
 
@@ -5353,18 +5287,10 @@ def read_delta_pruned_multi(
     exact row-level filters — same contract as `read_delta_pruned`,
     several dimensions at once. The log is replayed once per call: the
     plan and the scan come from the same snapshot."""
-    from pyspark.sql import functions as F
-
     meta, adds, _state = _snapshot_state(path, version)
     keep = _plan_snapshot_conjuncts(meta, adds, preds)
     df = _scan_snapshot(spark, path, meta, {p: adds[p] for p in keep})
-    cond = F.lit(True)
-    for col, lo, hi in preds:
-        if lo is not None:
-            cond = cond & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (F.col(col) <= F.lit(hi))
-    return df.filter(cond)
+    return df.filter(zonemap.interval_filter(preds))
 
 
 def read_delta_pruned(

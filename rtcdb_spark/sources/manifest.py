@@ -40,6 +40,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rtcdb_spark.sources.zonemap import interval_filter
+
 Interval = tuple[object, object]  # (lo, hi), either side may be None
 
 
@@ -147,11 +149,9 @@ def pruned_scan(
             df = spark.read.schema(table.schema).parquet(*files)
     else:
         df = table
-    for c, (lo, hi) in intervals.items():
-        if lo is not None:
-            df = df.filter(F.col(c) >= F.lit(lo))
-        if hi is not None:
-            df = df.filter(F.col(c) <= F.lit(hi))
+    df = df.filter(
+        interval_filter((c, lo, hi) for c, (lo, hi) in intervals.items())
+    )
     if columns:
         df = df.select(*columns)
     return df

@@ -63,6 +63,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rtcdb_spark.sources import zonemap
+
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 # Reserved keys inside a file's stats dict (per-column Bloom filters;
@@ -764,42 +766,15 @@ class VersionedTable:
 
     @staticmethod
     def _file_stats(abs_path: str) -> dict:
-        """Per-file column min/max from the parquet footer (one metadata
-        read, no data I/O) — the stats a commit records for data skipping.
-        Only JSON-representable primitives (int/float/str/bool) are kept;
-        columns lacking footer statistics are omitted (absent = never
-        prunable, always read — the sound default)."""
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(abs_path).metadata
-        out: dict = {}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    continue
-                mn, mx = st.min, st.max
-                if isinstance(mn, bytes):
-                    try:
-                        mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue
-                if not isinstance(mn, (int, float, str, bool)):
-                    continue
-                name = col.path_in_schema
-                if name in out:
-                    out[name] = [min(out[name][0], mn), max(out[name][1], mx)]
-                else:
-                    out[name] = [mn, mx]
-        # file-level physical metadata (rows from the footer, bytes from the
-        # filesystem) — what metadata-only COUNT(*) and size-targeted
-        # compaction plan from without ever touching data pages
-        out[_META_KEY] = {
-            "rows": md.num_rows,
-            "bytes": os.path.getsize(abs_path),
-        }
+        """The stats a commit records for one file: each column's
+        ``[min, max]`` as ``zonemap.footer_stats`` proves them (a column
+        without footer min/max in every row group is absent, so never
+        pruned on), plus ``__meta__``: rows from the footer and bytes from
+        the filesystem — what metadata-only COUNT(*) and size-targeted
+        compaction plan from without touching data pages."""
+        rows, cols = zonemap.footer_stats(abs_path)
+        out: dict = {c: [lo, hi] for c, (lo, hi, _nulls) in cols.items()}
+        out[_META_KEY] = {"rows": rows, "bytes": os.path.getsize(abs_path)}
         return out
 
     def _collect_stats(self, new_files: list[str]) -> dict:
@@ -830,14 +805,9 @@ class VersionedTable:
         total = 0
         for f in m["files"]:
             meta = stats.get(f, {}).get(_META_KEY)
-            if meta is not None:
-                total += meta["rows"]
-            else:
-                import pyarrow.parquet as pq
-
-                total += pq.ParquetFile(
-                    os.path.join(self.root, f)
-                ).metadata.num_rows
+            if meta is None:
+                meta = self._file_stats(os.path.join(self.root, f))[_META_KEY]
+            total += meta["rows"]
         return total
 
     def min_max(self, col: str, version: int | None = None) -> tuple:
@@ -845,15 +815,19 @@ class VersionedTable:
         versioned-table form of the reference's A8 ``get_min``/``get_max``
         served from its sparse index without block decodes
         (reference src/lib.rs get_min/get_max, README.md:49). Exact for
-        numeric/boolean/timestamp columns (footer min/max are exact there);
-        long string values can be writer-truncated in footers, so treat
+        numeric, boolean, date and ``timestamp_ntz`` columns (footer
+        min/max are exact there); date and timestamp results are
+        ``date``/``datetime`` values when the version records its schema.
+        Long string values can be writer-truncated in footers, so treat
         string results as bounds, same as the pruning path does. Falls
         back to one footer read for a stats-less legacy file; raises if
-        the column has no stats anywhere (e.g. an all-NULL or binary
-        column — the caller must scan)."""
+        the column has no stats anywhere (an all-NULL or binary column,
+        or a ``timestamp`` column, which Spark writes as INT96 with no
+        footer min/max — the caller must scan)."""
         v = self._resolve(version)
         m = self._read_manifest(v)
         stats = m.get("stats", {})
+        type_name = self._column_types(m).get(col)
         mn = mx = None
         for f in m["files"]:
             s = stats.get(f, {}).get(col)
@@ -861,52 +835,73 @@ class VersionedTable:
                 s = self._file_stats(os.path.join(self.root, f)).get(col)
             if s is None:
                 continue
-            mn = s[0] if mn is None else min(mn, s[0])
-            mx = s[1] if mx is None else max(mx, s[1])
+            lo, hi = (zonemap.decode(x, type_name) for x in s)
+            mn = lo if mn is None else min(mn, lo)
+            mx = hi if mx is None else max(mx, hi)
         if mn is None:
             raise ValueError(f"no stats recorded for column {col!r}")
         return mn, mx
+
+    @staticmethod
+    def _column_types(manifest: dict[str, Any]) -> dict[str, Any]:
+        """Column name -> recorded Spark type (``simpleString`` for
+        primitives); empty for a manifest that records no schema."""
+        schema = manifest.get("schema") or {"fields": []}
+        return {f["name"]: f["type"] for f in schema["fields"]}
+
+    @classmethod
+    def _plan(cls, manifest: dict[str, Any], preds: list[tuple]) -> list[str]:
+        """The manifest's files that ``zonemap.may_overlap`` keeps for
+        every ``(col, lo, hi)`` conjunct, in manifest order, with bounds
+        decoded for the column's recorded type. A file without stats for a
+        column is kept; zero conjuncts keep every file."""
+        stats = manifest.get("stats", {})
+        types = cls._column_types(manifest)
+        keep = manifest["files"]
+        for col, lo, hi in preds:
+            lo, hi = (zonemap.decode(b, types.get(col)) for b in (lo, hi))
+            keep = [
+                f
+                for f in keep
+                if zonemap.may_overlap(*stats.get(f, {}).get(col, (None, None)), lo, hi)
+            ]
+        return keep
 
     def plan_files(
         self, col: str, lo, hi, version: int | None = None
     ) -> tuple[list[str], int]:
         """Data skipping (Delta/Iceberg file-level stats pruning): the
         subset of a version's files whose [min, max] for ``col`` can
-        intersect the closed interval [lo, hi], plus the total file count.
-        Sound by construction — a file without stats for ``col`` is always
-        kept; pruning can only skip files whose stats PROVE emptiness."""
+        intersect the closed interval [lo, hi] (``None`` = open end), plus
+        the total file count. Sound by construction — a file without stats
+        for ``col``, or whose stats cannot be compared with the bound, is
+        always kept; pruning only skips files whose stats PROVE emptiness.
+        Date and datetime bounds compare as instants."""
+        m = self._read_manifest(self._resolve(version))
+        return self._plan(m, [(col, lo, hi)]), len(m["files"])
+
+    def read_pruned_multi(
+        self, preds: list[tuple], version: int | None = None
+    ) -> DataFrame:
+        """Conjunctive pruned read: keep the files whose stats can meet
+        every ``(col, lo, hi)`` closed interval (each conjunct prunes as in
+        ``plan_files``), THEN apply the exact row filter for every
+        conjunct — pruning is a plan change, never a result change (the
+        same contract as the native source's zone maps). At 100 TB this is
+        what turns a key-range query over a range-clustered table from a
+        full scan into an O(matching files) scan before parquet row-group
+        pruning even starts."""
         v = self._resolve(version)
-        m = self._read_manifest(v)
-        stats = m.get("stats", {})
-        keep = []
-        for f in m["files"]:
-            s = stats.get(f, {}).get(col)
-            if s is not None and (
-                (hi is not None and s[0] > hi) or (lo is not None and s[1] < lo)
-            ):
-                continue
-            keep.append(f)
-        return keep, len(m["files"])
+        return self._scan_kept(
+            v, self._plan(self._read_manifest(v), preds), zonemap.interval_filter(preds)
+        )
 
     def read_pruned(
         self, col: str, lo, hi, version: int | None = None
     ) -> DataFrame:
-        """Read with manifest-level data skipping THEN the exact row-level
-        filter — pruning is a plan change, never a result change (the same
-        contract as the native source's zone maps). At 100 TB this is what
-        turns a key-range query over a range-clustered table from a full
-        scan into an O(matching files) scan before parquet row-group
-        pruning even starts."""
-        from pyspark.sql import functions as F
-
-        v = self._resolve(version)
-        keep, _total = self.plan_files(col, lo, hi, v)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (F.col(col) <= F.lit(hi))
-        return self._scan_kept(v, keep, cond)
+        """``read_pruned_multi`` with one conjunct: manifest-level data
+        skipping on ``col`` THEN the exact ``lo <= col <= hi`` filter."""
+        return self.read_pruned_multi([(col, lo, hi)], version)
 
     def _scan_kept(self, version: int, keep: list[str], cond) -> DataFrame:
         """The pruned-read body every planner shares: scan only the ``keep``
@@ -921,60 +916,6 @@ class VersionedTable:
             *[os.path.join(self.root, f) for f in keep]
         )
         return df.filter(cond)
-
-    def plan_files_distributed(
-        self,
-        col: str,
-        lo=None,
-        hi=None,
-        version: int | None = None,
-        parallelism: int = 32,
-    ) -> tuple[list[str], int]:
-        """Executor-parallel file planning — the form that survives 1M+
-        file manifests, where driver-side resolution holds every segment's
-        stats in one process (measured: ~2.3 s / ~1 GB driver RSS at 1M
-        entries, SCALE.md §14). The Iceberg move: manifests (our segments)
-        are parsed IN EXECUTORS — one mapInPandas over the segment-name
-        list opens each seg-*.json, applies the [lo, hi] overlap test to
-        its own files, and ships back only SURVIVING file names, so driver
-        memory is O(keep) + O(segments), never O(table files). Same
-        soundness contract as ``plan_files``: a file without stats for
-        ``col`` is kept. Total file count comes from the manifest's O(1)
-        recorded counter — no resolution. Results are identical to the
-        driver-side planner (asserted in tests); use this when segment
-        count x files-per-segment outgrows the driver, and the driver
-        planner below for small tables (a Spark job has ~100 ms of fixed
-        scheduling cost the driver loop doesn't pay)."""
-        import pandas as pd
-
-        v = self._resolve(version)
-        raw = self._read_manifest_raw(v)
-        seg_names = self._segments_of(v, raw)
-        total = self._n_files_of(v)
-        log_root = os.path.join(self.root, _LOG_DIR)
-
-        def scan_segments(batches):
-            for pdf in batches:
-                keep: list[str] = []
-                for name in pdf["seg"]:
-                    with open(os.path.join(log_root, name)) as fh:
-                        seg = json.load(fh)
-                    stats = seg.get("stats", {})
-                    for f in seg["files"]:
-                        s = stats.get(f, {}).get(col)
-                        if s is not None and (
-                            (hi is not None and s[0] > hi)
-                            or (lo is not None and s[1] < lo)
-                        ):
-                            continue
-                        keep.append(f)
-                yield pd.DataFrame({"file": pd.Series(keep, dtype="object")})
-
-        segs_df = self.spark.createDataFrame(
-            [(n,) for n in seg_names], "seg string"
-        ).repartition(min(parallelism, max(1, len(seg_names))))
-        rows = segs_df.mapInPandas(scan_segments, "file string").collect()
-        return sorted(r["file"] for r in rows), total
 
     # -- bloom filter index (point-lookup file skipping) --------------------
 
@@ -1094,13 +1035,9 @@ class VersionedTable:
         m = self._read_manifest(v)
         stats = m.get("stats", {})
         keep = []
-        for f in m["files"]:
-            fs = stats.get(f, {})
-            s = fs.get(col)
-            if s is not None and (s[0] > value or s[1] < value):
-                continue
-            bloom = fs.get(_BLOOM_KEY, {}).get(col) if bloomable else None
-            if bloom is not None and not all(
+        for f in self._plan(m, [(col, value, value)]):
+            bloom = stats.get(f, {}).get(_BLOOM_KEY, {}).get(col)
+            if bloomable and bloom is not None and not all(
                 (bloom["words"][p // 64] >> (p % 64)) & 1
                 for p in self._bloom_positions(
                     value, bloom["bits"], bloom["hashes"]
@@ -1147,7 +1084,8 @@ class VersionedTable:
     ) -> tuple[list[str], int]:
         """File planning from a SQL predicate string: each recognizable
         conjunct (``col = lit``, ``col >/>=/</<= lit``, ``col BETWEEN a AND
-        b``) prunes via the stats/bloom planners and the keep-sets
+        b``) prunes via the stats planner (ranges) or ``plan_files_point``
+        (equalities: stats + blooms) and the keep-sets
         intersect; anything unrecognized prunes nothing (sound — the full
         predicate is still applied row-level by ``read_where``). This is
         the transparent routing Delta/Iceberg do inside their scan: the
@@ -1155,8 +1093,6 @@ class VersionedTable:
         import re
 
         v = self._resolve(version)
-        m = self._read_manifest(v)
-        keep = set(m["files"])
 
         def _lit(tok: str):
             if tok.startswith("'"):
@@ -1168,27 +1104,31 @@ class VersionedTable:
         btw_re = re.compile(
             rf"^\s*(\w+)\s+BETWEEN\s+({num})\s+AND\s+({num})\s*$", re.I
         )
+        ranges: list[tuple] = []
+        points: list[tuple] = []
         for c in self._conjuncts(predicate):
             mm = cmp_re.match(c)
             if mm:
                 col, op, tok = mm.groups()
                 val = _lit(tok)
                 if op in ("=", "=="):
-                    sub, _ = self.plan_files_point(col, val, v)
+                    points.append((col, val))
                 elif op in (">", ">="):
                     # strict > prunes with the closed bound — sound superset
-                    sub, _ = self.plan_files(col, val, None, v)
+                    ranges.append((col, val, None))
                 else:
-                    sub, _ = self.plan_files(col, None, val, v)
-                keep &= set(sub)
+                    ranges.append((col, None, val))
                 continue
             mb = btw_re.match(c)
             if mb:
                 col, lo, hi = mb.groups()
-                sub, _ = self.plan_files(col, _lit(lo), _lit(hi), v)
-                keep &= set(sub)
-        files = [f for f in m["files"] if f in keep]
-        return files, len(m["files"])
+                ranges.append((col, _lit(lo), _lit(hi)))
+        m = self._read_manifest(v)
+        keep = self._plan(m, ranges)
+        for col, val in points:
+            kept = set(self.plan_files_point(col, val, v)[0])
+            keep = [f for f in keep if f in kept]
+        return keep, len(m["files"])
 
     def read_where(
         self, predicate: str, version: int | None = None

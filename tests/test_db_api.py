@@ -203,12 +203,29 @@ def test_indexed_scan_matches_scan_after_merge(spark, tmp_path):
 
 
 def test_indexed_scan_prunes_disjoint_appends(spark, tmp_path):
-    db = Database.init(spark, str(tmp_path / "db"), [KV])
-    for lo in range(0, 400, 100):
-        db.append("kv", spark.createDataFrame(_kv_rows(lo, lo + 100), "k long, v string").coalesce(1))
-    got = db.indexed_scan("kv", {"k": (120, 180)})
-    assert len(got.inputFiles()) < len(db.table("kv").inputFiles()) == 4
-    assert _sorted_rows(got) == _sorted_rows(db.scan("kv", predicate="k BETWEEN 120 AND 180"))
+    import datetime
+
+    import pyspark.sql.functions as F
+
+    def hour(k):
+        return datetime.datetime(2024, 1, 1) + datetime.timedelta(hours=k)
+
+    tv = TableMeta("tv", [("k", "timestamp"), ("v", "string")])
+    db = Database.init(spark, str(tmp_path / "db"), [KV, tv])
+    for name, ddl, key in [("kv", "k long", int), ("tv", "k timestamp_ntz", hour)]:
+        for lo in range(0, 400, 100):
+            rows = [(key(k), v) for k, v in _kv_rows(lo, lo + 100)]
+            db.append(name, spark.createDataFrame(rows, f"{ddl}, v string").coalesce(1))
+        lo, hi = key(120), key(180)
+        got = db.indexed_scan(name, {"k": (lo, hi)})
+        assert len(got.inputFiles()) < len(db.table(name).inputFiles()) == 4, name
+        want = _sorted_rows(db.scan(name, predicate=F.col("k").between(lo, hi)))
+        assert len(want) == 61 and _sorted_rows(got) == want, name
+
+
+def test_write_data_commits_one_file(db):
+    db.write_data("events", ROWS * 64)
+    assert db.versioned("events").history()[-1]["n_added"] == 1
 
 
 def test_indexed_scan_takes_column_bounds(db):

@@ -3012,6 +3012,39 @@ class TestDataSkippingZorder:
         assert st["minValues"]["s"] == "0" and st["maxValues"]["s"] == "6"
         assert st["nullCount"]["k"] == 0
 
+    def test_timestamp_ntz_bounds_prune_and_read_exact(self, spark, tmp_path):
+        import datetime as dt
+
+        from rtcdb_spark.sources.delta_log import delta_plan_files, read_delta_pruned
+
+        path = str(tmp_path / "ts")
+        write_delta(
+            spark.range(400)
+            .select(
+                "id",
+                F.expr("CAST(timestamp_seconds(id * 3600 + 0.25) AS timestamp_ntz)")
+                .alias("ts"),
+            )
+            .repartitionByRange(4, "id"),
+            path,
+        )
+        lo, hi = dt.datetime(1970, 1, 2), dt.datetime(1970, 1, 3)
+        keep, total = delta_plan_files(path, "ts", lo, hi)
+        assert len(keep) < total == 4
+        want = _rows(
+            read_delta(spark, path).filter((F.col("ts") >= lo) & (F.col("ts") <= hi))
+        )
+        assert [r[0] for r in want] == list(range(24, 48))
+        assert _rows(read_delta_pruned(spark, path, "ts", lo, hi)) == want
+        # text bounds parse as Spark casts them, not as text against the
+        # recorded ' '-separated stats
+        lo, hi = "1970-01-05T00:00:00", "1970-01-05T12:00:00"
+        want = _rows(
+            read_delta(spark, path).filter((F.col("ts") >= lo) & (F.col("ts") <= hi))
+        )
+        assert [r[0] for r in want] == list(range(96, 108))
+        assert _rows(read_delta_pruned(spark, path, "ts", lo, hi)) == want
+
     def test_plan_files_prunes_and_stays_sound(self, spark, tmp_path):
         from rtcdb_spark.sources.delta_log import (
             delta_plan_files,
