@@ -63,6 +63,9 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(
     app_name: str = "rtcdb-spark",
     cpus: int | None = None,
@@ -74,6 +77,15 @@ def get_spark(
     default to the core count — right for local mode; on a cluster this would
     be set to ~2-3x total executor cores (or left to AQE coalescing from a
     higher initial value).
+
+    Python workers start from ``rtcdb_spark.worker_daemon``
+    (``spark.python.daemon.module``), which takes ``pyspark.zip`` and the
+    Spark jar off their ``sys.path`` so a task no longer re-reads both
+    archives (0.1-0.17 s per Python task on 4 cores). The package's parent
+    directory goes on the workers' $PYTHONPATH (``spark.executorEnv``), so
+    they import the module whatever the working directory. Limit: a session
+    not built here keeps Spark's own ``pyspark.daemon`` (the conf is fixed
+    at JVM start).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -92,6 +104,8 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/rtcdb_spark_warehouse"),
         )
+        .config("spark.python.daemon.module", "rtcdb_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

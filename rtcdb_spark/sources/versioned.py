@@ -768,8 +768,8 @@ class VersionedTable:
     def _file_stats(abs_path: str) -> dict:
         """The stats a commit records for one file: each column's
         ``[min, max]`` as ``zonemap.footer_stats`` proves them (a column
-        without footer min/max in every row group is absent, so never
-        pruned on), plus ``__meta__``: rows from the footer and bytes from
+        without footer min/max in every row group that holds a value is
+        absent, so never pruned on), plus ``__meta__``: rows from the footer and bytes from
         the filesystem — what metadata-only COUNT(*) and size-targeted
         compaction plan from without touching data pages."""
         rows, cols = zonemap.footer_stats(abs_path)

@@ -35,12 +35,15 @@ def footer_stats(path: str | os.PathLike) -> tuple[int, dict[str, tuple]]:
     footer read, no data I/O.
 
     Only top-level primitive columns are listed, and a column only when
-    EVERY row group carries min/max: a row group without them (parquet-mr
-    writes none when a value exceeds its stats size limit) can hold any
-    value, so merging the other groups' stats would claim a range the file
-    does not keep to. Values are JSON-ready (see ``_json_value``); a
-    column whose values have no JSON form is omitted. An omitted column is
-    never pruned on."""
+    every row group that holds a value carries min/max: a row group
+    without them (parquet-mr writes none when a value exceeds its stats
+    size limit) can hold any value, so merging the other groups' stats
+    would claim a range the file does not keep to. A row group that is
+    all NULL (``null_count == num_rows``) needs none, since it can never
+    meet a closed interval; its NULLs still count. Values are JSON-ready
+    (see ``_json_value``); a column whose values have no JSON form, or
+    that has no value at all, is omitted. An omitted column is never
+    pruned on."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -55,10 +58,16 @@ def footer_stats(path: str | os.PathLike) -> tuple[int, dict[str, tuple]]:
         if "." in name:
             continue
         stats = [g.column(ci).statistics for g in groups]
-        if any(st is None or not st.has_min_max for st in stats):
+        if any(
+            st is None or not (st.has_min_max or st.null_count == g.num_rows)
+            for st, g in zip(stats, groups)
+        ):
             continue
-        lo = _json_value(min(st.min for st in stats))
-        hi = _json_value(max(st.max for st in stats))
+        ranged = [st for st in stats if st.has_min_max]
+        if not ranged:
+            continue
+        lo = _json_value(min(st.min for st in ranged))
+        hi = _json_value(max(st.max for st in ranged))
         if lo is None or hi is None:
             continue
         nulls = sum(st.null_count or 0 for st in stats)

@@ -27,7 +27,8 @@ def test_footer_stats_encodes_dates_and_drops_what_it_cannot_prove(tmp_path):
             "ts": [dt.datetime(2024, 1, 1, 5), dt.datetime(2024, 1, 1, 6, 0, 0, 250000)],
             "s": ["b", "a"],
             "b": [b"\xff", b"a"],  # binary: no JSON form
-            "n": [1, None],  # second row group is all NULL: no min/max
+            "n": [1, None],  # second row group is all NULL: no min/max needed
+            "x": ["a", "b" * 5000],  # value over the stats size limit: no min/max
         }
     )
     pq.write_table(table, path, row_group_size=1)
@@ -37,6 +38,7 @@ def test_footer_stats_encodes_dates_and_drops_what_it_cannot_prove(tmp_path):
         "d": ("2024-01-01", "2024-01-02", 0),
         "ts": ("2024-01-01 05:00:00", "2024-01-01 06:00:00.250000", 0),
         "s": ("a", "b", 0),
+        "n": (1, 1, 1),
     }
 
 
