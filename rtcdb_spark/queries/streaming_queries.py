@@ -211,14 +211,15 @@ def stream_enrich_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_rollup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drives the full foreachBatch rollup-cascade SINK end-to-end
     (`streaming.sinks.stream_rollup_cascade`): minute-level streaming
-    aggregates upsert a parquet snapshot per batch via the staged
-    atomic-swap writer, and hour/day levels re-derive from the minute
-    partials (exact decimal sums make the cascade equal direct
-    aggregation). Returns the day-level snapshot read back from disk — so
-    the oracle checks the whole path: stream → state → distributed snapshot
-    write → swap → re-read."""
+    aggregates upsert a `VersionedTable` snapshot per batch, one
+    exactly-once overwrite commit each, and hour/day levels re-derive
+    from the minute partials (exact decimal sums make the cascade equal
+    direct aggregation). Returns the day level's latest version read back
+    from disk — so the oracle checks the whole path: stream → state →
+    distributed snapshot commit → re-read."""
     import tempfile
 
+    from rtcdb_spark.sources.versioned import VersionedTable
     from rtcdb_spark.streaming.sinks import stream_rollup_cascade
 
     sdf = read_events_stream(spark, sf_dir)
@@ -226,7 +227,7 @@ def stream_rollup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_rollup_cascade(
         sdf, f"{out_dir}/levels", f"{out_dir}/ckpt", watermark="1 hour"
     )
-    day = spark.read.parquet(f"{out_dir}/levels/day")
+    day = VersionedTable(spark, f"{out_dir}/levels/day").read()
     return day.select(
         "bucket",
         "n_events",
@@ -406,22 +407,23 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     property CDC pipelines rely on under at-least-once delivery."""
     import tempfile
 
+    from rtcdb_spark.sources.versioned import VersionedTable
     from rtcdb_spark.streaming import read_events_stream
     from rtcdb_spark.streaming.sinks import stream_cdc_upsert as run_sink
 
     root = tempfile.mkdtemp(prefix="rtcdb_cdc_")
     out = f"{root}/snapshot"
     run_sink(read_events_stream(spark, sf_dir), out, f"{root}/cp1")
+    vt = VersionedTable(spark, out)
     # Replay-idempotence asserted DISTRIBUTED (r6 verdict item 2): an
     # order-independent multiset signature (row count + SUM of per-row
     # xxhash64) reduces the snapshot to two driver scalars per run — no
     # O(table) collect, no copy-aside write, one scan each side.
-    first = _multiset_signature(spark.read.parquet(out))
+    first = _multiset_signature(vt.read())
     run_sink(read_events_stream(spark, sf_dir), out, f"{root}/cp2")  # replay
-    second = _multiset_signature(spark.read.parquet(out))
+    second = _multiset_signature(vt.read())
     assert first == second, "CDC replay changed the snapshot"
-    snap = spark.read.parquet(out)
-    return snap.select(
+    return vt.read().select(
         "user_id",
         F.col("event_id").cast("bigint").alias("event_id"),
         "ts",

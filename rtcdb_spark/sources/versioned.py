@@ -36,8 +36,7 @@ Content rewrites (optimize/merge/delete/overwrite) consolidate survivors
 into fresh segments, which is already O(rewritten) work. Readers resolve
 segments once per process via an immutable-by-name cache, so repeated
 plans don't re-read unchanged metadata — the same effect as Iceberg's
-manifest caching. Old-format manifests (inline ``files``/``stats``) are
-still readable.
+manifest caching.
 
 Concurrency (multi-writer, VERDICT r3 item 5): commits use a
 conditional-put on the manifest file — data files land in a
@@ -77,7 +76,7 @@ _META_KEY = "__meta__"
 def _merge_schemas(prev: dict | None, new: dict) -> dict | None:
     """Additive union of two StructType-JSON dicts for the manifest's
     schema-in-the-log entry. Returns ``None`` when the union is unknowable
-    (legacy prior manifest with no recorded schema) or unsound (same field
+    (the prior manifest recorded no schema) or unsound (same field
     name, different type) — callers then omit the schema and readers fall
     back to footer inference, which can never be wrong, only slower."""
     if prev is None:
@@ -102,7 +101,6 @@ class VersionedTable:
         self.spark = spark
         self.root = root
         self._seg_cache: dict[str, tuple[list[str], dict]] = {}
-        self._legacy_upgrade: dict[int, str] = {}
         os.makedirs(os.path.join(root, _LOG_DIR), exist_ok=True)
         os.makedirs(os.path.join(root, _DATA_DIR), exist_ok=True)
 
@@ -158,70 +156,54 @@ class VersionedTable:
             return cached
         with open(os.path.join(self.root, _LOG_DIR, name)) as fh:
             seg = json.load(fh)
-        out = (seg["files"], seg.get("stats", {}))
+        out = (seg["files"], seg["stats"])
         self._seg_cache[name] = out
         return out
 
-    def _read_manifest(self, version: int) -> dict[str, Any]:
-        """Load a manifest with its file list and stats MATERIALIZED: a
-        sharded manifest (``segments`` list) resolves each segment through
-        the cache; a legacy inline manifest (``files``) is returned as-is.
-        Callers always see ``files`` and ``stats`` keys."""
+    def _read_manifest_raw(self, version: int) -> dict[str, Any]:
         path = self._manifest_path(version)
         if not os.path.exists(path):
             raise ValueError(f"no such version: {version} (have {self.versions()})")
         with open(path) as fh:
-            m = json.load(fh)
-        if "segments" in m and "files" not in m:
-            files: list[str] = []
-            stats: dict = {}
-            for seg_name in m["segments"]:
-                sf, ss = self._read_segment(seg_name)
-                files.extend(sf)
-                stats.update(ss)
-            m["files"] = files
-            m["stats"] = stats
-        return m
+            return json.load(fh)
 
-    def _n_files_of(self, version: int) -> int:
-        """Total file count of a version: the recorded counter when
-        present, else one segment resolution (legacy manifests)."""
-        n = self._read_manifest_raw(version).get("n_files", -1)
-        if n < 0:
-            n = len(self._read_manifest(version)["files"])
-        return n
+    def _read_manifest(self, version: int) -> dict[str, Any]:
+        """Load a manifest with its file list and stats MATERIALIZED: each
+        of its ``segments`` resolves through the cache into the ``files``
+        and ``stats`` keys."""
+        m = self._read_manifest_raw(version)
+        files: list[str] = []
+        stats: dict = {}
+        for seg_name in m["segments"]:
+            sf, ss = self._read_segment(seg_name)
+            files.extend(sf)
+            stats.update(ss)
+        m["files"] = files
+        m["stats"] = stats
+        return m
 
     def history(self) -> list[dict[str, Any]]:
         """Commit history, oldest first: version, op, files added/total.
-        Reads manifests RAW — ``n_files`` is recorded at commit time, so
-        listing a long history never resolves segment file lists
-        (O(versions) metadata, not O(versions x files)); manifests
-        predating the counter fall back to one resolution."""
+        Reads manifests RAW — ``n_files`` and ``ts`` are recorded at commit
+        time, so listing a long history never resolves segment file lists
+        (O(versions) metadata, not O(versions x files))."""
         out = []
         for v in self.versions():
             m = self._read_manifest_raw(v)
-            n_files = self._n_files_of(v)
             out.append(
                 {
                     "version": v,
                     "op": m["op"],
-                    "ts": self._commit_ts(v, m),
-                    "n_files": n_files,
+                    "ts": m["ts"],
+                    "n_files": m["n_files"],
                     "n_added": m["n_added"],
                 }
             )
         return out
 
-    def _commit_ts(self, version: int, raw: dict[str, Any] | None = None) -> float:
-        """A version's commit wall clock: the manifest's recorded ``ts``
-        (round 6), falling back to the manifest FILE's mtime for legacy
-        manifests — the same fallback Delta applies to its own
-        TIMESTAMP AS OF when in-commit timestamps are absent."""
-        m = raw if raw is not None else self._read_manifest_raw(version)
-        ts = m.get("ts")
-        return float(ts) if ts is not None else os.path.getmtime(
-            self._manifest_path(version)
-        )
+    def _commit_ts(self, version: int) -> float:
+        """A version's commit wall clock, as recorded in its manifest."""
+        return self._read_manifest_raw(version)["ts"]
 
     def version_as_of(self, timestamp: float) -> int:
         """TIMESTAMP AS OF: the newest version committed at or before
@@ -304,13 +286,7 @@ class VersionedTable:
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         df_schema = json.loads(df.schema.json())
-        txn_dir = os.path.join(_DATA_DIR, f"txn-{uuid.uuid4().hex[:16]}")
-        df.write.mode("error").parquet(os.path.join(self.root, txn_dir))
-        new_files = sorted(
-            os.path.join(txn_dir, f)
-            for f in os.listdir(os.path.join(self.root, txn_dir))
-            if f.endswith(".parquet")
-        )
+        new_files = self._write_files(df)
         new_stats = self._collect_stats(new_files)
         if bloom_cols:
             blooms = self._build_blooms(
@@ -327,27 +303,25 @@ class VersionedTable:
             if mode == "overwrite" or prev is None:
                 segments = [seg]
                 schema = df_schema
+                n_files = len(new_files)
             else:
                 pm_raw = self._read_manifest_raw(prev)
-                segments = self._segments_of(prev, pm_raw) + [seg]
+                segments = pm_raw["segments"] + [seg]
                 # Schema-in-the-log (Delta's pattern): the manifest records
                 # the table schema so readers never pay plan-time footer
                 # inference. An append maintains it as the additive union;
-                # a conflict (same name, different type) or a legacy prior
-                # manifest (unknown union) records nothing — readers of
-                # those versions fall back to inference, which is sound.
+                # a conflict (same name, different type) records nothing
+                # from then on — readers of those versions fall back to
+                # inference, which is sound.
                 schema = _merge_schemas(pm_raw.get("schema"), df_schema)
+                n_files = pm_raw["n_files"] + len(new_files)
             manifest = {
                 "version": version,
                 "op": mode,
                 "ts": time.time(),  # commit wall clock: TIMESTAMP AS OF
                 "segments": segments,
                 "n_added": len(new_files),
-                "n_files": (
-                    len(new_files)
-                    if mode == "overwrite" or prev is None
-                    else self._n_files_of(prev) + len(new_files)
-                ),
+                "n_files": n_files,
             }
             if schema is not None:
                 manifest["schema"] = schema
@@ -360,27 +334,17 @@ class VersionedTable:
             "log head is moving faster than this writer can retry"
         )
 
-    def _read_manifest_raw(self, version: int) -> dict[str, Any]:
-        path = self._manifest_path(version)
-        if not os.path.exists(path):
-            raise ValueError(f"no such version: {version} (have {self.versions()})")
-        with open(path) as fh:
-            return json.load(fh)
-
-    def _segments_of(self, version: int, raw: dict[str, Any]) -> list[str]:
-        """The segment list of a manifest; a legacy inline manifest is
-        converted by writing its file list as one segment (one-time
-        upgrade, after which the new manifest references it). The upgrade
-        is memoized per version — a published manifest is immutable, and
-        without the memo every iteration of commit()'s conditional-put
-        retry loop would write a fresh orphan seg-*.json per lost race."""
-        if "segments" in raw:
-            return list(raw["segments"])
-        seg = self._legacy_upgrade.get(version)
-        if seg is None:
-            seg = self._write_segment(raw["files"], raw.get("stats", {}))
-            self._legacy_upgrade[version] = seg
-        return [seg]
+    def _write_files(self, df: DataFrame) -> list[str]:
+        """Write ``df`` as parquet under a fresh writer-private
+        ``data/txn-<token>`` dir; returns its files, root-relative and
+        sorted. Nothing references them until a manifest is published."""
+        txn_dir = os.path.join(_DATA_DIR, f"txn-{uuid.uuid4().hex[:16]}")
+        df.write.mode("error").parquet(os.path.join(self.root, txn_dir))
+        return sorted(
+            os.path.join(txn_dir, f)
+            for f in os.listdir(os.path.join(self.root, txn_dir))
+            if f.endswith(".parquet")
+        )
 
     def _publish_rewrite(
         self,
@@ -435,7 +399,7 @@ class VersionedTable:
             version = prev + 1
             pm = self._read_manifest(prev)
             survivors = [f for f in pm["files"] if f not in replaced]
-            prev_stats = pm.get("stats", {})
+            prev_stats = pm["stats"]
             # A rewrite consolidates: one segment for the new files, one for
             # the survivors (O(rewritten + survivors) metadata — a rewrite
             # already touches that much state; appends never pay this).
@@ -447,8 +411,7 @@ class VersionedTable:
             if survivors:
                 segments.append(
                     self._write_segment(
-                        survivors,
-                        {f: prev_stats[f] for f in survivors if f in prev_stats},
+                        survivors, {f: prev_stats[f] for f in survivors}
                     )
                 )
             manifest = {
@@ -490,9 +453,8 @@ class VersionedTable:
         ``small_only_bytes`` makes the compaction INCREMENTAL — Delta's
         actual OPTIMIZE semantic: only files smaller than the threshold
         are rewritten (their sizes come from the commit-time ``__meta__``
-        manifest entry, falling back to one stat call for legacy files);
-        already-large files carry into the new manifest byte-identical.
-        A full-table rewrite is O(table) — unusable as routine maintenance
+        manifest entry); already-large files carry into the new manifest
+        byte-identical. A full-table rewrite is O(table) — unusable as routine maintenance
         at 100 TB, where ingest continuously produces small files next to
         petabytes of already-compacted ones; the incremental form is
         O(small files), which is O(ingest since last optimize). With fewer
@@ -540,15 +502,11 @@ class VersionedTable:
             m = self._read_manifest(head)
             src_files = m["files"]
             if small_only_bytes is not None:
-                stats = m.get("stats", {})
-
-                def _size(f: str) -> int:
-                    meta = stats.get(f, {}).get(_META_KEY)
-                    if meta is not None:
-                        return meta["bytes"]
-                    return os.path.getsize(os.path.join(self.root, f))
-
-                src_files = [f for f in src_files if _size(f) < small_only_bytes]
+                src_files = [
+                    f
+                    for f in src_files
+                    if m["stats"][f][_META_KEY]["bytes"] < small_only_bytes
+                ]
                 if len(src_files) < 2:
                     return head  # nothing worth compacting: metadata no-op
                 snap = self.spark.read.parquet(
@@ -573,13 +531,7 @@ class VersionedTable:
                 )
             else:
                 df = snap.coalesce(target_files)
-            txn_dir = os.path.join(_DATA_DIR, f"txn-{uuid.uuid4().hex[:16]}")
-            df.write.mode("error").parquet(os.path.join(self.root, txn_dir))
-            new_files = sorted(
-                os.path.join(txn_dir, f)
-                for f in os.listdir(os.path.join(self.root, txn_dir))
-                if f.endswith(".parquet")
-            )
+            new_files = self._write_files(df)
             blooms = (
                 self._build_blooms(new_files, bloom_cols, bloom_bits, bloom_hashes)
                 if bloom_cols
@@ -680,13 +632,7 @@ class VersionedTable:
                 merged = survivors.unionByName(source.select(*cols))
             else:
                 merged = source.select(*cols)
-            txn_dir = os.path.join(_DATA_DIR, f"txn-{uuid.uuid4().hex[:16]}")
-            merged.write.mode("error").parquet(os.path.join(self.root, txn_dir))
-            new_files = sorted(
-                os.path.join(txn_dir, f)
-                for f in os.listdir(os.path.join(self.root, txn_dir))
-                if f.endswith(".parquet")
-            )
+            new_files = self._write_files(merged)
             v = self._publish_rewrite(
                 head,
                 "merge",
@@ -750,13 +696,7 @@ class VersionedTable:
                     )
                     .filter(f"NOT ({predicate}) OR ({predicate}) IS NULL")
                 )
-                txn_dir = os.path.join(_DATA_DIR, f"txn-{uuid.uuid4().hex[:16]}")
-                keep.write.mode("error").parquet(os.path.join(self.root, txn_dir))
-                new_files = sorted(
-                    os.path.join(txn_dir, f)
-                    for f in os.listdir(os.path.join(self.root, txn_dir))
-                    if f.endswith(".parquet")
-                )
+                new_files = self._write_files(keep)
             v = self._publish_rewrite(
                 head, "delete", set(rewritten), new_files, max_retries
             )
@@ -785,30 +725,19 @@ class VersionedTable:
     def file_stats(self, version: int | None = None) -> dict:
         """The per-file stats map for a version: entries recorded by the
         commits that created each file, carried forward manifest to
-        manifest. Files committed before stats existed simply have no
-        entry (never pruned)."""
+        manifest."""
         v = self.latest_version() if version is None else version
-        m = self._read_manifest(v)
-        return m.get("stats", {})
+        return self._read_manifest(v)["stats"]
 
     def count_rows(self, version: int | None = None) -> int:
         """Exact COUNT(*) from metadata alone: per-file row counts recorded
         at commit (``__meta__`` in the stats map) summed over the
-        manifest; a file committed before row counts existed costs one
-        parquet footer read. Zero data I/O either way — the reason a
-        100 TB table answers COUNT(*) in manifest-read time, same trick as
-        the reference's sparse index serving get_min/get_max without block
-        decodes (reference README.md:49)."""
-        v = self._resolve(version)
-        m = self._read_manifest(v)
-        stats = m.get("stats", {})
-        total = 0
-        for f in m["files"]:
-            meta = stats.get(f, {}).get(_META_KEY)
-            if meta is None:
-                meta = self._file_stats(os.path.join(self.root, f))[_META_KEY]
-            total += meta["rows"]
-        return total
+        manifest. Zero data I/O — the reason a 100 TB table answers
+        COUNT(*) in manifest-read time, same trick as the reference's
+        sparse index serving get_min/get_max without block decodes
+        (reference README.md:49)."""
+        m = self._read_manifest(self._resolve(version))
+        return sum(m["stats"][f][_META_KEY]["rows"] for f in m["files"])
 
     def min_max(self, col: str, version: int | None = None) -> tuple:
         """Exact (min, max) of ``col`` from manifest stats alone — the
@@ -819,20 +748,15 @@ class VersionedTable:
         min/max are exact there); date and timestamp results are
         ``date``/``datetime`` values when the version records its schema.
         Long string values can be writer-truncated in footers, so treat
-        string results as bounds, same as the pruning path does. Falls
-        back to one footer read for a stats-less legacy file; raises if
-        the column has no stats anywhere (an all-NULL or binary column,
+        string results as bounds, same as the pruning path does. Raises
+        if the column has no stats anywhere (an all-NULL or binary column,
         or a ``timestamp`` column, which Spark writes as INT96 with no
         footer min/max — the caller must scan)."""
-        v = self._resolve(version)
-        m = self._read_manifest(v)
-        stats = m.get("stats", {})
+        m = self._read_manifest(self._resolve(version))
         type_name = self._column_types(m).get(col)
         mn = mx = None
         for f in m["files"]:
-            s = stats.get(f, {}).get(col)
-            if s is None:
-                s = self._file_stats(os.path.join(self.root, f)).get(col)
+            s = m["stats"][f].get(col)
             if s is None:
                 continue
             lo, hi = (zonemap.decode(x, type_name) for x in s)
@@ -855,7 +779,7 @@ class VersionedTable:
         every ``(col, lo, hi)`` conjunct, in manifest order, with bounds
         decoded for the column's recorded type. A file without stats for a
         column is kept; zero conjuncts keep every file."""
-        stats = manifest.get("stats", {})
+        stats = manifest["stats"]
         types = cls._column_types(manifest)
         keep = manifest["files"]
         for col, lo, hi in preds:
@@ -1033,7 +957,7 @@ class VersionedTable:
         # bool is an int subclass but renders 'True' vs Spark's 'true'
         bloomable = isinstance(value, (int, str)) and not isinstance(value, bool)
         m = self._read_manifest(v)
-        stats = m.get("stats", {})
+        stats = m["stats"]
         keep = []
         for f in self._plan(m, [(col, value, value)]):
             bloom = stats.get(f, {}).get(_BLOOM_KEY, {}).get(col)
@@ -1168,7 +1092,7 @@ class VersionedTable:
         seg = dest._write_segment(
             [_absify(f) for f in src["files"]],
             # stats travel with the clone, re-keyed to the absolute entries
-            {_absify(f): s for f, s in src.get("stats", {}).items()},
+            {_absify(f): s for f, s in src["stats"].items()},
         )
         manifest = {
             "version": 0,
@@ -1183,19 +1107,14 @@ class VersionedTable:
             raise ValueError(f"{dest_root} already has commits")
         return dest
 
-    def committed_extras(self, key: str, absent_key: str | None = None) -> set:
+    def committed_extras(self, key: str) -> set:
         """All values of ``extra[key]`` across committed manifests — e.g.
-        the set of already-committed streaming batch ids. O(versions)
-        metadata reads, no data I/O. ``absent_key`` restricts to manifests
-        that do NOT carry that extra — how the streaming sink reads the
-        pre-'txn' legacy ledger without picking up new-format commits
-        (which stamp both 'batch_id' and 'txn')."""
+        the streaming sinks' txn ledger. O(versions) metadata reads, no
+        data I/O."""
         out = set()
         for v in self.versions():
             m = self._read_manifest_raw(v)  # extras live in the manifest,
-            if "extra" in m and key in m["extra"]:  # no segment resolution
-                if absent_key is not None and absent_key in m["extra"]:
-                    continue
+            if key in m.get("extra", {}):  # no segment resolution
                 out.add(m["extra"][key])
         return out
 
@@ -1263,20 +1182,15 @@ class VersionedTable:
                     "append-only change reads are undefined across a rewrite "
                     "— use a snapshot diff"
                 )
-        # Sharded fast path: an append-only range's new files are exactly
-        # the files of the segments added after `since` — O(new segments)
-        # metadata, no full-list diff.
-        raw_since = self._read_manifest_raw(since_version)
+        # An append-only range's new files are exactly the files of the
+        # segments added after `since` — O(new segments) metadata, no
+        # full-list diff.
+        base_segs = set(self._read_manifest_raw(since_version)["segments"])
         raw_until = self._read_manifest_raw(until)
-        if "segments" in raw_since and "segments" in raw_until:
-            base_segs = set(raw_since["segments"])
-            new = []
-            for seg_name in raw_until["segments"]:
-                if seg_name not in base_segs:
-                    new.extend(self._read_segment(seg_name)[0])
-        else:
-            base = set(self._read_manifest(since_version)["files"])
-            new = [f for f in self._read_manifest(until)["files"] if f not in base]
+        new = []
+        for seg_name in raw_until["segments"]:
+            if seg_name not in base_segs:
+                new.extend(self._read_segment(seg_name)[0])
         if not new:
             return self.read(until).limit(0)
         return self._reader(raw_until).parquet(
@@ -1349,7 +1263,7 @@ class VersionedTable:
         kept_segs: set[str] = set()
         for v in keep:
             raw = self._read_manifest_raw(v)
-            kept_segs.update(raw.get("segments", []))
+            kept_segs.update(raw["segments"])
         log_dir = os.path.join(self.root, _LOG_DIR)
         for name in os.listdir(log_dir):
             is_orphan_tmp = name.endswith(".tmp")  # crashed writer's leftovers

@@ -484,32 +484,23 @@ def stream_ingest_near_dedup_to_versioned(
     downstream of arbitrary state): collapse the batch's (doc, band) flags
     to per-doc, keep non-dups, re-join the full rows from `static_docs`
     (at scale: the payload store keyed by doc_id — the stateful operator
-    carries only ids+flags, never document bodies), commit. A replayed
-    batch finds its txn stamp already in the commit log and skips, so the
-    table gains exactly one version per batch regardless of retries.
+    carries only ids+flags, never document bodies), commit through
+    `streaming.sinks._exactly_once`. A replayed batch finds its txn stamp
+    already in the commit log and skips, so the table gains exactly one
+    version per batch regardless of retries.
     """
     from pyspark.sql import functions as F
 
     from rtcdb_spark.sources.versioned import VersionedTable
+    from rtcdb_spark.streaming.sinks import _exactly_once
 
     flags = stream_near_dedup_simhash(docs, max_hamming=max_hamming)
-    app = app_id if app_id is not None else checkpoint_dir
-    seen: set = set()
-    bootstrapped = [False]
+    commit = _exactly_once(
+        VersionedTable(docs.sparkSession, table_root),
+        app_id if app_id is not None else checkpoint_dir,
+    )
 
     def _commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vt = VersionedTable(batch_df.sparkSession, table_root)
-        if not bootstrapped[0]:
-            seen.update(vt.committed_extras("txn"))
-            bootstrapped[0] = True
-        txn = f"{app}#{batch_id}"
-        if txn in seen:
-            # Replay after failure: already durable — skip the commit, but
-            # still drain every partition (a noop write): the upstream
-            # stateful operator's per-partition state stores must commit
-            # for the batch, and Spark 4 validates exactly that.
-            batch_df.write.format("noop").mode("overwrite").save()
-            return
         survivors = (
             batch_df.groupBy("doc_id")
             .agg(F.max("is_dup").alias("dup"))
@@ -517,10 +508,7 @@ def stream_ingest_near_dedup_to_versioned(
             .join(static_docs, "doc_id")
             .drop("dup")
         )
-        vt.commit(
-            survivors, extra={"txn": txn, "app_id": app, "batch_id": batch_id}
-        )
-        seen.add(txn)
+        commit(batch_df, batch_id, survivors)
 
     with narrow_shuffle(docs.sparkSession, 0):
         q = (

@@ -1,8 +1,8 @@
-"""Streaming sinks: exactly-once file sink and idempotent foreachBatch.
+"""Streaming sinks: exactly-once file sink and exactly-once table commits.
 
 The reference's only sink is a local columnar append with no crash story
 (a torn write corrupts the index — reference SURVEY §4.3 bug 1). Spark's
-streaming sinks are the industrial answer, and these two cover the surface:
+streaming sinks and the `VersionedTable` commit log are the answer here:
 
 - **file sink** (`stream_to_parquet`): append-mode parquet with a checkpoint
   directory. Exactly-once comes from two logs: the source's checkpoint
@@ -10,76 +10,78 @@ streaming sinks are the industrial answer, and these two cover the surface:
   `_spark_metadata` commit log (which output files each batch committed).
   A restart replays only uncommitted batches, and readers only see files
   named in the commit log — a half-written batch is invisible.
-- **foreachBatch** (`stream_agg_foreach_batch`): for stateful aggregates in
-  update mode, the per-batch callback gets (batch_df, batch_id) and must be
-  idempotent because a batch can be re-run after a crash. Here each batch
-  *overwrites* the aggregate snapshot — rerunning batch N yields the same
-  state. At 100 TB the same pattern scopes the overwrite to the partitions
-  a batch touches (dynamic partition overwrite keyed by window date) or
-  MERGEs into a transactional table; whole-snapshot replace is right for
-  bounded-cardinality rollups like per-type daily totals.
+- **VersionedTable sinks** (`stream_to_versioned`,
+  `stream_agg_foreach_batch`, `stream_rollup_cascade`,
+  `stream_cdc_upsert`, `stream_cdc_with_tombstones` and
+  `streaming.dedup.stream_ingest_near_dedup_to_versioned`): every
+  micro-batch is ONE commit to a `VersionedTable`, made by
+  `_exactly_once`. The commit is stamped with the writer's
+  ``(app, batch_id)`` txn; a batch that Structured Streaming replays
+  after a crash finds its txn in the log and commits nothing. Append
+  sinks add the batch's rows. Snapshot sinks read the previous snapshot
+  with `VersionedTable.read()`, merge the batch into it and publish the
+  merged snapshot with ``mode="overwrite"``. Either way a version is
+  published by one atomic manifest link, so a reader sees the previous
+  snapshot or the next one, never a missing or half-written table, and
+  needs no recovery step. Superseded versions stay readable (time
+  travel) until `VersionedTable.vacuum` reclaims their files.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rtcdb_spark.deterministic import dsum
 from rtcdb_spark.session import narrow_shuffle
+from rtcdb_spark.sources.versioned import VersionedTable
 
 
-def _restore_if_interrupted(out_dir: str) -> None:
-    """Heal a crash that landed between _swap_in's two renames: the live dir
-    is missing but the old snapshot still sits in the trash sibling — the
-    ONLY state in which trash holds the sole surviving copy. Rename it back
-    before anyone reads or deletes, so batch replay merges against the real
-    previous snapshot instead of silently rebuilding from one batch."""
-    trash = out_dir.rstrip("/") + "__old"
-    if not os.path.exists(out_dir) and os.path.exists(trash):
-        os.rename(trash, out_dir)
+def _exactly_once(vt: VersionedTable, app: str):
+    """The one exactly-once commit rule for streaming writes to ``vt``:
+    returns ``commit(batch_df, batch_id, frame=None, mode="append")``,
+    which publishes ``frame`` (default: ``batch_df``) as one version
+    stamped ``extra={"txn": f"{app}#{batch_id}", "app_id", "batch_id"}``
+    and returns its number.
+
+    The txn ledger is read from the log ONCE, here, per run; the returned
+    function adds this run's own commits to it. A batch whose txn is
+    already in the ledger (a replay after the driver died between the
+    commit and the checkpoint write) commits nothing and returns ``None``,
+    but ``batch_df`` is still drained with a ``noop`` write: Spark 4
+    checks that every stateful operator upstream of the sink committed
+    its per-partition state for the batch.
+
+    ``app`` scopes the ledger to one writer. Two queries writing the same
+    table both start at batch id 0; a bare batch-id key would skip the
+    second query's batches as already committed (Delta's ``txnAppId``
+    exists for the same reason)."""
+    done = vt.committed_extras("txn")
+
+    def commit(
+        batch_df: DataFrame,
+        batch_id: int,
+        frame: DataFrame | None = None,
+        mode: str = "append",
+    ) -> int | None:
+        txn = f"{app}#{batch_id}"
+        if txn in done:
+            batch_df.write.format("noop").mode("overwrite").save()
+            return None
+        v = vt.commit(
+            batch_df if frame is None else frame,
+            mode,
+            extra={"txn": txn, "app_id": app, "batch_id": batch_id},
+        )
+        done.add(txn)
+        return v
+
+    return commit
 
 
-def _read_snapshot(spark, out_dir: str) -> DataFrame | None:
-    """Previous snapshot, or None only when none exists. Missing-path is the
-    one condition mapped to None (after interrupted-swap restore); a corrupt
-    or unreadable snapshot raises instead of being treated as empty state."""
-    _restore_if_interrupted(out_dir)
-    if not os.path.exists(out_dir):
-        return None
-    return spark.read.parquet(out_dir)
-
-
-def _swap_in(df: DataFrame, out_dir: str) -> None:
-    """Distributed snapshot replace: write to a staging sibling directory
-    with a normal parallel parquet job, then swap it into place with a
-    directory rename. No driver-side collect, no single-file funnel. The
-    staging path is deterministic, so a crash between write and swap is
-    healed by the batch replay (the rewrite overwrites staging and re-swaps
-    — idempotent); a crash *between the two renames* leaves the old
-    snapshot in the trash sibling, which _restore_if_interrupted moves back
-    before any read or delete. Reading the previous snapshot while writing
-    staging is safe because the directory being read is never the one being
-    written. On HDFS the rename is the FileSystem API; on object stores /
-    transactional tables the same pattern is dynamic partition overwrite
-    keyed by the snapshot's partition column."""
-    staging = out_dir.rstrip("/") + "__staging"
-    trash = out_dir.rstrip("/") + "__old"
-    _restore_if_interrupted(out_dir)
-    df.write.mode("overwrite").parquet(staging)
-    # Two renames, then delete: the live path is missing only for the gap
-    # between two atomic renames — never for the duration of a recursive
-    # delete of the old snapshot.
-    if os.path.exists(trash):
-        shutil.rmtree(trash)
-    if os.path.exists(out_dir):
-        os.rename(out_dir, trash)
-    os.rename(staging, out_dir)
-    if os.path.exists(trash):
-        shutil.rmtree(trash)
+def _latest(vt: VersionedTable) -> DataFrame | None:
+    """The table's latest snapshot, or ``None`` before its first commit."""
+    return None if vt.latest_version() is None else vt.read()
 
 
 def stream_to_parquet(
@@ -111,10 +113,18 @@ def stream_agg_foreach_batch(
     checkpoint_dir: str,
     watermark: str = "1 hour",
 ) -> None:
-    """Per-event-type running totals maintained in an external parquet
-    snapshot via foreachBatch (update mode). The callback replaces the
-    snapshot atomically per batch — idempotent under batch replay, so the
-    pipeline is effectively exactly-once end-to-end."""
+    """Per-event-type running totals kept as a `VersionedTable` snapshot at
+    ``out_dir`` via foreachBatch (update mode). Each batch publishes the
+    merged snapshot as one exactly-once overwrite commit (`_exactly_once`,
+    writer ``app = checkpoint_dir``), so a replayed batch adds no version
+    and the pipeline is exactly-once end-to-end. Read it with
+    ``VersionedTable(spark, out_dir).read()``; superseded snapshots are
+    reclaimed by ``vacuum``.
+
+    Scale: the merge is distributed (anti-join + union, nothing through
+    the driver). Whole-snapshot replace is right for bounded-cardinality
+    rollups like per-type totals; at 100 TB the same pattern scopes the
+    rewrite to the keys a batch touches (``VersionedTable.merge_upsert``)."""
     agg = (
         events.withWatermark("ts", watermark)
         .groupBy("event_type")
@@ -123,20 +133,19 @@ def stream_agg_foreach_batch(
             dsum("value", alias="total_value"),
         )
     )
+    vt = VersionedTable(events.sparkSession, out_dir)
+    commit = _exactly_once(vt, checkpoint_dir)
 
     def _write_snapshot(batch_df: DataFrame, batch_id: int) -> None:
         # Update mode emits only changed groups; keep unchanged groups from
-        # the previous snapshot. Merging reads the live snapshot while the
-        # staging write runs, then _swap_in renames staging into place —
-        # fully distributed, nothing through the driver.
-        spark = batch_df.sparkSession
-        prev = _read_snapshot(spark, out_dir)
+        # the previous snapshot.
+        prev = _latest(vt)
         merged = batch_df
         if prev is not None:
             merged = prev.join(
                 batch_df.select("event_type"), "event_type", "left_anti"
             ).unionByName(batch_df)
-        _swap_in(merged, out_dir)
+        commit(batch_df, batch_id, merged, "overwrite")
 
     with narrow_shuffle(events.sparkSession, 0):
         q = (
@@ -158,15 +167,23 @@ def stream_rollup_cascade(
     """Incremental multi-resolution rollup maintenance — the streaming twin
     of the batch `rollup_cascade` query (queries/profiling.py): minute-level
     windowed aggregates stream in update mode; each batch upserts the
-    changed minute buckets into a parquet snapshot, then re-derives the
+    changed minute buckets into the minute snapshot, then re-derives the
     hour and day levels *from the minute partials* (exact DECIMAL sums are
     associative, so cascading re-aggregation equals direct aggregation).
+
+    The levels are three `VersionedTable`s, ``out_dir/{minute,hour,day}``,
+    each written by one exactly-once overwrite commit per batch
+    (`_exactly_once`, writer ``app = checkpoint_dir``). A replayed batch
+    commits only the levels it had not committed yet: after a crash
+    between the minute and the hour commit, the replay skips the minute
+    commit and re-derives hour and day from the committed minute
+    snapshot. Superseded snapshots are reclaimed by ``vacuum``.
 
     Scale shape: only minute buckets touched by a batch are emitted
     (update mode); the hour/day refresh reads the minute *snapshot* — which
     is bounded by time-cardinality, not corpus size. At 100 TB the
-    whole-snapshot overwrite becomes dynamic partition overwrite keyed by
-    date, same cascade."""
+    whole-snapshot overwrite becomes a rewrite keyed by date, same
+    cascade."""
     minute = (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 minute").alias("w"))
@@ -176,25 +193,30 @@ def stream_rollup_cascade(
         )
         .select(F.col("w.start").alias("bucket"), "n_events", "sdec")
     )
+    spark = events.sparkSession
+    levels = {
+        level: VersionedTable(spark, f"{out_dir}/{level}")
+        for level in ("minute", "hour", "day")
+    }
+    commits = {
+        level: _exactly_once(vt, checkpoint_dir) for level, vt in levels.items()
+    }
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        minute_dir = f"{out_dir}/minute"
-        prev = _read_snapshot(spark, minute_dir)
+        prev = _latest(levels["minute"])
         merged = batch_df
         if prev is not None:
             merged = prev.join(
                 batch_df.select("bucket"), "bucket", "left_anti"
             ).unionByName(batch_df)
-        _swap_in(merged, minute_dir)
+        commits["minute"](batch_df, batch_id, merged, "overwrite")
         for level, trunc_src in (("hour", "minute"), ("day", "hour")):
-            src = spark.read.parquet(f"{out_dir}/{trunc_src}")
-            rolled = src.groupBy(
+            rolled = levels[trunc_src].read().groupBy(
                 F.date_trunc(level, "bucket").alias("bucket")
             ).agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
-            _swap_in(rolled, f"{out_dir}/{level}")
+            commits[level](rolled, batch_id, mode="overwrite")
 
-    with narrow_shuffle(events.sparkSession, 0):
+    with narrow_shuffle(spark, 0):
         q = (
             minute.writeStream.foreachBatch(_apply)
             .outputMode("update")
@@ -239,7 +261,8 @@ def stream_to_versioned(
     don't parse `_spark_metadata`).
 
     Scale: the commit itself is the executor-parallel parquet write plus
-    one manifest conditional-put; the batch-id scan is O(versions) metadata.
+    one manifest conditional-put; the txn-ledger scan (`_exactly_once`) is
+    O(versions) metadata, once per run.
 
     ``autocompact_files`` is Delta's auto-compaction: when a commit leaves
     the manifest holding at least that many files, the sink runs an
@@ -262,51 +285,15 @@ def stream_to_versioned(
     files that already graduated past the size threshold keep their
     clustering until a manual full OPTIMIZE reclusters everything.
     """
-    from rtcdb_spark.sources.versioned import VersionedTable
-
-    app = app_id if app_id is not None else checkpoint_dir
-
-    # One full manifest scan per RUN, then the cache absorbs this run's own
-    # commits — the O(versions) metadata read happens once at (re)start,
-    # not once per micro-batch. (Production logs checkpoint the latest txn
-    # id per writer; a restart rescan is that checkpoint's bootstrap.)
-    seen: set = set()
-    bootstrapped = [False]
+    vt = VersionedTable(events.sparkSession, table_root)
+    commit = _exactly_once(vt, app_id if app_id is not None else checkpoint_dir)
 
     def _commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vt = VersionedTable(batch_df.sparkSession, table_root)
-        if not bootstrapped[0]:
-            seen.update(vt.committed_extras("txn"))
-            # Legacy ledger: commits written before the sink stamped 'txn'
-            # carried only a bare 'batch_id' extra. Seed those too (mapped
-            # to THIS writer's app id), or a crash-replay against a
-            # pre-upgrade table would re-commit and duplicate rows. Caveat
-            # (inherent to the legacy format, which had no writer scoping):
-            # if a DIFFERENT legacy writer committed batch N to this table,
-            # this writer's batch N is also treated as durable. (absent_key
-            # keeps new-format commits — which stamp both keys — out of
-            # the legacy scan, so OTHER writers' txn-scoped ledgers never
-            # leak into this one.)
-            seen.update(
-                f"{app}#{b}"
-                for b in vt.committed_extras("batch_id", absent_key="txn")
-            )
-            bootstrapped[0] = True
-        txn = f"{app}#{batch_id}"
-        if txn in seen:
-            # Replay after failure: already durable — skip the commit but
-            # drain every partition anyway, so any stateful operator
-            # upstream of the sink still gets its per-partition state-store
-            # commits (Spark 4 validates this inside foreachBatch).
-            batch_df.write.format("noop").mode("overwrite").save()
-            return
-        v = vt.commit(
-            batch_df, extra={"txn": txn, "app_id": app, "batch_id": batch_id}
-        )
-        seen.add(txn)
+        v = commit(batch_df, batch_id)
         if (
-            autocompact_files is not None
-            and vt._read_manifest(v)["n_files"] >= autocompact_files
+            v is not None
+            and autocompact_files is not None
+            and vt._read_manifest_raw(v)["n_files"] >= autocompact_files
         ):
             vt.optimize(
                 small_only_bytes=autocompact_bytes,
@@ -341,24 +328,32 @@ def stream_cdc_upsert(
     batch-reduction pass would only add a second shuffle for the same
     answer (round 10: the two-stage form measured 2× the per-batch
     floor in isolation). The merge is a commutative/idempotent MAX, so
-    batch replay after a crash converges to the same snapshot
-    (exactly-once effect without a transactional store), and
+    re-applying the same events (a second writer, or a fresh checkpoint
+    over the same input) converges to the same snapshot, and
     out-of-order delivery across batches cannot regress a key to an
     older value — the property CDC pipelines need under at-least-once
     transports.
 
+    The snapshot is a `VersionedTable` at ``out_dir``: each batch
+    publishes the merged snapshot as one exactly-once overwrite commit
+    (`_exactly_once`, writer ``app = checkpoint_dir``), so a batch replayed
+    from the same checkpoint adds no version. Read it with
+    ``VersionedTable(spark, out_dir).read()``; superseded snapshots are
+    reclaimed by ``vacuum``.
+
     Scale: each batch shuffles batch-sized + touched-key-sized rows on the
     key (map-side combine bounds the batch side at touched-keys rows);
-    the snapshot swap is the distributed two-rename pattern of
-    `_swap_in`. On a transactional table the same logic is MERGE WHEN
-    MATCHED AND source.version > target.version."""
+    the snapshot write is one executor-parallel commit. On a
+    transactional table the same logic is MERGE WHEN MATCHED AND
+    source.version > target.version."""
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
     ver = F.struct(F.col("ts"), F.col("event_id"))
+    vt = VersionedTable(events.sparkSession, out_dir)
+    commit = _exactly_once(vt, checkpoint_dir)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         src = batch_df.select(*cols)
-        prev = _read_snapshot(spark, out_dir)
+        prev = _latest(vt)
         if prev is not None:
             src = prev.select(*cols).unionByName(src)
         merged = (
@@ -366,7 +361,7 @@ def stream_cdc_upsert(
             .agg(F.max_by(F.struct(*cols), ver).alias("r"))
             .select("r.*")
         )
-        _swap_in(merged, out_dir)
+        commit(batch_df, batch_id, merged, "overwrite")
 
     with narrow_shuffle(events.sparkSession, 0):
         q = (
@@ -441,12 +436,18 @@ def stream_cdc_with_tombstones(
     serving filters tombstones out (`read_cdc_snapshot`). This is the
     Kafka-compacted-topic / Debezium tombstone model; physical tombstone
     expiry is a retention pass (drop tombstones older than the source's
-    max replay horizon), the same knob Kafka compaction exposes."""
+    max replay horizon), the same knob Kafka compaction exposes.
+
+    The snapshot is a `VersionedTable` at ``out_dir``, written like
+    `stream_cdc_upsert`'s: one exactly-once overwrite commit per batch
+    (writer ``app = checkpoint_dir``); superseded snapshots are reclaimed
+    by ``vacuum``."""
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
     ver = F.struct(F.col("ts"), F.col("event_id"))
+    vt = VersionedTable(events.sparkSession, out_dir)
+    commit = _exactly_once(vt, checkpoint_dir)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         tagged = batch_df.select(*cols).withColumn(
             "is_delete", F.expr(delete_when)
         )
@@ -455,7 +456,7 @@ def stream_cdc_with_tombstones(
             .agg(F.max_by(F.struct(*cols, "is_delete"), ver).alias("r"))
             .select("r.*")
         )
-        prev = _read_snapshot(spark, out_dir)
+        prev = _latest(vt)
         merged = latest
         if prev is not None:
             merged = (
@@ -464,7 +465,7 @@ def stream_cdc_with_tombstones(
                 .agg(F.max_by(F.struct(*cols, "is_delete"), ver).alias("r"))
                 .select("r.*")
             )
-        _swap_in(merged, out_dir)
+        commit(batch_df, batch_id, merged, "overwrite")
 
     with narrow_shuffle(events.sparkSession, 0):
         q = (
@@ -479,10 +480,9 @@ def stream_cdc_with_tombstones(
 
 
 def read_cdc_snapshot(spark, out_dir: str) -> DataFrame:
-    """Serve the CDC table: latest row per key, tombstoned keys absent."""
-    snap = _read_snapshot(spark, out_dir)
-    if snap is None:
-        raise ValueError(f"no CDC snapshot at {out_dir}")
+    """Serve the CDC table's latest version: latest row per key,
+    tombstoned keys absent. Raises ``ValueError`` before the first commit."""
+    snap = VersionedTable(spark, out_dir).read()
     return snap.filter(~F.col("is_delete")).drop("is_delete")
 
 

@@ -232,13 +232,14 @@ def test_file_sink_exactly_once_across_restarts(spark, sf_smoke, stream_dir, tmp
 
 
 def test_foreach_batch_snapshot_matches_batch(spark, sf_smoke, stream_dir, tmp_path):
+    from rtcdb_spark.sources.versioned import VersionedTable
     from rtcdb_spark.streaming.sinks import stream_agg_foreach_batch
 
     out = str(tmp_path / "agg_out")
     ckpt = str(tmp_path / "agg_ckpt")
     sdf = read_events_stream(spark, sf_smoke, max_files_per_trigger=1, path=stream_dir)
     stream_agg_foreach_batch(sdf, out, ckpt)
-    got = spark.read.parquet(out)
+    got = VersionedTable(spark, out).read()
     want = (
         _batch_events(spark, stream_dir)
         .groupBy("event_type")
@@ -248,6 +249,7 @@ def test_foreach_batch_snapshot_matches_batch(spark, sf_smoke, stream_dir, tmp_p
 
 
 def test_stream_rollup_cascade_matches_batch(spark, sf_smoke, stream_dir, tmp_path):
+    from rtcdb_spark.sources.versioned import VersionedTable
     from rtcdb_spark.streaming.sinks import stream_rollup_cascade
 
     out = str(tmp_path / "rollup_out")
@@ -256,7 +258,7 @@ def test_stream_rollup_cascade_matches_batch(spark, sf_smoke, stream_dir, tmp_pa
     stream_rollup_cascade(sdf, out, ckpt)
     e = _batch_events(spark, stream_dir)
     for level in ("minute", "hour", "day"):
-        got = spark.read.parquet(f"{out}/{level}").select(
+        got = VersionedTable(spark, f"{out}/{level}").read().select(
             "bucket", "n_events", F.col("sdec").cast("double").alias("tv")
         )
         want = e.groupBy(F.date_trunc(level, "ts").alias("bucket")).agg(
@@ -286,42 +288,6 @@ def test_stream_enrich_static_multi_batch(spark, sf_smoke, stream_dir):
     )
     key = ["segment", "event_type"]
     assert _collect_sorted(got, *key) == _collect_sorted(want, *key)
-
-
-def test_swap_in_recovers_interrupted_rename(spark, tmp_path):
-    """Crash between _swap_in's two renames leaves the live dir missing and
-    the only surviving snapshot in the __old trash sibling; the next read
-    must restore it instead of treating state as empty (which would silently
-    drop all previously merged groups)."""
-    import os
-
-    from rtcdb_spark.streaming.sinks import _read_snapshot, _swap_in
-
-    out = str(tmp_path / "snap")
-    df1 = spark.createDataFrame([("a", 1), ("b", 2)], ["k", "v"])
-    _swap_in(df1, out)
-    # Simulate the crash window: live renamed to trash, staging never landed.
-    os.rename(out, out + "__old")
-    prev = _read_snapshot(spark, out)
-    assert prev is not None, "interrupted swap must not read as empty state"
-    assert {(r["k"], r["v"]) for r in prev.collect()} == {("a", 1), ("b", 2)}
-    assert os.path.exists(out) and not os.path.exists(out + "__old")
-    # And a subsequent swap proceeds normally on the healed directory.
-    _swap_in(spark.createDataFrame([("c", 3)], ["k", "v"]), out)
-    assert {r["k"] for r in spark.read.parquet(out).collect()} == {"c"}
-
-
-def test_read_snapshot_missing_is_none_but_corrupt_raises(spark, tmp_path):
-    from rtcdb_spark.streaming.sinks import _read_snapshot
-
-    assert _read_snapshot(spark, str(tmp_path / "never_written")) is None
-    bad = tmp_path / "corrupt"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        _read_snapshot(spark, str(bad)).collect()
 
 
 def test_versioned_sink_idempotence_is_writer_scoped(
@@ -362,47 +328,156 @@ def test_versioned_sink_idempotence_is_writer_scoped(
     assert len(vt.versions()) == 3 * n1
 
 
-def test_versioned_sink_bootstraps_legacy_batch_id_ledger(
-    spark, sf_smoke, stream_dir, tmp_path
-):
-    """ADVICE r5 low: a table written by the pre-'txn' sink (bare
-    'batch_id' extras) must still be replay-safe under the new sink — its
-    legacy ledger seeds the bootstrap, so a crash-replayed batch is
-    skipped instead of re-committed (duplicated rows)."""
-    from rtcdb_spark.sources.versioned import VersionedTable
-    from rtcdb_spark.streaming.sinks import stream_to_versioned
+_EVENTS_DDL = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
 
-    def _stream():
+
+def _cdc_batches():
+    """Three micro-batches of CDC events: keys recur across batches, a
+    later batch carries an OLDER event for a key (must not regress it), a
+    (ts) tie is broken by event_id, and user 2 is tombstoned ('error')
+    and then upserted again by a newer event."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+
+    def ev(eid, sec, user, etype):
+        return (eid, t0 + dt.timedelta(seconds=sec), user, etype, float(eid))
+
+    return [
+        [ev(1, 0, 1, "click"), ev(2, 10, 2, "view"), ev(3, 70, 1, "view")],
+        [ev(4, 80, 2, "error"), ev(5, 5, 1, "purchase"), ev(6, 130, 3, "click")],
+        [ev(7, 140, 2, "click"), ev(8, 130, 3, "view"), ev(9, 20, 2, "view")],
+    ]
+
+
+def _file_stream(spark, root, batches):
+    """Write each batch as one parquet file under ``root``; returns a
+    function that opens a stream delivering one file per micro-batch."""
+    import time
+
+    for rows in batches:
+        spark.createDataFrame(rows, _EVENTS_DDL).coalesce(1).write.mode(
+            "append"
+        ).parquet(root)
+        time.sleep(0.05)  # the file source orders files by mtime
+
+    def stream():
         return (
-            spark.readStream.schema(spark.read.parquet(stream_dir).schema)
+            spark.readStream.schema(_EVENTS_DDL)
             .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
+            .parquet(root)
         )
 
-    table = str(tmp_path / "table")
-    stream_to_versioned(_stream(), table, str(tmp_path / "cp1"), app_id="w1")
-    vt = VersionedTable(spark, table)
-    n1 = len(vt.versions())
-    rows1 = vt.read().count()
+    return stream
 
-    # simulate the pre-upgrade on-disk state: strip 'txn' from every
-    # manifest, leaving only the legacy 'batch_id' stamp
-    import json
 
+def _forget_last_commit(ckpt: str) -> str:
+    """Simulate a driver crash after the sink committed the last batch but
+    before the checkpoint recorded it: drop the batch's entry from the
+    checkpoint's commit log, so a restart replays that batch id. Returns
+    the dropped entry's path."""
+    import os
+
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        path = os.path.join(commits, name)
+        if os.path.exists(path):
+            os.remove(path)
+    return os.path.join(commits, str(last))
+
+
+def _table_state(spark, root):
+    from rtcdb_spark.sources.versioned import VersionedTable
+
+    vt = VersionedTable(spark, root)
+    return vt.versions(), sorted(tuple(r) for r in vt.read().collect())
+
+
+def test_cdc_tombstones_replay_from_same_checkpoint_commits_nothing(
+    spark, tmp_path
+):
+    """A batch replayed from the SAME checkpoint (crash between commit and
+    checkpoint write) finds its txn in the table's ledger: no version is
+    added and the served snapshot is unchanged."""
+    import os
+
+    from rtcdb_spark.streaming.sinks import (
+        read_cdc_snapshot,
+        stream_cdc_with_tombstones,
+    )
+
+    stream = _file_stream(spark, str(tmp_path / "in"), _cdc_batches())
+    out, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
+    stream_cdc_with_tombstones(stream(), out, ckpt)
+    before = _table_state(spark, out)
+    served = sorted(tuple(r) for r in read_cdc_snapshot(spark, out).collect())
+    assert sorted(r[2] for r in served) == [1, 2, 3]
+
+    dropped = _forget_last_commit(ckpt)
+    stream_cdc_with_tombstones(stream(), out, ckpt)
+    assert os.path.exists(dropped), "the last batch was not replayed"
+    assert _table_state(spark, out) == before
+    assert sorted(tuple(r) for r in read_cdc_snapshot(spark, out).collect()) == served
+
+
+def test_rollup_cascade_replay_from_same_checkpoint_commits_nothing(
+    spark, tmp_path
+):
+    """Replaying the cascade's last batch from the same checkpoint adds no
+    version to any level. When the crash came after the minute commit but
+    before the hour and day commits, the replay skips the minute commit
+    (draining the batch, so the upstream state stores still commit) and
+    re-derives hour and day from the committed minute snapshot."""
+    import os
+
+    from rtcdb_spark.sources.versioned import VersionedTable
+    from rtcdb_spark.streaming.sinks import stream_rollup_cascade
+
+    stream = _file_stream(spark, str(tmp_path / "in"), _cdc_batches())
+    out, ckpt = str(tmp_path / "levels"), str(tmp_path / "ckpt")
+    levels = ("minute", "hour", "day")
+    stream_rollup_cascade(stream(), out, ckpt)
+    before = {lv: _table_state(spark, f"{out}/{lv}") for lv in levels}
+    rows = [r for batch in _cdc_batches() for r in batch]
+    assert sum(r[1] for r in before["day"][1]) == len(rows)
+
+    # crash after all three commits of the last batch
+    dropped = _forget_last_commit(ckpt)
+    stream_rollup_cascade(stream(), out, ckpt)
+    assert os.path.exists(dropped), "the last batch was not replayed"
+    assert {lv: _table_state(spark, f"{out}/{lv}") for lv in levels} == before
+
+    # crash after the minute commit, before the hour and day commits
+    for lv in ("hour", "day"):
+        vt = VersionedTable(spark, f"{out}/{lv}")
+        os.remove(vt._manifest_path(vt.latest_version()))
+    dropped = _forget_last_commit(ckpt)
+    stream_rollup_cascade(stream(), out, ckpt)
+    assert os.path.exists(dropped), "the last batch was not replayed"
+    assert {lv: _table_state(spark, f"{out}/{lv}") for lv in levels} == before
+
+
+def test_cdc_upsert_each_version_is_the_batch_answer_so_far(spark, tmp_path):
+    """One version per micro-batch, and version k holds exactly each key's
+    max_by (ts, event_id) row over batches 0..k."""
+    from rtcdb_spark.sources.versioned import VersionedTable
+    from rtcdb_spark.streaming.sinks import stream_cdc_upsert
+
+    batches = _cdc_batches()
+    stream = _file_stream(spark, str(tmp_path / "in"), batches)
+    out = str(tmp_path / "snap")
+    stream_cdc_upsert(stream(), out, str(tmp_path / "ckpt"))
+    vt = VersionedTable(spark, out)
+    assert vt.versions() == list(range(len(batches)))
     for v in vt.versions():
-        p = vt._manifest_path(v)
-        with open(p) as fh:
-            m = json.load(fh)
-        if "extra" in m and "txn" in m["extra"]:
-            del m["extra"]["txn"]
-        with open(p, "w") as fh:
-            json.dump(m, fh)
-
-    # replay as the same writer against the legacy-format table: the
-    # legacy ledger must be seen — zero growth (pre-fix: rows doubled)
-    stream_to_versioned(_stream(), table, str(tmp_path / "cp2"), app_id="w1")
-    assert len(vt.versions()) == n1
-    assert vt.read().count() == rows1
+        k = vt._read_manifest_raw(v)["extra"]["batch_id"]
+        latest: dict = {}
+        for r in (r for batch in batches[: k + 1] for r in batch):
+            if r[2] not in latest or (r[1], r[0]) > (latest[r[2]][1], latest[r[2]][0]):
+                latest[r[2]] = r
+        got = vt.read(v).select("event_id", "ts", "user_id", "event_type", "value")
+        assert sorted(tuple(r) for r in got.collect()) == sorted(latest.values()), v
 
 
 # ---------------------------------------------------------------------------

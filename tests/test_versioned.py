@@ -122,6 +122,8 @@ class TestMultiWriter:
         """Writer A loses the race for version 1 (simulated by publishing a
         competing manifest between A's head-read and publish) and must land
         at version 2 WITH the competitor's files retained — no lost commit."""
+        import time
+
         from rtcdb_spark.sources.versioned import VersionedTable
 
         t = VersionedTable(spark, str(tmp_path / "vt"))
@@ -135,11 +137,14 @@ class TestMultiWriter:
                 raced["done"] = True
                 # competitor claims this version first: an empty append
                 # carrying only the previous head's files
+                head = t._read_manifest_raw(version - 1)
                 competitor = {
                     "version": version,
                     "op": "append",
-                    "files": t._read_manifest(version - 1)["files"],
+                    "ts": time.time(),
+                    "segments": head["segments"],
                     "n_added": 0,
+                    "n_files": head["n_files"],
                 }
                 assert real_try(version, competitor)
             return real_try(version, manifest)
@@ -542,19 +547,23 @@ class TestDataSkipping:
         )
 
     def test_no_stats_means_never_pruned(self, spark, tmp_path):
-        """A manifest without stats for a column keeps every file — sound
-        fallback for pre-stats tables and unsupported types."""
+        """A file without stats for a column is kept by every plan on that
+        column — the sound rule for types without footer min/max."""
         import json
 
-        from rtcdb_spark.sources.versioned import VersionedTable
+        from rtcdb_spark.sources.versioned import _META_KEY, VersionedTable
 
         t = VersionedTable(spark, str(tmp_path / "vt"))
         t.commit(spark.range(50).selectExpr("id AS k"))
-        # simulate a pre-stats manifest
+        # re-point manifest 0 at a segment whose files record no 'k' stats
         m = t._read_manifest(0)
-        m.pop("stats", None)
+        seg = t._write_segment(
+            m["files"], {f: {_META_KEY: s[_META_KEY]} for f, s in m["stats"].items()}
+        )
+        raw = t._read_manifest_raw(0)
+        raw["segments"] = [seg]
         with open(t._manifest_path(0), "w") as f:
-            json.dump(m, f)
+            json.dump(raw, f)
         keep, total = t.plan_files("k", 0, 1)
         assert len(keep) == total
         assert t.read_pruned("k", 0, 1).count() == 2
@@ -790,29 +799,6 @@ class TestManifestSharding:
         assert raw["segments"][:3] == vt._read_manifest_raw(2)["segments"]
         assert _rows(vt.read()) == _rows(_batch(spark, 0, 40))
 
-    def test_legacy_inline_manifest_still_reads_and_upgrades(self, spark, vt):
-        import json
-
-        vt.commit(_batch(spark, 0, 5))
-        # rewrite manifest 0 in the legacy inline form
-        m = vt._read_manifest(0)
-        legacy = {
-            "version": 0,
-            "op": "append",
-            "files": m["files"],
-            "stats": m.get("stats", {}),
-            "n_added": m["n_added"],
-        }
-        with open(vt._manifest_path(0), "w") as f:
-            json.dump(legacy, f)
-        fresh = VersionedTable(spark, vt.root)
-        assert _rows(fresh.read(0)) == _rows(_batch(spark, 0, 5))
-        # next append converts the inline list into a segment (upgrade)
-        fresh.commit(_batch(spark, 5, 8))
-        raw = fresh._read_manifest_raw(1)
-        assert "segments" in raw and len(raw["segments"]) == 2
-        assert _rows(fresh.read(1)) == _rows(_batch(spark, 0, 8))
-
     def test_plan_time_at_100k_files(self, spark, tmp_path):
         """Metadata-only scale rung: 1,000 segments x 100 files = 100k
         manifest entries. Measures (a) full resolution (plan) time,
@@ -828,7 +814,10 @@ class TestManifestSharding:
             files = [f"data/txn-{s:04d}/part-{i:03d}.parquet" for i in range(100)]
             stats = {f: {"k": [s * 100 + i, s * 100 + i]} for i, f in enumerate(files)}
             segs.append(t._write_segment(files, stats))
-        manifest = {"version": 0, "op": "append", "segments": segs, "n_added": 100}
+        manifest = {
+            "version": 0, "op": "append", "ts": time.time(), "segments": segs,
+            "n_added": 100, "n_files": 100_000,
+        }
         assert t._try_publish(0, manifest)
 
         t0 = time.monotonic()
@@ -851,8 +840,10 @@ class TestManifestSharding:
             {
                 "version": 1,
                 "op": "append",
-                "segments": t._segments_of(0, t._read_manifest_raw(0)) + [seg],
+                "ts": time.time(),
+                "segments": t._read_manifest_raw(0)["segments"] + [seg],
                 "n_added": 1,
+                "n_files": 100_001,
             },
         )
         append_s = time.monotonic() - t0
@@ -886,7 +877,7 @@ class TestManifestSharding:
             }
             segs.append(t._write_segment(files, stats))
         assert t._try_publish(
-            0, {"version": 0, "op": "append", "segments": segs,
+            0, {"version": 0, "op": "append", "ts": time.time(), "segments": segs,
                 "n_added": 100, "n_files": 1_000_000}
         )
 
@@ -901,8 +892,8 @@ class TestManifestSharding:
         seg = t._write_segment(["data/txn-new/part-000.parquet"], {})
         ok = t._try_publish(
             1,
-            {"version": 1, "op": "append",
-             "segments": t._segments_of(0, t._read_manifest_raw(0)) + [seg],
+            {"version": 1, "op": "append", "ts": time.time(),
+             "segments": t._read_manifest_raw(0)["segments"] + [seg],
              "n_added": 1, "n_files": 1_000_001},
         )
         append_s = time.monotonic() - t0
@@ -1091,32 +1082,6 @@ class TestBloomIndex:
         keep_b, _ = vt.plan_files_point("k", True)
         assert len(keep_b) == 1  # stats keep it (1 in [0,100)); bloom skipped
 
-    def test_legacy_segment_upgrade_memoized(self, spark, vt, tmp_path):
-        """commit() against a legacy inline manifest must not write a fresh
-        upgrade segment per retry: the upgrade is memoized per version."""
-        import json
-        import os
-
-        vt.commit(self._keyed(spark, 0, 10).coalesce(1))
-        # rewrite manifest 0 into the legacy inline form
-        mpath = vt._manifest_path(0)
-        with open(mpath) as fh:
-            m = json.load(fh)
-        files, stats = vt._read_manifest(0)["files"], vt._read_manifest(0).get("stats", {})
-        legacy = {"version": 0, "op": "append", "files": files, "stats": stats}
-        with open(mpath, "w") as fh:
-            json.dump(legacy, fh)
-        vt._seg_cache.clear()
-        log_dir = os.path.join(vt.root, "_log")
-        n_before = len([f for f in os.listdir(log_dir) if f.startswith("seg-")])
-        raw = vt._read_manifest_raw(0)
-        s1 = vt._segments_of(0, raw)
-        s2 = vt._segments_of(0, raw)
-        s3 = vt._segments_of(0, raw)
-        assert s1 == s2 == s3
-        n_after = len([f for f in os.listdir(log_dir) if f.startswith("seg-")])
-        assert n_after == n_before + 1  # exactly ONE upgrade segment
-
     def test_schema_in_log_recorded_and_planned(self, spark, vt):
         """Every commit records the table schema in the manifest
         (Delta-style schema-in-the-log) so reads plan with an explicit
@@ -1152,10 +1117,7 @@ class TestBloomIndex:
     def test_timestamp_as_of(self, spark, vt):
         """TIMESTAMP AS OF: commit timestamps recorded in the manifest
         resolve a wall-clock probe to the right snapshot; probes before
-        the first commit raise; legacy manifests (no ts) fall back to the
-        manifest file's mtime."""
-        import json
-        import os
+        the first commit raise."""
         import time
 
         t_before = time.time() - 1e-3
@@ -1171,23 +1133,6 @@ class TestBloomIndex:
             vt.version_as_of(t_before)
         assert [h["version"] for h in vt.history()] == [0, 1]
         assert all(h["ts"] > 0 for h in vt.history())
-        # legacy fallback: strip ts from manifest 0 -> file mtime is used
-        p = vt._manifest_path(0)
-        m = json.load(open(p))
-        del m["ts"]
-        with open(p, "w") as fh:
-            json.dump(m, fh)
-        os.utime(p, (t_mid - 0.5, t_mid - 0.5))
-        assert vt.version_as_of(t_mid) == 0
-
-    def test_committed_extras_absent_key_filters_new_format(self, spark, vt):
-        """absent_key='txn' reads only pre-txn legacy ledger entries, so a
-        new-format writer's batch ids never leak into a legacy scan."""
-        d = self._keyed(spark, 0, 5).coalesce(1)
-        vt.commit(d, extra={"batch_id": 0})  # legacy sink stamp
-        vt.commit(d, extra={"txn": "a#1", "app_id": "a", "batch_id": 1})
-        assert vt.committed_extras("batch_id") == {0, 1}
-        assert vt.committed_extras("batch_id", absent_key="txn") == {0}
 
     def test_blooms_survive_rewrite_carry(self, spark, vt):
         """Survivor files carry their blooms through a rewrite commit;
