@@ -29,16 +29,26 @@ table whose log points at the existing parquet files — metadata-only, the
 Delta-format twin of `VersionedTable.clone`, instant at any table size
 (same caveat: vacuuming the source breaks the export).
 
-Checkpoints (round 6, same protocol chapter): `checkpoint_delta` writes
-the classic single-file parquet checkpoint — one row per LIVE action
-(protocol, metaData, the live adds), `%020d.checkpoint.parquet`, plus the
-`_last_checkpoint` pointer — and the reader starts replay FROM the newest
-checkpoint at-or-before the requested version instead of version 0, so
-JSON commits older than the checkpoint can be vacuumed away (the whole
-point of checkpoints: O(live files + commits-since-checkpoint) planning
-on a long-lived table, not O(all commits ever)). Time travel BEFORE the
-oldest checkpoint still needs the JSON history and raises clearly if it
-was cleaned.
+Checkpoints (same protocol chapter): a checkpoint holds one row per LIVE
+action — protocol, metaData, live adds, remove tombstones, txn high-water
+marks, domains — and the reader starts replay FROM the newest checkpoint
+at-or-before the requested version instead of version 0, so JSON commits
+older than the checkpoint can be vacuumed away (the whole point of
+checkpoints: O(live files + commits-since-checkpoint) planning on a
+long-lived table, not O(all commits ever)). Time travel BEFORE the oldest
+checkpoint still needs the JSON history and raises clearly if it was
+cleaned. All four file forms come from one encoder: `_ACTION_TYPES` (the
+Arrow struct of each action, defined once) and `_checkpoint_rows` (the
+folded snapshot as action rows). `checkpoint_delta` writes them as the
+classic ``%020d.checkpoint.parquet`` or, with ``parts=N``, as contiguous
+slices in the spec's ``%020d.checkpoint.%010d.%010d.parquet`` part set;
+`checkpoint_delta_v2` puts the file actions into sidecars (below). One
+codec (`_checkpoint_name` / `_parse_checkpoint_name`) builds and parses
+every name, and one listing of ``_delta_log`` (`_log_listing`) finds the
+usable checkpoints — an incomplete part set is not one. Every file,
+sidecar and the ``_last_checkpoint`` pointer is written under a unique
+tmp name and renamed into place, and the pointer never moves back to an
+older version.
 
 Column mapping, name mode (round 7): tables whose
 `delta.columnMapping.mode` is ``name`` store data under per-field
@@ -64,18 +74,18 @@ the deleted rows are anti-joined out of that file's scan on
 `_metadata.row_index` (`_scan_snapshot`). WRITING deletion vectors landed in
 wave 2: `delete_delta` is row-level DELETE without rewriting data files.
 
-Multi-part checkpoints (round 7): `checkpoint_delta(parts=N)` writes the
-spec's `%020d.checkpoint.%010d.%010d.parquet` part set with `parts`
-recorded in `_last_checkpoint`, and the reader folds every part —
-refusing an INCOMPLETE part set rather than silently dropping live files.
-
 Round-7 second wave: row-level DELETE via deletion-vector WRITES
 (`delete_delta`), writes to column-mapped tables (`_to_physical`
 translation, id-mode field-id stamping), and V2 (sidecar) CHECKPOINTS
-both directions (`checkpoint_delta_v2`: checkpointMetadata + sidecar
-actions, `_delta_log/_sidecars/`, DV descriptors carried — the classic
-writer still refuses feature tables; the reader resolves sidecar actions
-at fold time and validates checkpointMetadata.version).
+both directions (`checkpoint_delta_v2`: a top-level parquet or ndjson
+file of checkpointMetadata, the protocol upgraded with `v2Checkpoint`,
+metaData, txns, domains and one `sidecar` action per
+``_delta_log/_sidecars/`` file holding the adds — DV descriptors
+carried — and removes; the reader resolves sidecar actions at fold time
+and validates checkpointMetadata.version). `protocol.readerFeatures` and
+`add.deletionVector` are in a checkpoint's schema exactly when the
+protocol has reader features, which a V2 checkpoint always has and a
+classic one never does: the classic writer refuses such tables.
 
 Round 8: CHANGE DATA FEED both directions (`delete_delta` emits
 ``_change_data/`` files + ``cdc`` actions when
@@ -127,12 +137,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
-from functools import reduce
+from functools import partial, reduce
 from typing import Any
 from urllib.parse import quote, unquote
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from rtcdb_spark.sources import zonemap
@@ -150,100 +163,94 @@ def _commit_path(path: str, version: int) -> str:
 
 def delta_versions(path: str) -> list[int]:
     """Available commit versions, oldest first."""
+    return _log_listing(path)[0]
+
+
+def _checkpoint_name(
+    version: int, part: int | None = None, parts: int | None = None,
+    unique: str | None = None, ext: str = "parquet",
+) -> str:
+    """A checkpoint file's name in ``_delta_log``, in the spec's three
+    forms: classic ``%020d.checkpoint.parquet``; part ``part`` (1-based)
+    of a ``parts``-file set ``%020d.checkpoint.%010d.%010d.parquet``; V2
+    ``%020d.checkpoint.<unique>.parquet|json``."""
+    if unique is not None:
+        return f"{version:020d}.checkpoint.{unique}.{ext}"
+    if parts is not None:
+        return f"{version:020d}.checkpoint.{part:010d}.{parts:010d}.parquet"
+    return f"{version:020d}.checkpoint.parquet"
+
+
+def _parse_checkpoint_name(name: str) -> tuple[int, int, int] | None:
+    """The inverse of `_checkpoint_name`: ``(version, part, parts)`` —
+    ``(v, 1, 1)`` for a classic file, ``(v, 0, 0)`` for a V2 file — or
+    ``None`` for any other ``_delta_log`` entry (commits, tmp files,
+    ``_last_checkpoint``)."""
+    head, sep, rest = name.partition(".checkpoint.")
+    if not sep or len(head) != 20 or not head.isdigit():
+        return None
+    stem, _dot, ext = rest.rpartition(".")
+    segs = stem.split(".")
+    if ext == "parquet" and not stem:
+        return int(head), 1, 1
+    if ext == "parquet" and len(segs) == 2 and all(x.isdigit() for x in segs):
+        return int(head), int(segs[0]), int(segs[1])
+    if ext in ("parquet", "json") and len(segs) == 1 and stem:
+        return int(head), 0, 0
+    return None
+
+
+def _log_listing(path: str) -> tuple[list[int], dict[int, list[str]]]:
+    """One listing of ``_delta_log``: the commit versions, oldest first,
+    and every usable checkpoint's top-level files by version. At one
+    version a classic file wins over a part set, and a COMPLETE part set
+    (all parts, in order) over a V2 file; an incomplete part set is not
+    a checkpoint — folding it would silently drop live files. Racing V2
+    writers may leave several V2 files for one version; any is complete,
+    so the first by name is used. V2 sidecars are resolved at fold time
+    from the ``sidecar`` actions inside the file."""
     d = _log_dir(path)
     if not os.path.isdir(d):
-        return []
-    out = []
-    for f in os.listdir(d):
+        return [], {}
+    versions: list[int] = []
+    # version -> (parts, part) -> file; (1, 1) is a classic file, (0, 0)
+    # the first V2 file by name
+    found: dict[int, dict[tuple[int, int], str]] = {}
+    for f in sorted(os.listdir(d)):
         if f.endswith(".json") and len(f) == 25 and f[:20].isdigit():
-            out.append(int(f[:20]))
-    return sorted(out)
-
-
-def _checkpoint_path(path: str, version: int) -> str:
-    return os.path.join(_log_dir(path), f"{version:020d}.checkpoint.parquet")
-
-
-def _checkpoint_part_path(path: str, version: int, part: int, parts: int) -> str:
-    """Spec multi-part naming: %020d.checkpoint.%010d.%010d.parquet
-    (version, 1-based part number, total parts)."""
-    return os.path.join(
-        _log_dir(path),
-        f"{version:020d}.checkpoint.{part:010d}.{parts:010d}.parquet",
-    )
-
-
-def _checkpoint_files(path: str, version: int) -> list[str]:
-    """Every TOP-LEVEL parquet file of the checkpoint at ``version`` —
-    the single classic file, ALL parts of a multi-part checkpoint
-    (raises if any part is missing: folding a partial checkpoint would
-    silently drop live files), or the V2 checkpoint file (one
-    ``<v>.checkpoint.<unique>.parquet``; its sidecars are resolved at
-    fold time from the `sidecar` actions inside it)."""
-    single = _checkpoint_path(path, version)
-    if os.path.exists(single):
-        return [single]
-    d = _log_dir(path)
-    prefix = f"{version:020d}.checkpoint."
-    parts_found: dict[int, str] = {}
-    total = None
-    v2: list[str] = []
-    for f in os.listdir(d):
-        if not f.startswith(prefix):
+            versions.append(int(f[:20]))
             continue
-        # V2 checkpoints come in BOTH spec formats: <v>.checkpoint.<u>
-        # .parquet and .json (round 10 — ndjson of the same actions)
-        if f.endswith(".json"):
-            mid = f[len(prefix):-len(".json")]
-            if mid and "." not in mid:
-                v2.append(os.path.join(d, f))
+        parsed = _parse_checkpoint_name(f)
+        if parsed is not None:
+            v, part, parts = parsed
+            found.setdefault(v, {}).setdefault((parts, part), os.path.join(d, f))
+    cps: dict[int, list[str]] = {}
+    for v, files in sorted(found.items()):
+        if (1, 1) in files:
+            cps[v] = [files[(1, 1)]]
             continue
-        if not f.endswith(".parquet"):
-            continue
-        mid = f[len(prefix):-len(".parquet")].split(".")
-        if len(mid) == 2 and all(s.isdigit() for s in mid):
-            parts_found[int(mid[0])] = os.path.join(d, f)
-            total = int(mid[1])
-        elif len(mid) == 1 and mid[0]:
-            v2.append(os.path.join(d, f))
-    if total is None:
-        if v2:
-            # racing writers may leave several v2 checkpoints for one
-            # version; any is complete — pick deterministically
-            return [sorted(v2)[0]]
-        raise ValueError(f"no checkpoint files for version {version}")
-    missing = sorted(set(range(1, total + 1)) - set(parts_found))
-    if missing:
-        raise ValueError(
-            f"multi-part checkpoint at version {version} is incomplete: "
-            f"missing parts {missing} of {total}"
-        )
-    return [parts_found[i] for i in range(1, total + 1)]
+        for parts in sorted({n for n, _i in files if n > 1}):
+            if all((parts, i) in files for i in range(1, parts + 1)):
+                cps[v] = [files[(parts, i)] for i in range(1, parts + 1)]
+                break
+        else:
+            if (0, 0) in files:
+                cps[v] = [files[(0, 0)]]
+    return versions, cps
 
 
 def delta_checkpoints(path: str) -> list[int]:
-    """Available checkpoint versions (classic single-file or complete
-    multi-part sets), oldest first."""
-    d = _log_dir(path)
-    if not os.path.isdir(d):
-        return []
-    out = set()
-    for f in os.listdir(d):
-        if f.endswith(".checkpoint.parquet") and f[:20].isdigit():
-            out.add(int(f[:20]))
-        elif (
-            ".checkpoint." in f
-            and (f.endswith(".parquet") or f.endswith(".json"))
-            and f[:20].isdigit()
-            and len(f) != 25  # a plain %020d.json commit is not one
-        ):
-            v = int(f[:20])
-            try:
-                _checkpoint_files(path, v)
-            except ValueError:
-                continue  # incomplete part set: not a usable checkpoint
-            out.add(v)  # multi-part classic or v2
-    return sorted(out)
+    """Available checkpoint versions (classic, complete multi-part or V2),
+    oldest first."""
+    return sorted(_log_listing(path)[1])
+
+
+def _head_version(path: str) -> int:
+    """The newest version the log holds, as a commit or a checkpoint."""
+    versions, cps = _log_listing(path)
+    if not versions and not cps:
+        raise ValueError(f"{path} is not a Delta table: no _delta_log commits")
+    return max(versions[-1:] + list(cps))
 
 
 # Reader-version-3 table features this reader actually implements.
@@ -366,16 +373,13 @@ def _snapshot_state(
     newest parquet checkpoint at-or-before the target version (if any),
     then replay the JSON commits after it — O(live files +
     commits-since-checkpoint), which is why checkpoints exist."""
-    versions = delta_versions(path)
-    cps = delta_checkpoints(path)
-    if not versions and not cps:
-        raise ValueError(f"{path} has no _delta_log commits")
-    head = max(versions[-1] if versions else -1, cps[-1] if cps else -1)
+    head = _head_version(path)
+    versions, cps = _log_listing(path)
     until = head if version is None else version
     if until > head or until < 0:
         raise ValueError(
             f"no such Delta version: {version} "
-            f"(commits {versions}, checkpoints {cps})"
+            f"(commits {versions}, checkpoints {sorted(cps)})"
         )
     start_cp = max((c for c in cps if c <= until), default=None)
     state: dict = {
@@ -383,8 +387,6 @@ def _snapshot_state(
         "protocol": None, "domains": {},
     }
     if start_cp is not None:
-        import pyarrow.parquet as pq
-
         def _cp_actions(part_file: str):
             if part_file.endswith(".json"):
                 # V2 JSON checkpoint: ndjson, one action per line
@@ -392,7 +394,7 @@ def _snapshot_state(
                     return [json.loads(ln) for ln in fh if ln.strip()]
             return pq.read_table(part_file).to_pylist()
 
-        for part in _checkpoint_files(path, start_cp):
+        for part in cps[start_cp]:
             for action in _cp_actions(part):
                 if action.get("sidecar") is not None:
                     sc = action["sidecar"]
@@ -438,216 +440,254 @@ def _snapshot_state(
     return meta, adds, state
 
 
+_MAP = pa.map_(pa.string(), pa.string())
+# The Arrow struct of every action a checkpoint file can hold, spec field
+# names and types. Built here and nowhere else: the classic, multi-part,
+# V2 top-level and V2 sidecar files are all tables of these columns.
+_ACTION_TYPES = {
+    "checkpointMetadata": pa.struct([("version", pa.int64())]),
+    "protocol": pa.struct([
+        ("minReaderVersion", pa.int32()),
+        ("minWriterVersion", pa.int32()),
+        ("readerFeatures", pa.list_(pa.string())),
+        ("writerFeatures", pa.list_(pa.string())),
+    ]),
+    "metaData": pa.struct([
+        ("id", pa.string()),
+        ("format", pa.struct([("provider", pa.string()), ("options", _MAP)])),
+        ("schemaString", pa.string()),
+        ("partitionColumns", pa.list_(pa.string())),
+        ("configuration", _MAP),
+        ("createdTime", pa.int64()),
+    ]),
+    "add": pa.struct([
+        ("path", pa.string()),
+        ("partitionValues", _MAP),
+        ("size", pa.int64()),
+        ("modificationTime", pa.int64()),
+        ("dataChange", pa.bool_()),
+        ("stats", pa.string()),
+        ("deletionVector", pa.struct([
+            ("storageType", pa.string()),
+            ("pathOrInlineDv", pa.string()),
+            ("offset", pa.int64()),
+            ("sizeInBytes", pa.int64()),
+            ("cardinality", pa.int64()),
+        ])),
+        # row tracking: without these, replay would orphan every row id
+        ("baseRowId", pa.int64()),
+        ("defaultRowCommitVersion", pa.int64()),
+    ]),
+    "remove": pa.struct([
+        ("path", pa.string()),
+        ("deletionTimestamp", pa.int64()),
+        ("dataChange", pa.bool_()),
+    ]),
+    "txn": pa.struct([
+        ("appId", pa.string()),
+        ("version", pa.int64()),
+        ("lastUpdated", pa.int64()),
+    ]),
+    "domainMetadata": pa.struct([
+        ("domain", pa.string()),
+        ("configuration", pa.string()),
+        ("removed", pa.bool_()),
+    ]),
+    "sidecar": pa.struct([
+        ("path", pa.string()),
+        ("sizeInBytes", pa.int64()),
+        ("modificationTime", pa.int64()),
+    ]),
+}
+# Fields only a table with reader features carries in its checkpoints.
+_FEATURE_FIELDS = {"protocol": "readerFeatures", "add": "deletionVector"}
+
+
+def _checkpoint_types(proto: dict) -> dict[str, pa.StructType]:
+    """The action types of a checkpoint of a table with protocol
+    ``proto``: `_ACTION_TYPES`, less the feature-only fields unless the
+    protocol has reader features — so a reader-1 table's checkpoint keeps
+    the reader-1 schema whichever writer produces it."""
+    if proto.get("readerFeatures"):
+        return _ACTION_TYPES
+    return {
+        action: pa.struct(
+            [f for f in t if f.name != _FEATURE_FIELDS.get(action)]
+        )
+        for action, t in _ACTION_TYPES.items()
+    }
+
+
+def _checkpoint_rows(proto: dict, meta: dict, state: dict) -> list[dict]:
+    """A folded snapshot as checkpoint rows, one ``{action: fields}``
+    dict each, fields exactly those of `_checkpoint_types(proto)`: the
+    protocol, metaData, every live add WITH its stats, every retained
+    remove tombstone, every txn high-water mark and every domain
+    (tombstoned domains too — a replaying writer must see the drop, not
+    resurrect the old value), each group sorted by its key. Map-typed
+    fields stay plain dicts, which both Arrow and JSON take."""
+    types = _checkpoint_types(proto)
+
+    def row(action: str, fields: dict) -> dict:
+        return {action: {f.name: fields.get(f.name) for f in types[action]}}
+
+    fmt = meta.get("format") or {}
+    rows = [
+        row("protocol", {
+            "minReaderVersion": proto.get("minReaderVersion", 1),
+            "minWriterVersion": proto.get("minWriterVersion", 2),
+            "readerFeatures": proto.get("readerFeatures"),
+            "writerFeatures": proto.get("writerFeatures"),
+        }),
+        row("metaData", {
+            "id": meta["id"],
+            "format": {
+                "provider": fmt.get("provider", "parquet"),
+                "options": fmt.get("options") or {},
+            },
+            "schemaString": meta["schemaString"],
+            "partitionColumns": meta.get("partitionColumns") or [],
+            "configuration": meta.get("configuration") or {},
+            "createdTime": meta.get("createdTime"),
+        }),
+    ]
+    dv_type = _ACTION_TYPES["add"].field("deletionVector").type
+    dv_fields = [f.name for f in dv_type]
+    adds, removes = state["adds"], state["removes"]
+    for p in sorted(adds):
+        a = adds[p]
+        dv = a.get("deletionVector")
+        rows.append(row("add", {
+            "path": a["path"],
+            "partitionValues": a.get("partitionValues") or {},
+            "size": a.get("size", 0),
+            "modificationTime": a.get("modificationTime", 0),
+            "dataChange": bool(a.get("dataChange", True)),
+            "stats": a.get("stats"),
+            "deletionVector": {k: dv.get(k) for k in dv_fields} if dv else None,
+            "baseRowId": a.get("baseRowId"),
+            "defaultRowCommitVersion": a.get("defaultRowCommitVersion"),
+        }))
+    rows += [
+        row("remove", {
+            "path": removes[p]["path"],
+            "deletionTimestamp": removes[p].get("deletionTimestamp"),
+            "dataChange": bool(removes[p].get("dataChange", True)),
+        })
+        for p in sorted(removes)
+    ]
+    txns, domains = state["txns"], state["domains"]
+    rows += [
+        row("txn", {**txns[app], "version": txns[app].get("version", 0)})
+        for app in sorted(txns)
+    ]
+    rows += [
+        row("domainMetadata", {
+            **domains[name], "removed": bool(domains[name].get("removed", False)),
+        })
+        for name in sorted(domains)
+    ]
+    return rows
+
+
+def _action_table(
+    rows: list[dict], columns: tuple[str, ...], types: dict
+) -> pa.Table:
+    """Checkpoint rows as an Arrow table with one struct column per
+    action in ``columns``, typed by ``types`` (`_checkpoint_types`); a
+    row fills its own action's column and leaves the others null."""
+    return pa.table(
+        {c: pa.array([r.get(c) for r in rows], type=types[c]) for c in columns}
+    )
+
+
+def _publish(dst: str, write) -> None:
+    """Publish one log file: ``write(tmp)`` to a unique tmp name next to
+    ``dst``, then rename it into place, so a reader sees the whole file
+    or none and racing writers never share a tmp file."""
+    tmp = f"{dst}.tmp-{uuid.uuid4().hex[:8]}"
+    write(tmp)
+    os.rename(tmp, dst)
+
+
+def _point_last_checkpoint(path: str, pointer: dict) -> None:
+    """Publish the ``_last_checkpoint`` pointer unless it already names a
+    newer checkpoint: checkpointing an old version must not move the
+    pointer backwards."""
+    lc = os.path.join(_log_dir(path), "_last_checkpoint")
+    try:
+        with open(lc) as fh:
+            if json.load(fh)["version"] > pointer["version"]:
+                return
+    except (OSError, ValueError, KeyError, TypeError):
+        pass  # no pointer yet, or one no reader can use: replace it
+
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as fh:
+            json.dump(pointer, fh)
+
+    _publish(lc, write)
+
+
+def _checkpoint_snapshot(
+    path: str, version: int | None
+) -> tuple[int, dict, dict, dict]:
+    """``(version, protocol, metaData, state)`` of the snapshot a
+    checkpoint writes: ``version``, or the head when ``None``."""
+    v = _head_version(path) if version is None else version
+    meta, _adds, state = _snapshot_state(path, v)
+    return v, state["protocol"] or _PROTOCOL["protocol"], meta, state
+
+
 def checkpoint_delta(
     path: str, version: int | None = None, parts: int | None = None
 ) -> int:
     """Write the classic parquet checkpoint for ``version`` (default:
-    latest) plus the ``_last_checkpoint`` pointer — one row per live
-    action (protocol, metaData, every live add WITH its stats, every
-    retained remove tombstone, every txn high-water mark), spec field
-    names and types (partitionValues as map<string,string>), so JSON
-    commits at or before it can be cleaned while the table stays
-    readable — and foreign engines keep the tombstone info VACUUM and
-    writer idempotence need (ADVICE r6).
+    latest) plus the ``_last_checkpoint`` pointer: one row per live
+    action (`_checkpoint_rows`), so JSON commits at or before it can be
+    cleaned while the table stays readable, and foreign engines keep the
+    tombstone info VACUUM and writer idempotence need. The protocol row
+    is the FOLDED protocol, so a reader-1 table keeps its writer version
+    and writer-feature list. Tables with reader features (DVs etc.) need
+    `checkpoint_delta_v2` and are refused.
 
-    ``parts`` (round 7): write a MULTI-PART checkpoint — the spec's
+    ``parts``: write a MULTI-PART checkpoint — the spec's
     ``%020d.checkpoint.%010d.%010d.parquet`` naming with action rows
     split contiguously across the parts and ``parts`` recorded in
     ``_last_checkpoint``. This is how engines keep checkpoint writes
     parallel on tables whose live-file set no longer fits one comfortable
     parquet file; the reader folds every part and refuses an incomplete
-    set. Returns the checkpointed version."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    versions = delta_versions(path)
-    if not versions and not delta_checkpoints(path):
-        raise ValueError(f"{path} is not a Delta table")
-    v = (
-        version
-        if version is not None
-        else max(versions[-1] if versions else -1, *(delta_checkpoints(path) or [-1]))
-    )
-    meta, adds, state = _snapshot_state(path, v)
-    removes, txns = state["removes"], state["txns"]
-    domains = state.get("domains") or {}
-    proto = state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}
+    set. Every part file exists even if empty, so completeness is a pure
+    name-set property. Returns the checkpointed version."""
+    v, proto, meta, state = _checkpoint_snapshot(path, version)
     if proto.get("minReaderVersion", 1) > 1 or proto.get("readerFeatures"):
-        # READER-feature tables (DV etc.) need the v2 checkpoint writer;
-        # WRITER-features-only tables (domainMetadata, constraints as
-        # features) checkpoint classically with the writerFeatures list
-        # carried in the protocol row (round 10 — was a blanket refusal)
         raise NotImplementedError(
             "checkpointing a table with reader features needs the v2 "
             "checkpoint writer (checkpoint_delta_v2); read such tables "
             "in place instead"
         )
-
-    protocol_t = pa.struct(
-        [
-            ("minReaderVersion", pa.int32()),
-            ("minWriterVersion", pa.int32()),
-            ("writerFeatures", pa.list_(pa.string())),
-        ]
+    rows = _checkpoint_rows(proto, meta, state)
+    table = _action_table(
+        rows,
+        ("protocol", "metaData", "add", "remove", "txn", "domainMetadata"),
+        _checkpoint_types(proto),
     )
-    meta_t = pa.struct(
-        [
-            ("id", pa.string()),
-            ("format", pa.struct(
-                [("provider", pa.string()),
-                 ("options", pa.map_(pa.string(), pa.string()))]
-            )),
-            ("schemaString", pa.string()),
-            ("partitionColumns", pa.list_(pa.string())),
-            ("configuration", pa.map_(pa.string(), pa.string())),
-            ("createdTime", pa.int64()),
-        ]
-    )
-    add_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("partitionValues", pa.map_(pa.string(), pa.string())),
-            ("size", pa.int64()),
-            ("modificationTime", pa.int64()),
-            ("dataChange", pa.bool_()),
-            ("stats", pa.string()),
-            # row tracking (round 10): checkpoints must carry these or
-            # replay would orphan every row id
-            ("baseRowId", pa.int64()),
-            ("defaultRowCommitVersion", pa.int64()),
-        ]
-    )
-    remove_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("deletionTimestamp", pa.int64()),
-            ("dataChange", pa.bool_()),
-        ]
-    )
-    txn_t = pa.struct(
-        [
-            ("appId", pa.string()),
-            ("version", pa.int64()),
-            ("lastUpdated", pa.int64()),
-        ]
-    )
-    n = 2 + len(adds) + len(removes) + len(txns) + len(domains)
-    # the FOLDED protocol, not a hard-coded downgrade: a reader-1 table
-    # with writer version 3-6 (invariants, CHECK constraints, ...) keeps
-    # its writer requirement when engines replay from this checkpoint
-    # (ADVICE r7); a writer-feature table keeps its feature list.
-    # Reader-feature tables were refused above.
-    proto_col = [{
-        "minReaderVersion": proto.get("minReaderVersion", 1),
-        "minWriterVersion": proto.get("minWriterVersion", 2),
-        "writerFeatures": proto.get("writerFeatures"),
-    }] + [None] * (n - 1)
-    meta_row = {
-        "id": meta["id"],
-        "format": {
-            "provider": meta.get("format", {}).get("provider", "parquet"),
-            "options": list(
-                (meta.get("format", {}).get("options") or {}).items()
-            ),
-        },
-        "schemaString": meta["schemaString"],
-        "partitionColumns": meta.get("partitionColumns", []) or [],
-        "configuration": list((meta.get("configuration") or {}).items()),
-        "createdTime": meta.get("createdTime"),
-    }
-    meta_col = [None, meta_row] + [None] * (n - 2)
-    add_col: list = [None, None]
-    for p in sorted(adds):
-        a = adds[p]
-        add_col.append(
-            {
-                "path": a["path"],
-                "partitionValues": list(
-                    (a.get("partitionValues") or {}).items()
-                ),
-                "size": a.get("size", 0),
-                "modificationTime": a.get("modificationTime", 0),
-                "dataChange": bool(a.get("dataChange", True)),
-                "stats": a.get("stats"),
-                "baseRowId": a.get("baseRowId"),
-                "defaultRowCommitVersion": a.get(
-                    "defaultRowCommitVersion"
-                ),
-            }
-        )
-    add_col += [None] * (len(removes) + len(txns) + len(domains))
-    remove_col: list = [None] * (2 + len(adds))
-    for p in sorted(removes):
-        r = removes[p]
-        remove_col.append(
-            {
-                "path": r["path"],
-                "deletionTimestamp": r.get("deletionTimestamp"),
-                "dataChange": bool(r.get("dataChange", True)),
-            }
-        )
-    remove_col += [None] * (len(txns) + len(domains))
-    txn_col: list = [None] * (2 + len(adds) + len(removes))
-    for app in sorted(txns):
-        t = txns[app]
-        txn_col.append(
-            {
-                "appId": t["appId"],
-                "version": t.get("version", 0),
-                "lastUpdated": t.get("lastUpdated"),
-            }
-        )
-    txn_col += [None] * len(domains)
-    domain_t = pa.struct(
-        [
-            ("domain", pa.string()),
-            ("configuration", pa.string()),
-            ("removed", pa.bool_()),
-        ]
-    )
-    # tombstoned domains ride along too — the spec's checkpoint rule,
-    # same reasoning as remove tombstones (a replaying writer must see
-    # that the domain was dropped, not resurrect a pre-drop value)
-    domain_col: list = [None] * (2 + len(adds) + len(removes) + len(txns))
-    for name in sorted(domains):
-        d = domains[name]
-        domain_col.append(
-            {
-                "domain": d["domain"],
-                "configuration": d.get("configuration"),
-                "removed": bool(d.get("removed", False)),
-            }
-        )
-    table = pa.table(
-        {
-            "protocol": pa.array(proto_col, type=protocol_t),
-            "metaData": pa.array(meta_col, type=meta_t),
-            "add": pa.array(add_col, type=add_t),
-            "remove": pa.array(remove_col, type=remove_t),
-            "txn": pa.array(txn_col, type=txn_t),
-            "domainMetadata": pa.array(domain_col, type=domain_t),
-        }
-    )
+    n = len(rows)
+    pointer = {"version": v, "size": n}
     if parts is None or parts <= 1:
-        tmp = _checkpoint_path(path, v) + f".tmp-{uuid.uuid4().hex[:8]}"
-        pq.write_table(table, tmp)
-        os.rename(tmp, _checkpoint_path(path, v))
-        pointer = {"version": v, "size": n}
+        _publish(
+            os.path.join(_log_dir(path), _checkpoint_name(v)),
+            partial(pq.write_table, table),
+        )
     else:
-        # contiguous row split; every part file exists even if empty so
-        # the reader's completeness check stays a pure name-set property
         per = (n + parts - 1) // parts
         for i in range(parts):
-            chunk = table.slice(i * per, per)
-            dst = _checkpoint_part_path(path, v, i + 1, parts)
-            tmp = dst + f".tmp-{uuid.uuid4().hex[:8]}"
-            pq.write_table(chunk, tmp)
-            os.rename(tmp, dst)
-        pointer = {"version": v, "size": n, "parts": parts}
-    lc = os.path.join(_log_dir(path), "_last_checkpoint")
-    with open(lc + ".tmp", "w") as fh:
-        json.dump(pointer, fh)
-    os.rename(lc + ".tmp", lc)
+            _publish(
+                os.path.join(_log_dir(path), _checkpoint_name(v, i + 1, parts)),
+                partial(pq.write_table, table.slice(i * per, per)),
+            )
+        pointer["parts"] = parts
+    _point_last_checkpoint(path, pointer)
     return v
 
 
@@ -1169,24 +1209,19 @@ def _file_stats(full: str) -> dict:
     return out
 
 
-def _adds_for_dir(path: str, pcols: list[str]) -> list[dict]:
-    """One add action per parquet file under ``path``, with
-    partitionValues parsed from Hive-style ``col=value`` directory names
-    (Spark's partitioned layout; values URL-decoded, the protocol's
-    ``__HIVE_DEFAULT_PARTITION__`` sentinel mapped to null). Each add
-    carries ``stats`` (numRecords + per-column minValues/maxValues/
-    nullCount from the parquet footer — one metadata read per NEW file)
-    so foreign readers and `delta_plan_files` get skipping/count
-    metadata from our commits."""
-    adds = []
+def _staged_files(path: str, pcols: list[str]) -> list[tuple[str, dict]]:
+    """``(relative path, partitionValues)`` of every parquet file under
+    ``path``, partitionValues parsed from Hive-style ``col=value``
+    directory names (Spark's partitioned layout; values URL-decoded, the
+    protocol's ``__HIVE_DEFAULT_PARTITION__`` sentinel mapped to null)."""
+    out = []
     for root, _dirs, files in os.walk(path):
         if _LOG in root.split(os.sep):
             continue
         for f in sorted(files):
             if not f.endswith(".parquet"):
                 continue
-            full = os.path.join(root, f)
-            rel = os.path.relpath(full, path)
+            rel = os.path.relpath(os.path.join(root, f), path)
             pvals: dict[str, Any] = {}
             for seg in rel.split(os.sep)[:-1]:
                 if "=" in seg:
@@ -1197,19 +1232,46 @@ def _adds_for_dir(path: str, pcols: list[str]) -> list[dict]:
                             if v == "__HIVE_DEFAULT_PARTITION__"
                             else unquote(v)
                         )
-            adds.append(
-                {
-                    "add": {
-                        "path": quote(rel.replace(os.sep, "/"), safe="/="),
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(full),
-                        "modificationTime": int(os.path.getmtime(full) * 1000),
-                        "dataChange": True,
-                        **_stats_or_omit(full),
-                    }
+            out.append((rel, pvals))
+    return out
+
+
+def _adds_for_dir(path: str, pcols: list[str]) -> list[dict]:
+    """One add action per parquet file under ``path`` (`_staged_files`).
+    Each add carries ``stats`` (numRecords + per-column minValues/
+    maxValues/nullCount from the parquet footer — one metadata read per
+    NEW file) so foreign readers and `delta_plan_files` get skipping/
+    count metadata from our commits."""
+    adds = []
+    for rel, pvals in _staged_files(path, pcols):
+        full = os.path.join(path, rel)
+        adds.append(
+            {
+                "add": {
+                    "path": quote(rel.replace(os.sep, "/"), safe="/="),
+                    "partitionValues": pvals,
+                    "size": os.path.getsize(full),
+                    "modificationTime": int(os.path.getmtime(full) * 1000),
+                    "dataChange": True,
+                    **_stats_or_omit(full),
                 }
-            )
+            }
+        )
     return adds
+
+
+def _move_staged(stage: str, dest_root: str, rels: list[str]) -> None:
+    """Move each staged file ``stage/<rel>`` to ``dest_root/<rel>``, then
+    drop the stage dir — O(new files), never a listing of the table.
+    New file names embed a job or task UUID, so a move cannot collide; a
+    collision raises rather than clobbers."""
+    for rel in rels:
+        dst = os.path.join(dest_root, rel)
+        if os.path.exists(dst):
+            raise FileExistsError(f"staged file collides with {dst}")
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(os.path.join(stage, rel), dst)
+    shutil.rmtree(stage)
 
 
 def _stats_or_omit(full: str) -> dict:
@@ -1329,12 +1391,8 @@ def write_delta(
 
 
 def _next_version(path: str) -> tuple[int, dict]:
-    versions = delta_versions(path)
-    cps = delta_checkpoints(path)
-    if not versions and not cps:
-        raise ValueError(f"{path} is not a Delta table")
-    head = max(versions[-1] if versions else -1, cps[-1] if cps else -1)
-    meta, adds, _state = _snapshot_state(path)
+    head = _head_version(path)
+    meta, adds, _state = _snapshot_state(path, head)
     return head + 1, {
         "meta": meta,
         "adds": adds,
@@ -1472,8 +1530,6 @@ def _stage_new_files(
     no field id — id-mode readers name-match requested fields that
     carry no field id (verified Spark 4.1 behavior), so the mixed files
     read back correctly."""
-    import shutil
-
     if meta is not None and _nested_id_mapped(meta):
         if _schema_has_variant(df.schema):
             raise NotImplementedError(
@@ -1489,14 +1545,7 @@ def _stage_new_files(
         writer = writer.partitionBy(*pcols)
     writer.parquet(stage)
     adds = _adds_for_dir(stage, pcols)  # walks ONLY the staged files
-    for a in adds:
-        rel = unquote(a["add"]["path"])
-        dst = os.path.join(path, rel)
-        if os.path.exists(dst):
-            raise FileExistsError(f"staged file collides with {dst}")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(os.path.join(stage, rel), dst)
-    shutil.rmtree(stage)
+    _move_staged(stage, path, [unquote(a["add"]["path"]) for a in adds])
     return adds
 
 
@@ -1586,8 +1635,6 @@ def _arrow_stage(
     The driver moves O(new files) into ``dest_root`` and returns one
     descriptor dict per file: {"path": rel, "partitionValues": {...},
     "size": bytes, "modificationTime": ms, "numRecords": n}."""
-    import shutil
-
     from pyspark.sql.types import StructType
 
     want = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -1706,28 +1753,26 @@ def _arrow_stage(
                 }
             )
 
-    res = df_phys.mapInArrow(
-        _task, "name string, rows long, pvals string"
-    ).collect()
-    descriptors = []
-    for r in sorted(res, key=lambda r: r["name"]):
-        src = os.path.join(stage, r["name"].replace("/", os.sep))
-        dst = os.path.join(dest_root, r["name"].replace("/", os.sep))
-        if os.path.exists(dst):
-            raise FileExistsError(f"staged file collides with {dst}")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-        descriptors.append(
-            {
-                "path": r["name"],
-                "partitionValues": json.loads(r["pvals"]),
-                "size": os.path.getsize(dst),
-                "modificationTime": int(os.path.getmtime(dst) * 1000),
-                "numRecords": int(r["rows"]),
-            }
-        )
-    shutil.rmtree(stage)
-    return descriptors
+    res = sorted(
+        df_phys.mapInArrow(
+            _task, "name string, rows long, pvals string"
+        ).collect(),
+        key=lambda r: r["name"],
+    )
+    rels = [r["name"].replace("/", os.sep) for r in res]
+    _move_staged(stage, dest_root, rels)
+    return [
+        {
+            "path": r["name"],
+            "partitionValues": json.loads(r["pvals"]),
+            "size": os.path.getsize(os.path.join(dest_root, rel)),
+            "modificationTime": int(
+                os.path.getmtime(os.path.join(dest_root, rel)) * 1000
+            ),
+            "numRecords": int(r["rows"]),
+        }
+        for r, rel in zip(res, rels)
+    ]
 
 
 def _stage_new_files_arrow(
@@ -3339,10 +3384,9 @@ def _write_cdc_files(df: DataFrame, path: str, plan: _ScanPlan) -> list[dict]:
     mode routes through the `_arrow_stage` executor writer so field ids
     are stamped at every nesting level, with `_change_type` as the
     id-less extra column."""
-    import shutil
-
     from pyspark.sql import functions as F
 
+    cdc_root = os.path.join(path, "_change_data")
     if plan.mode == "id":
         phys = df.select(
             *[
@@ -3353,7 +3397,6 @@ def _write_cdc_files(df: DataFrame, path: str, plan: _ScanPlan) -> list[dict]:
             ],
             F.col("_change_type"),
         )
-        cdc_root = os.path.join(path, "_change_data")
         meta = {"schemaString": plan.schema.json()}
         return [
             {
@@ -3383,27 +3426,21 @@ def _write_cdc_files(df: DataFrame, path: str, plan: _ScanPlan) -> list[dict]:
     if plan.pcols:
         writer = writer.partitionBy(*plan.pcols)
     writer.parquet(stage)
-    cdc: list[dict] = []
-    for a in _adds_for_dir(stage, plan.pcols):
-        rel = unquote(a["add"]["path"])
-        dst_rel = os.path.join("_change_data", rel)
-        dst = os.path.join(path, dst_rel)
-        if os.path.exists(dst):
-            raise FileExistsError(f"staged CDC file collides with {dst}")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(os.path.join(stage, rel), dst)
-        cdc.append(
-            {
-                "cdc": {
-                    "path": quote(dst_rel.replace(os.sep, "/"), safe="/="),
-                    "partitionValues": a["add"]["partitionValues"],
-                    "size": os.path.getsize(dst),
-                    "dataChange": False,
-                }
+    staged = _staged_files(stage, plan.pcols)
+    _move_staged(stage, cdc_root, [rel for rel, _pv in staged])
+    return [
+        {
+            "cdc": {
+                "path": quote(
+                    "_change_data/" + rel.replace(os.sep, "/"), safe="/="
+                ),
+                "partitionValues": pvals,
+                "size": os.path.getsize(os.path.join(cdc_root, rel)),
+                "dataChange": False,
             }
-        )
-    shutil.rmtree(stage)
-    return cdc
+        }
+        for rel, pvals in staged
+    ]
 
 
 def _stats_disjoint(a_stats: str | None, r_stats: str | None) -> bool:
@@ -3967,12 +4004,8 @@ def delete_delta(spark: SparkSession, path: str, where: str) -> int:
     (`vacuum_delta`)."""
     from pyspark.sql import functions as F
 
-    versions = delta_versions(path)
-    cps = delta_checkpoints(path)
-    if not versions and not cps:
-        raise ValueError(f"{path} is not a Delta table")
-    head = max(versions[-1] if versions else -1, cps[-1] if cps else -1)
-    meta, adds, state = _snapshot_state(path)
+    head = _head_version(path)
+    meta, adds, state = _snapshot_state(path, head)
     _check_append_only(meta, "DELETE")
     v = head + 1
     plan = _ScanPlan(spark, meta)
@@ -4439,250 +4472,70 @@ def checkpoint_delta_v2(
     ``<v>.checkpoint.<uuid>.parquet`` holds `checkpointMetadata`, the
     protocol (upgraded to carry the `v2Checkpoint` feature, per spec —
     only feature tables may carry v2 checkpoints), `metaData`, the txn
-    high-water marks, and one `sidecar` action per
+    high-water marks, the domains, and one `sidecar` action per
     ``_delta_log/_sidecars/<uuid>-<i>.parquet`` file; the sidecars carry
     the add/remove actions (including deletion-vector descriptors, which
-    the classic single-file writer refuses). ``fmt="json"`` (round 10)
-    writes the top-level file in the spec's OTHER allowed format —
-    ``<v>.checkpoint.<uuid>.json``, ndjson one action per line —
-    while sidecars stay parquet, per spec. Returns the checkpointed
-    version."""
+    the classic writer refuses). ``fmt="json"`` writes the same top-level
+    rows in the spec's OTHER allowed format —
+    ``<v>.checkpoint.<uuid>.json``, ndjson one action per line — while
+    sidecars stay parquet, per spec. Returns the checkpointed version."""
     if fmt not in ("parquet", "json"):
         raise ValueError(f"v2 checkpoint format {fmt!r}: parquet or json")
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    versions = delta_versions(path)
-    if not versions and not delta_checkpoints(path):
-        raise ValueError(f"{path} is not a Delta table")
-    v = (
-        version
-        if version is not None
-        else max(versions[-1] if versions else -1, *(delta_checkpoints(path) or [-1]))
-    )
-    meta, adds, state = _snapshot_state(path, v)
-    removes, txns = state["removes"], state["txns"]
-    proto = state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}
-    rf = sorted(set(proto.get("readerFeatures") or []) | {"v2Checkpoint"})
-    wf = sorted(set(proto.get("writerFeatures") or []) | {"v2Checkpoint"})
-
-    dv_t = pa.struct(
-        [
-            ("storageType", pa.string()),
-            ("pathOrInlineDv", pa.string()),
-            ("offset", pa.int64()),
-            ("sizeInBytes", pa.int64()),
-            ("cardinality", pa.int64()),
-        ]
-    )
-    add_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("partitionValues", pa.map_(pa.string(), pa.string())),
-            ("size", pa.int64()),
-            ("modificationTime", pa.int64()),
-            ("dataChange", pa.bool_()),
-            ("stats", pa.string()),
-            ("deletionVector", dv_t),
-            ("baseRowId", pa.int64()),
-            ("defaultRowCommitVersion", pa.int64()),
-        ]
-    )
-    remove_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("deletionTimestamp", pa.int64()),
-            ("dataChange", pa.bool_()),
-        ]
-    )
-
-    def add_row(a: dict) -> dict:
-        dv = a.get("deletionVector")
-        return {
-            "path": a["path"],
-            "partitionValues": list((a.get("partitionValues") or {}).items()),
-            "size": a.get("size", 0),
-            "modificationTime": a.get("modificationTime", 0),
-            "dataChange": bool(a.get("dataChange", True)),
-            "stats": a.get("stats"),
-            "baseRowId": a.get("baseRowId"),
-            "defaultRowCommitVersion": a.get("defaultRowCommitVersion"),
-            "deletionVector": (
-                {
-                    "storageType": dv.get("storageType"),
-                    "pathOrInlineDv": dv.get("pathOrInlineDv"),
-                    "offset": dv.get("offset"),
-                    "sizeInBytes": dv.get("sizeInBytes"),
-                    "cardinality": dv.get("cardinality"),
-                }
-                if dv
-                else None
-            ),
-        }
-
-    file_actions: list[tuple] = [("add", add_row(adds[p])) for p in sorted(adds)]
-    file_actions += [
-        ("remove", {
-            "path": removes[p]["path"],
-            "deletionTimestamp": removes[p].get("deletionTimestamp"),
-            "dataChange": bool(removes[p].get("dataChange", True)),
-        })
-        for p in sorted(removes)
+    v, proto, meta, state = _checkpoint_snapshot(path, version)
+    proto = {
+        "minReaderVersion": 3,
+        "minWriterVersion": 7,
+        "readerFeatures": sorted(
+            set(proto.get("readerFeatures") or []) | {"v2Checkpoint"}
+        ),
+        "writerFeatures": sorted(
+            set(proto.get("writerFeatures") or []) | {"v2Checkpoint"}
+        ),
+    }
+    rows = _checkpoint_rows(proto, meta, state)
+    types = _checkpoint_types(proto)
+    file_rows = [r for r in rows if "add" in r or "remove" in r]
+    top = [{"checkpointMetadata": {"version": v}}] + [
+        r for r in rows if "add" not in r and "remove" not in r
     ]
-    import uuid as _uuid
-
-    u = _uuid.uuid4().hex
+    u = uuid.uuid4().hex
     sc_dir = os.path.join(_log_dir(path), "_sidecars")
     os.makedirs(sc_dir, exist_ok=True)
-    n_sc = max(1, min(sidecars, len(file_actions) or 1))
-    per = (len(file_actions) + n_sc - 1) // n_sc
-    sidecar_rows = []
+    n_sc = max(1, min(sidecars, len(file_rows) or 1))
+    per = (len(file_rows) + n_sc - 1) // n_sc
     for i in range(n_sc):
-        chunk = file_actions[i * per : (i + 1) * per]
-        add_col = [r if kind == "add" else None for kind, r in chunk]
-        rem_col = [r if kind == "remove" else None for kind, r in chunk]
-        table = pa.table(
-            {
-                "add": pa.array(add_col, type=add_t),
-                "remove": pa.array(rem_col, type=remove_t),
-            }
+        chunk = _action_table(
+            file_rows[i * per : (i + 1) * per], ("add", "remove"), types
         )
         name = f"{u}-{i:03d}.parquet"
         dst = os.path.join(sc_dir, name)
-        pq.write_table(table, dst + ".tmp")
-        os.rename(dst + ".tmp", dst)
-        sidecar_rows.append(
-            {
-                "path": name,
-                "sizeInBytes": os.path.getsize(dst),
-                "modificationTime": int(os.path.getmtime(dst) * 1000),
-            }
-        )
+        _publish(dst, partial(pq.write_table, chunk))
+        top.append({"sidecar": {
+            "path": name,
+            "sizeInBytes": os.path.getsize(dst),
+            "modificationTime": int(os.path.getmtime(dst) * 1000),
+        }})
 
-    cpmeta_t = pa.struct([("version", pa.int64())])
-    protocol_t = pa.struct(
-        [
-            ("minReaderVersion", pa.int32()),
-            ("minWriterVersion", pa.int32()),
-            ("readerFeatures", pa.list_(pa.string())),
-            ("writerFeatures", pa.list_(pa.string())),
-        ]
+    def write(tmp: str) -> None:
+        if fmt == "json":
+            with open(tmp, "w") as fh:
+                fh.writelines(json.dumps(r) + "\n" for r in top)
+        else:
+            pq.write_table(
+                _action_table(
+                    top,
+                    ("checkpointMetadata", "protocol", "metaData", "txn",
+                     "domainMetadata", "sidecar"),
+                    types,
+                ),
+                tmp,
+            )
+
+    _publish(
+        os.path.join(_log_dir(path), _checkpoint_name(v, unique=u, ext=fmt)),
+        write,
     )
-    meta_t = pa.struct(
-        [
-            ("id", pa.string()),
-            ("format", pa.struct(
-                [("provider", pa.string()),
-                 ("options", pa.map_(pa.string(), pa.string()))]
-            )),
-            ("schemaString", pa.string()),
-            ("partitionColumns", pa.list_(pa.string())),
-            ("configuration", pa.map_(pa.string(), pa.string())),
-            ("createdTime", pa.int64()),
-        ]
-    )
-    txn_t = pa.struct(
-        [("appId", pa.string()), ("version", pa.int64()),
-         ("lastUpdated", pa.int64())]
-    )
-    sidecar_t = pa.struct(
-        [("path", pa.string()), ("sizeInBytes", pa.int64()),
-         ("modificationTime", pa.int64())]
-    )
-    domains = state.get("domains") or {}
-    domain_t = pa.struct(
-        [("domain", pa.string()), ("configuration", pa.string()),
-         ("removed", pa.bool_())]
-    )
-    rows_n = 2 + 1 + len(txns) + len(domains) + len(sidecar_rows)
-    col = {
-        "checkpointMetadata": [{"version": v}] + [None] * (rows_n - 1),
-        "protocol": [None, {
-            "minReaderVersion": 3, "minWriterVersion": 7,
-            "readerFeatures": rf, "writerFeatures": wf,
-        }] + [None] * (rows_n - 2),
-        "metaData": [None, None, {
-            "id": meta["id"],
-            "format": {
-                "provider": meta.get("format", {}).get("provider", "parquet"),
-                "options": list((meta.get("format", {}).get("options") or {}).items()),
-            },
-            "schemaString": meta["schemaString"],
-            "partitionColumns": meta.get("partitionColumns", []) or [],
-            "configuration": list((meta.get("configuration") or {}).items()),
-            "createdTime": meta.get("createdTime"),
-        }] + [None] * (rows_n - 3),
-    }
-    txn_col: list = [None] * 3
-    for app in sorted(txns):
-        t = txns[app]
-        txn_col.append({"appId": t["appId"], "version": t.get("version", 0),
-                        "lastUpdated": t.get("lastUpdated")})
-    txn_col += [None] * (len(domains) + len(sidecar_rows))
-    # domainMetadata lives in the v2 TOP-LEVEL file (sidecars carry only
-    # file actions, per spec); tombstoned domains included
-    domain_col: list = [None] * (3 + len(txns))
-    for name in sorted(domains):
-        d = domains[name]
-        domain_col.append(
-            {"domain": d["domain"],
-             "configuration": d.get("configuration"),
-             "removed": bool(d.get("removed", False))}
-        )
-    domain_col += [None] * len(sidecar_rows)
-    sc_col: list = [None] * (3 + len(txns) + len(domains))
-    sc_col += sidecar_rows
-    table = pa.table(
-        {
-            "checkpointMetadata": pa.array(col["checkpointMetadata"], type=cpmeta_t),
-            "protocol": pa.array(col["protocol"], type=protocol_t),
-            "metaData": pa.array(col["metaData"], type=meta_t),
-            "txn": pa.array(txn_col, type=txn_t),
-            "domainMetadata": pa.array(domain_col, type=domain_t),
-            "sidecar": pa.array(sc_col, type=sidecar_t),
-        }
-    )
-    if fmt == "json":
-        top = os.path.join(_log_dir(path), f"{v:020d}.checkpoint.{u}.json")
-        rows = []
-        for i in range(rows_n):
-            row = {
-                k: tbl_col[i]
-                for k, tbl_col in (
-                    ("checkpointMetadata", col["checkpointMetadata"]),
-                    ("protocol", col["protocol"]),
-                    ("metaData", col["metaData"]),
-                    ("txn", txn_col),
-                    ("domainMetadata", domain_col),
-                    ("sidecar", sc_col),
-                )
-                if tbl_col[i] is not None
-            }
-            # map-typed fields were prepared as (k, v) pair lists for
-            # Arrow; the JSON format wants plain objects
-            if "metaData" in row:
-                m = dict(row["metaData"])
-                m["configuration"] = dict(m.get("configuration") or [])
-                m["format"] = {
-                    **m["format"],
-                    "options": dict(m["format"].get("options") or []),
-                }
-                row["metaData"] = m
-            rows.append(row)
-        with open(top + ".tmp", "w") as fh:
-            for r in rows:
-                fh.write(json.dumps(r) + "\n")
-        os.rename(top + ".tmp", top)
-    else:
-        top = os.path.join(
-            _log_dir(path), f"{v:020d}.checkpoint.{u}.parquet"
-        )
-        pq.write_table(table, top + ".tmp")
-        os.rename(top + ".tmp", top)
-    lc = os.path.join(_log_dir(path), "_last_checkpoint")
-    with open(lc + ".tmp", "w") as fh:
-        json.dump({"version": v, "size": rows_n}, fh)
-    os.rename(lc + ".tmp", lc)
+    _point_last_checkpoint(path, {"version": v, "size": len(top)})
     return v
 
 

@@ -253,7 +253,7 @@ class VersionedTable:
         df: DataFrame,
         mode: str = "append",
         max_retries: int = 64,
-        extra: dict[str, Any] | None = None,
+        txn: tuple[str, int] | None = None,
         bloom_cols: list[str] | None = None,
         bloom_bits: int = 65536,
         bloom_hashes: int = 4,
@@ -279,9 +279,11 @@ class VersionedTable:
         new head (so a concurrent append's files are retained) and the next
         number is tried — no commit is ever silently dropped.
 
-        ``extra`` is recorded verbatim in the manifest — the hook streaming
-        sinks use to stamp each commit with its micro-batch id, making
-        replayed batches detectable (see ``committed_extras``).
+        ``txn=(app, batch_id)`` records ``batch_id`` as writer ``app``'s
+        high-water mark in the manifest's ``txns`` map, which every later
+        manifest carries forward (Delta's ``txn`` action): the hook
+        streaming sinks use to make replayed batches detectable (see
+        ``txn_version``).
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
@@ -300,12 +302,15 @@ class VersionedTable:
         for _ in range(max_retries):
             prev = self.latest_version()
             version = 0 if prev is None else prev + 1
+            pm_raw = {} if prev is None else self._read_manifest_raw(prev)
+            txns = dict(pm_raw.get("txns", {}))
+            if txn is not None:
+                txns[txn[0]] = txn[1]
             if mode == "overwrite" or prev is None:
                 segments = [seg]
                 schema = df_schema
                 n_files = len(new_files)
             else:
-                pm_raw = self._read_manifest_raw(prev)
                 segments = pm_raw["segments"] + [seg]
                 # Schema-in-the-log (Delta's pattern): the manifest records
                 # the table schema so readers never pay plan-time footer
@@ -325,8 +330,8 @@ class VersionedTable:
             }
             if schema is not None:
                 manifest["schema"] = schema
-            if extra:
-                manifest["extra"] = extra
+            if txns:
+                manifest["txns"] = txns
             if self._try_publish(version, manifest):
                 return version
         raise RuntimeError(
@@ -422,12 +427,13 @@ class VersionedTable:
                 "n_added": len(new_files),
                 "n_files": len(new_files) + len(survivors),
             }
-            # Content rewrites never change the table schema: carry the
-            # head's recorded schema-in-the-log forward (re-read inside the
-            # retry loop, so a racing append's schema evolution is kept).
-            prev_schema = self._read_manifest_raw(prev).get("schema")
-            if prev_schema is not None:
-                manifest["schema"] = prev_schema
+            # Content rewrites change neither the table schema nor any
+            # writer's txn high-water mark: carry the head's forward (read
+            # inside the retry loop, so a racing append's schema evolution
+            # and txn are kept).
+            for key in ("schema", "txns"):
+                if key in pm:
+                    manifest[key] = pm[key]
             if self._try_publish(version, manifest):
                 return version
         raise RuntimeError(f"{op} lost the version race {max_retries} times")
@@ -1107,16 +1113,15 @@ class VersionedTable:
             raise ValueError(f"{dest_root} already has commits")
         return dest
 
-    def committed_extras(self, key: str) -> set:
-        """All values of ``extra[key]`` across committed manifests — e.g.
-        the streaming sinks' txn ledger. O(versions) metadata reads, no
-        data I/O."""
-        out = set()
-        for v in self.versions():
-            m = self._read_manifest_raw(v)  # extras live in the manifest,
-            if key in m.get("extra", {}):  # no segment resolution
-                out.add(m["extra"][key])
-        return out
+    def txn_version(self, app: str) -> int | None:
+        """Writer ``app``'s high-water batch id — the last ``txn`` it
+        committed — or ``None`` if it never committed. One read of the
+        head manifest: every commit and rewrite carries the ``txns`` map
+        forward, so ``vacuum`` cannot lose it."""
+        head = self.latest_version()
+        if head is None:
+            return None
+        return self._read_manifest_raw(head).get("txns", {}).get(app)
 
     # -- read path ---------------------------------------------------------
 

@@ -485,9 +485,9 @@ def stream_ingest_near_dedup_to_versioned(
     to per-doc, keep non-dups, re-join the full rows from `static_docs`
     (at scale: the payload store keyed by doc_id — the stateful operator
     carries only ids+flags, never document bodies), commit through
-    `streaming.sinks._exactly_once`. A replayed batch finds its txn stamp
-    already in the commit log and skips, so the table gains exactly one
-    version per batch regardless of retries.
+    `streaming.sinks._exactly_once`. A replayed batch is at or below the
+    writer's txn high-water mark and skips, so the table gains exactly
+    one version per batch regardless of retries.
     """
     from pyspark.sql import functions as F
 

@@ -15,9 +15,10 @@ streaming sinks and the `VersionedTable` commit log are the answer here:
   `stream_cdc_upsert`, `stream_cdc_with_tombstones` and
   `streaming.dedup.stream_ingest_near_dedup_to_versioned`): every
   micro-batch is ONE commit to a `VersionedTable`, made by
-  `_exactly_once`. The commit is stamped with the writer's
-  ``(app, batch_id)`` txn; a batch that Structured Streaming replays
-  after a crash finds its txn in the log and commits nothing. Append
+  `_exactly_once`. The commit records ``batch_id`` as the writer
+  ``app``'s txn high-water mark, which every later manifest carries
+  forward; a batch that Structured Streaming replays after a crash is at
+  or below that mark and commits nothing. Append
   sinks add the batch's rows. Snapshot sinks read the previous snapshot
   with `VersionedTable.read()`, merge the batch into it and publish the
   merged snapshot with ``mode="overwrite"``. Either way a version is
@@ -41,22 +42,23 @@ def _exactly_once(vt: VersionedTable, app: str):
     """The one exactly-once commit rule for streaming writes to ``vt``:
     returns ``commit(batch_df, batch_id, frame=None, mode="append")``,
     which publishes ``frame`` (default: ``batch_df``) as one version
-    stamped ``extra={"txn": f"{app}#{batch_id}", "app_id", "batch_id"}``
-    and returns its number.
+    stamped ``txn=(app, batch_id)`` and returns its number.
 
-    The txn ledger is read from the log ONCE, here, per run; the returned
-    function adds this run's own commits to it. A batch whose txn is
-    already in the ledger (a replay after the driver died between the
-    commit and the checkpoint write) commits nothing and returns ``None``,
-    but ``batch_df`` is still drained with a ``noop`` write: Spark 4
-    checks that every stateful operator upstream of the sink committed
-    its per-partition state for the batch.
+    The writer's high-water batch id is read from the head manifest ONCE,
+    here, per run; the returned function advances it with this run's own
+    commits. A batch at or below it (a replay after the driver died
+    between the commit and the checkpoint write) commits nothing and
+    returns ``None``, but ``batch_df`` is still drained with a ``noop``
+    write: Spark 4 checks that every stateful operator upstream of the
+    sink committed its per-partition state for the batch. Every manifest
+    carries the high-water marks forward, so ``optimize`` and ``vacuum``
+    leave the rule intact.
 
-    ``app`` scopes the ledger to one writer. Two queries writing the same
-    table both start at batch id 0; a bare batch-id key would skip the
+    ``app`` scopes the mark to one writer. Two queries writing the same
+    table both start at batch id 0; a table-wide mark would skip the
     second query's batches as already committed (Delta's ``txnAppId``
     exists for the same reason)."""
-    done = vt.committed_extras("txn")
+    high = vt.txn_version(app)
 
     def commit(
         batch_df: DataFrame,
@@ -64,16 +66,14 @@ def _exactly_once(vt: VersionedTable, app: str):
         frame: DataFrame | None = None,
         mode: str = "append",
     ) -> int | None:
-        txn = f"{app}#{batch_id}"
-        if txn in done:
+        nonlocal high
+        if high is not None and batch_id <= high:
             batch_df.write.format("noop").mode("overwrite").save()
             return None
         v = vt.commit(
-            batch_df if frame is None else frame,
-            mode,
-            extra={"txn": txn, "app_id": app, "batch_id": batch_id},
+            batch_df if frame is None else frame, mode, txn=(app, batch_id)
         )
-        done.add(txn)
+        high = batch_id
         return v
 
     return commit
@@ -241,17 +241,17 @@ def stream_to_versioned(
     stamped with its writer-scoped ``(app_id, batch_id)`` pair. Idempotence
     is end-to-end: if the driver dies between a commit and the checkpoint
     write, Structured Streaming replays the batch — the sink sees the
-    batch id already in the commit log and skips, so the table gains
-    exactly one version per batch no matter how many times a batch is
-    delivered. (This is the Delta `txnAppId`/`txnVersion`
+    batch id at or below the writer's high-water mark and skips, so the
+    table gains exactly one version per batch no matter how many times a
+    batch is delivered. (This is the Delta `txnAppId`/`txnVersion`
     idempotent-writer pattern on our own log.)
 
     The idempotence key is scoped per WRITER: ``app_id`` defaults to the
     checkpoint dir, which uniquely identifies a streaming query. Two
     different queries writing to the same table both start at batch id 0 —
-    a bare batch-id key would silently skip the second query's batches as
-    "already committed" (data loss); the (app_id, batch_id) pair keeps
-    their ledgers independent, exactly why Delta's pattern includes
+    a table-wide mark would silently skip the second query's batches as
+    "already committed" (data loss); one mark per ``app_id`` keeps the
+    writers independent, exactly why Delta's pattern includes
     txnAppId.
 
     Downstream, every version is a consistent snapshot: readers time-travel
@@ -261,17 +261,19 @@ def stream_to_versioned(
     don't parse `_spark_metadata`).
 
     Scale: the commit itself is the executor-parallel parquet write plus
-    one manifest conditional-put; the txn-ledger scan (`_exactly_once`) is
-    O(versions) metadata, once per run.
+    one manifest conditional-put; the high-water read (`_exactly_once`)
+    is one head-manifest read per run.
 
     ``autocompact_files`` is Delta's auto-compaction: when a commit leaves
     the manifest holding at least that many files, the sink runs an
     INCREMENTAL ``optimize(small_only_bytes=autocompact_bytes)`` inline —
     only sub-threshold files rewrite (O(recent ingest), never O(table)),
     so a long-running stream cannot accrete the small-file problem faster
-    than it cleans it up. Exactly-once is unaffected: compaction is
-    content-identical and batch replays are skipped by txn id before any
-    compaction runs. Trade-off, documented honestly: ``changes()`` refuses
+    than it cleans it up. Exactly-once survives compaction and
+    ``vacuum``: the compaction commit carries every writer's txn
+    high-water mark forward like any other manifest, so a batch replayed
+    after ``vacuum(keep_last=1)`` dropped the manifest of its own commit
+    is still skipped. Trade-off, documented honestly: ``changes()`` refuses
     ranges that cross a compaction commit, so a change-feed consumer must
     checkpoint at or after each compaction point (the same CDF-vs-
     auto-optimize tension Delta documents).

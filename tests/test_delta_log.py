@@ -3307,17 +3307,17 @@ class TestProtocolCheckpointCdfExamples:
 
     def test_checkpoint_names_match_spec_examples(self):
         from rtcdb_spark.sources.delta_log import (
-            _checkpoint_part_path,
-            _checkpoint_path,
+            _checkpoint_name,
+            _parse_checkpoint_name,
         )
 
-        assert os.path.basename(_checkpoint_path("t", 10)) == (
-            self.SPEC_CLASSIC
-        )
+        assert _checkpoint_name(10) == self.SPEC_CLASSIC
         assert [
-            os.path.basename(_checkpoint_part_path("t", 10, p, 3))
-            for p in (1, 2, 3)
+            _checkpoint_name(10, p, 3) for p in (1, 2, 3)
         ] == self.SPEC_PARTS
+        assert [
+            _parse_checkpoint_name(n) for n in self.SPEC_PARTS
+        ] == [(10, p, 3) for p in (1, 2, 3)]
 
     def _foreign_checkpoint_table(self, spark, tmp_path):
         """A table whose ONLY history is a hand-built (pyarrow, not our
@@ -3567,14 +3567,10 @@ class TestProtocolCheckpointCdfExamples:
             r["k"] for r in read_delta(spark, path).collect()
         ) == [1, 2]
         # an incomplete part set must refuse, not fold partially: the
-        # checkpoint detector drops it (so the table has no usable
-        # history at all) and a direct part fold names the gap
+        # checkpoint detector drops it, so the table has no usable
+        # history at all
         os.remove(os.path.join(log, self.SPEC_PARTS[2]))
-        from rtcdb_spark.sources.delta_log import _checkpoint_files
-
         assert delta_checkpoints(path) == []
-        with pytest.raises(ValueError, match="missing parts"):
-            _checkpoint_files(path, 10)
         with pytest.raises(ValueError, match="no _delta_log commits"):
             read_delta(spark, path)
 

@@ -1,7 +1,7 @@
 """Streaming sinks keep one exactly-once commit rule and no directory swap.
 
-`streaming.sinks._exactly_once` is the only reader of the txn ledger
-(`VersionedTable.committed_extras`), and nothing under
+`streaming.sinks._exactly_once` is the only reader of a writer's txn
+high-water mark (`VersionedTable.txn_version`), and nothing under
 `rtcdb_spark/streaming/` renames or recursively deletes directories: every
 sink publishes through a `VersionedTable` commit. Static AST scan, no Spark.
 """
@@ -31,12 +31,12 @@ def _calls(path: Path):
                 yield f"{rel}:{scope}", f.id, None
 
 
-def test_committed_extras_called_only_by_the_ledger_function():
+def test_txn_version_called_only_by_the_ledger_function():
     callers = [
         where
         for path in sorted(PKG.rglob("*.py"))
         for where, name, _recv in _calls(path)
-        if name == "committed_extras"
+        if name == "txn_version"
     ]
     assert callers == ["streaming/sinks.py:_exactly_once"], callers
 

@@ -467,11 +467,12 @@ def test_cdc_upsert_each_version_is_the_batch_answer_so_far(spark, tmp_path):
     batches = _cdc_batches()
     stream = _file_stream(spark, str(tmp_path / "in"), batches)
     out = str(tmp_path / "snap")
-    stream_cdc_upsert(stream(), out, str(tmp_path / "ckpt"))
+    ckpt = str(tmp_path / "ckpt")
+    stream_cdc_upsert(stream(), out, ckpt)
     vt = VersionedTable(spark, out)
     assert vt.versions() == list(range(len(batches)))
     for v in vt.versions():
-        k = vt._read_manifest_raw(v)["extra"]["batch_id"]
+        k = vt._read_manifest_raw(v)["txns"][ckpt]
         latest: dict = {}
         for r in (r for batch in batches[: k + 1] for r in batch):
             if r[2] not in latest or (r[1], r[0]) > (latest[r[2]][1], latest[r[2]][0]):
@@ -783,6 +784,43 @@ def test_versioned_sink_autocompact_bounds_file_count(
         autocompact_files=2, autocompact_bytes=1 << 30,
     )
     assert len(vt.versions()) == n_versions
+
+
+def test_versioned_sink_replay_after_compaction_and_vacuum_commits_nothing(
+    spark, sf_smoke, stream_dir, tmp_path
+):
+    """The writer's txn high-water mark rides in every manifest, so the
+    sink's auto-compaction commit carries it and a vacuum that keeps only
+    that commit loses nothing: replaying the last batch from the SAME
+    checkpoint (crash between commit and checkpoint write) commits no
+    version and no row."""
+    import os
+
+    from rtcdb_spark.sources.versioned import VersionedTable
+    from rtcdb_spark.streaming.sinks import stream_to_versioned
+
+    def _run():
+        stream_to_versioned(
+            spark.readStream.schema(spark.read.parquet(stream_dir).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stream_dir),
+            table, ckpt, autocompact_files=2, autocompact_bytes=1 << 30,
+        )
+
+    table, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+    _run()
+    vt = VersionedTable(spark, table)
+    assert vt._read_manifest_raw(vt.latest_version())["op"] == "optimize"
+    vt.vacuum(keep_last=1, retention_seconds=0)
+    assert len(vt.versions()) == 1
+    want = sorted(r.event_id for r in spark.read.parquet(stream_dir).collect())
+    assert sorted(r.event_id for r in vt.read().collect()) == want
+
+    dropped = _forget_last_commit(ckpt)
+    _run()
+    assert os.path.exists(dropped), "the last batch was not replayed"
+    assert len(vt.versions()) == 1
+    assert sorted(r.event_id for r in vt.read().collect()) == want
 
 
 def test_versioned_sink_autocompact_zorder_clusters(

@@ -185,18 +185,26 @@ class TestMultiWriter:
 
 
 class TestBatchIdIdempotence:
-    def test_extra_metadata_roundtrip_and_skip(self, spark, tmp_path):
+    def test_txn_high_water_survives_rewrites_and_vacuum(self, spark, tmp_path):
         from rtcdb_spark.sources.versioned import VersionedTable
 
         t = VersionedTable(spark, str(tmp_path / "vt"))
         df = spark.range(10).selectExpr("id AS k")
-        t.commit(df, extra={"batch_id": 0})
-        t.commit(df, extra={"batch_id": 1})
-        t.commit(df)  # non-streaming commit, no extra
-        assert t.committed_extras("batch_id") == {0, 1}
-        # the sink's gate: replaying batch 1 must be detectable
-        assert 1 in t.committed_extras("batch_id")
-        assert 2 not in t.committed_extras("batch_id")
+        assert t.txn_version("a") is None
+        t.commit(df, txn=("a", 0))
+        t.commit(df, txn=("a", 1))
+        t.commit(df, txn=("b", 0))
+        t.commit(df)  # non-streaming commit: carries the marks forward
+        # the sink's gate: replaying batch 1 of writer "a" is detectable
+        assert [t.txn_version(app) for app in "abc"] == [1, 0, None]
+        # a rewrite (optimize, merge and delete share its publish step)
+        # and an overwrite carry them too, so a vacuum that keeps only the
+        # last version keeps them
+        t.optimize()
+        t.commit(df, mode="overwrite")
+        t.vacuum(keep_last=1, retention_seconds=0)
+        assert len(t.versions()) == 1
+        assert [t.txn_version(app) for app in "abc"] == [1, 0, None]
 
 
 class TestOptimize:
