@@ -143,27 +143,30 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "index"),
 )
 def source_indexed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest-pruned scan (the reference's sparse-index read path,
-    README.md:51-56, at file granularity — see sources/manifest.py): rewrite
-    lineitem range-partitioned+sorted by l_shipdate into many files, build the
-    per-file min/max manifest, then answer a date-range aggregate through
-    ``pruned_scan`` — only files whose [min,max] intersects the range are read.
-    The oracle computes the same aggregate on the original table, so a file
-    wrongly skipped (unsound pruning) or double-read would mismatch."""
-    from rtcdb_spark.sources.manifest import build_file_index, pruned_scan
+    """Zone-map-pruned scan (the reference's sparse-index read path,
+    README.md:51-56, at file granularity): commit lineitem
+    range-partitioned+sorted by l_shipdate as 8 files of a
+    ``VersionedTable``, whose commit records each file's footer min/max,
+    then answer a date-range aggregate through ``read_pruned`` — only
+    files whose [min, max] meets the range are read. The bounds are ISO
+    text, which ``zonemap.decode`` parses by the column's recorded type.
+    The oracle computes the same aggregate on the original table, so a
+    file wrongly skipped (unsound pruning) or double-read would mismatch."""
+    import shutil
 
-    out = os.path.join(_IO_ROOT, "lineitem_by_shipdate")
-    li = load_table(spark, sf_dir, "lineitem")
-    (
-        li.repartitionByRange(8, "l_shipdate")
+    from rtcdb_spark.sources.versioned import VersionedTable
+
+    root = os.path.join(_IO_ROOT, "lineitem_by_shipdate")
+    shutil.rmtree(root, ignore_errors=True)
+    vt = VersionedTable(spark, root)
+    vt.commit(
+        load_table(spark, sf_dir, "lineitem")
+        .repartitionByRange(8, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
-        .write.mode("overwrite")
-        .parquet(out)
     )
-    build_file_index(spark, out, ["l_shipdate"])
-    lo = F.lit("1995-03-01").cast("timestamp")
-    hi = F.lit("1995-08-31").cast("timestamp")
-    pruned = pruned_scan(spark, out, {"l_shipdate": (lo, hi)})
+    pruned = vt.read_pruned(
+        "l_shipdate", "1995-03-01 00:00:00", "1995-08-31 00:00:00"
+    )
     return (
         pruned.groupBy("l_returnflag")
         .agg(

@@ -38,6 +38,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # events.parquet stores ts as timestamp[ns], which Spark's reader rejects;
     # read it as a long and convert in sources.tables.load_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # INT96 (Spark's default for `timestamp`) carries no footer min/max, so
+    # zone maps could never prune an engine-written timestamp column.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Constraint propagation OFF: this Spark build's Union.rewriteConstraints
     # intermittently throws `NoSuchElementException: key not found: <attr>`
     # when a union child's Project carries alias constraints referencing

@@ -1,5 +1,4 @@
 from rtcdb_spark.sources.layout import compact, write_partitioned
-from rtcdb_spark.sources.manifest import build_file_index, pruned_scan
 from rtcdb_spark.sources.versioned import VersionedTable
 from rtcdb_spark.sources.tables import (
     TABLE_NAMES,
@@ -11,9 +10,7 @@ from rtcdb_spark.sources.tables import (
 __all__ = [
     "VersionedTable",
     "TABLE_NAMES",
-    "build_file_index",
     "compact",
-    "pruned_scan",
     "load_all",
     "load_table",
     "write_bucketed",

@@ -135,6 +135,7 @@ refuse mismatched commits the way real Delta writers do.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
@@ -1596,8 +1597,6 @@ def _pv_str(v) -> str | None:
     """A partition value in the protocol's STRING serialization (null =
     null, booleans lowercase, dates/timestamps ISO — the same rendering
     Spark's hive-layout writer produces for the log)."""
-    import datetime
-
     if v is None:
         return None
     if isinstance(v, bool):
@@ -3462,7 +3461,7 @@ def _stats_disjoint(a_stats: str | None, r_stats: str | None) -> bool:
         vals = (amin[c], amax[c], rmin[c], rmax[c])
         if not all(isinstance(x, num) and not isinstance(x, bool) for x in vals):
             continue
-        if amin[c] > rmax[c] or amax[c] < rmin[c]:
+        if not zonemap.may_overlap(*vals):
             return True
     return False
 
@@ -5008,7 +5007,9 @@ def delta_plan_files(
     truncated, unpadded prefix of the true max, which is a LOWER bound
     and proves nothing. The min side stays usable either way: a
     truncated/widened min only under-states, which keeps more files,
-    never fewer.
+    never fewer. Timestamp stats are millisecond text in the protocol
+    (Delta Spark truncates them), so a recorded timestamp max is widened
+    by 1 ms before the test.
     ``col`` is the LOGICAL column name; on column-mapped tables it is
     translated to the physical stats key. When ``col`` IS a partition
     column, pruning uses the add actions' exact partitionValues (parsed
@@ -5055,8 +5056,8 @@ def _plan_snapshot_files(
         # fast-wrong.
         return sorted(adds)
     is_string = isinstance(col_dt, StringType)
-    if col_dt is not None:
-        lo, hi = (zonemap.decode(b, col_dt.simpleString()) for b in (lo, hi))
+    type_name = None if col_dt is None else col_dt.simpleString()
+    lo, hi = (zonemap.decode(b, type_name) for b in (lo, hi))
     pv_parse = None
     if key in pcols:
         dt = next(
@@ -5093,6 +5094,13 @@ def _plan_snapshot_files(
                     if mn is not None and mx is not None:
                         # non-tight string max: see delta_plan_files
                         loose = is_string and st.get("tightBounds") is False
+                        if type_name in ("timestamp", "timestamp_ntz"):
+                            # the protocol records timestamp stats to the
+                            # millisecond: the true max may lie up to 1 ms
+                            # past the recorded one (unparseable text
+                            # raises here and keeps the file)
+                            ms = datetime.timedelta(milliseconds=1)
+                            mx = zonemap.decode(mx, type_name) + ms
                         bounds = (mn, None if loose else mx)
                 except (ValueError, TypeError):
                     pass

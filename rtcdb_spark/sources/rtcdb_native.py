@@ -91,6 +91,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from rtcdb_spark.sources import zonemap
+
 ROWS_PER_BLOCK = 1024  # reference src/storage.rs:17
 _ENTRY = struct.Struct(">QQQ8s8s")  # start, csize, dsize, min8, max8
 
@@ -489,31 +491,28 @@ def plan_blocks(
 ) -> tuple[list[int], int]:
     """Zone-map block planning from the sparse index: returns the surviving
     block ids (and the total) for an optional closed-interval predicate
-    ``(col, lo, hi)``. Sound under the format's 8-byte string prefixes:
-    a block is skipped only when ``stored_min > hi`` (stored min is a
-    prefix, hence <= the true min) or ``stored_max+0xff.. < lo``
-    (prefix strictly below lo's own 8-byte prefix)."""
+    ``(col, lo, hi)``, kept by ``zonemap.may_overlap``. Sound under the
+    format's 8-byte string prefixes: each entry and bound is compared as
+    its 8-byte UTF-8 prefix (the stored min with its NUL padding
+    stripped), so a block is skipped only when ``stored_min > hi[:8]``
+    (stored min is a prefix, hence <= the true min) or ``lo[:8] >
+    stored_max`` (every value in the block has a prefix below lo's own)."""
     t = next(t for t in meta["tables"] if t["name"] == table)
     n_blocks = len(read_index(root, table, t["columns"][0]["name"]))
     if predicate is None:
         return list(range(n_blocks)), n_blocks
     col, lo, hi = predicate
     dtype = next(c["dtype"] for c in t["columns"] if c["name"] == col)
+    if dtype != "Uint64":
+        lo, hi = (None if b is None else str(b).encode("utf-8")[:8] for b in (lo, hi))
     keep = []
     for i, (_s, _cs, _ds, lo8, hi8) in enumerate(read_index(root, table, col)):
         if dtype == "Uint64":
-            bmin = struct.unpack(">Q", lo8)[0]
-            bmax = struct.unpack(">Q", hi8)[0]
-            if (hi is not None and bmin > hi) or (lo is not None and bmax < lo):
-                continue
+            bmin, bmax = struct.unpack(">Q", lo8)[0], struct.unpack(">Q", hi8)[0]
         else:
-            lob = None if lo is None else str(lo).encode("utf-8")[:8]
-            hib = None if hi is None else str(hi).encode("utf-8")[:8]
-            if (hib is not None and lo8.rstrip(b"\0") > hib) or (
-                lob is not None and hi8 < lob
-            ):
-                continue
-        keep.append(i)
+            bmin, bmax = lo8.rstrip(b"\0"), hi8
+        if zonemap.may_overlap(bmin, bmax, lo, hi):
+            keep.append(i)
     return keep, n_blocks
 
 

@@ -750,14 +750,14 @@ class VersionedTable:
         versioned-table form of the reference's A8 ``get_min``/``get_max``
         served from its sparse index without block decodes
         (reference src/lib.rs get_min/get_max, README.md:49). Exact for
-        numeric, boolean, date and ``timestamp_ntz`` columns (footer
-        min/max are exact there); date and timestamp results are
+        numeric, boolean, date and timestamp columns (footer min/max are
+        exact there); date and timestamp results are naive-UTC
         ``date``/``datetime`` values when the version records its schema.
         Long string values can be writer-truncated in footers, so treat
         string results as bounds, same as the pruning path does. Raises
         if the column has no stats anywhere (an all-NULL or binary column,
-        or a ``timestamp`` column, which Spark writes as INT96 with no
-        footer min/max — the caller must scan)."""
+        or a file written as INT96 with no footer min/max — the caller
+        must scan)."""
         m = self._read_manifest(self._resolve(version))
         type_name = self._column_types(m).get(col)
         mn = mx = None

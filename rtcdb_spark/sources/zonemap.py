@@ -1,11 +1,12 @@
-"""Zone maps for the commit-log tables: per-file column min/max and the
-one rule that prunes with them — skip a file only when its stats prove
-that no row can match (the reference's sparse index, src/storage.rs:72-106).
-``VersionedTable``, the Delta log and ``Database.indexed_scan`` all read
-footers through ``footer_stats``, read stats and bounds for a column's type
-through ``decode``, keep files by ``may_overlap`` and re-filter rows with
-``interval_filter``, so the stats format and the overlap test have one
-definition."""
+"""Zone maps for every table the engine writes: per-file column min/max
+and the one rule that prunes with them — skip a file only when its stats
+prove that no row can match (the reference's sparse index,
+src/storage.rs:72-106). ``VersionedTable``, the Delta log and
+``Database.indexed_scan`` all read footers through ``footer_stats``, read
+stats and bounds for a column's type through ``decode``, keep files by
+``may_overlap`` and re-filter rows with ``interval_filter``; the native
+format's block planner keeps blocks by ``may_overlap`` too. So the stats
+format and the overlap test have one definition."""
 
 from __future__ import annotations
 

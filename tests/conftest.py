@@ -17,6 +17,20 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def utc_process(monkeypatch):
+    """Pin this process's time zone to UTC, the session's: PySpark reads
+    naive datetime literals and ``collect()`` renders ``timestamp``
+    values in the process time zone, zone maps read them as naive UTC."""
+    import time
+
+    monkeypatch.setenv("TZ", "UTC")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

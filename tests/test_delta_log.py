@@ -3012,7 +3012,8 @@ class TestDataSkippingZorder:
         assert st["minValues"]["s"] == "0" and st["maxValues"]["s"] == "6"
         assert st["nullCount"]["k"] == 0
 
-    def test_timestamp_ntz_bounds_prune_and_read_exact(self, spark, tmp_path):
+    @staticmethod
+    def _check_timestamp_bounds(spark, tmp_path, type_name):
         import datetime as dt
 
         from rtcdb_spark.sources.delta_log import delta_plan_files, read_delta_pruned
@@ -3022,7 +3023,7 @@ class TestDataSkippingZorder:
             spark.range(400)
             .select(
                 "id",
-                F.expr("CAST(timestamp_seconds(id * 3600 + 0.25) AS timestamp_ntz)")
+                F.expr(f"CAST(timestamp_seconds(id * 3600 + 0.25) AS {type_name})")
                 .alias("ts"),
             )
             .repartitionByRange(4, "id"),
@@ -3044,6 +3045,100 @@ class TestDataSkippingZorder:
         )
         assert [r[0] for r in want] == list(range(96, 108))
         assert _rows(read_delta_pruned(spark, path, "ts", lo, hi)) == want
+
+    def test_timestamp_ntz_bounds_prune_and_read_exact(self, spark, tmp_path):
+        self._check_timestamp_bounds(spark, tmp_path, "timestamp_ntz")
+
+    def test_timestamp_bounds_prune_and_read_exact(self, spark, tmp_path, utc_process):
+        self._check_timestamp_bounds(spark, tmp_path, "timestamp")
+
+    @staticmethod
+    def _foreign_table(path, table, stats, **write_kw):
+        """A one-commit Delta table over one pyarrow-written file with
+        columns ``id long, ts timestamp`` and the given add ``stats``."""
+        import pyarrow.parquet as pq
+
+        os.makedirs(os.path.join(path, "_delta_log"))
+        full = os.path.join(path, "part-0.parquet")
+        pq.write_table(table, full, **write_kw)
+        schema = {"type": "struct", "fields": [
+            {"name": "id", "type": "long", "nullable": True, "metadata": {}},
+            {"name": "ts", "type": "timestamp", "nullable": True, "metadata": {}},
+        ]}
+        add = {"path": "part-0.parquet", "partitionValues": {},
+               "size": os.path.getsize(full), "modificationTime": 0,
+               "dataChange": True, "stats": json.dumps(stats(full))}
+        with open(os.path.join(path, "_delta_log", f"{0:020d}.json"), "w") as fh:
+            for a in [
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+                {"metaData": {
+                    "id": "m", "format": {"provider": "parquet", "options": {}},
+                    "schemaString": json.dumps(schema),
+                    "partitionColumns": [], "configuration": {},
+                    "createdTime": 0}},
+                {"add": add},
+            ]:
+                fh.write(json.dumps(a) + "\n")
+
+    def test_millisecond_timestamp_max_keeps_its_file(self, spark, tmp_path, utc_process):
+        """The protocol records timestamp stats to the millisecond, as
+        Delta Spark writes them: a recorded max of 12:00:00.000 is the
+        truncation of any value up to 12:00:00.000999."""
+        import datetime as dt
+
+        import pyarrow as pa
+
+        from rtcdb_spark.sources.delta_log import delta_plan_files, read_delta_pruned
+
+        path = str(tmp_path / "ms")
+        value = dt.datetime(2024, 1, 1, 12, 0, 0, 900, tzinfo=dt.timezone.utc)
+        table = pa.table({"id": pa.array([1], pa.int64()),
+                          "ts": pa.array([value], pa.timestamp("us", tz="UTC"))})
+        self._foreign_table(path, table, lambda _full: {
+            "numRecords": 1,
+            "minValues": {"id": 1, "ts": "2024-01-01T12:00:00.000Z"},
+            "maxValues": {"id": 1, "ts": "2024-01-01T12:00:00.000Z"},
+            "nullCount": {"id": 0, "ts": 0},
+        })
+        lo = "2024-01-01 12:00:00.0005"
+        assert delta_plan_files(path, "ts", lo, None) == (["part-0.parquet"], 1)
+        got = _rows(read_delta_pruned(spark, path, "ts", lo, None))
+        assert got == [(1, value.replace(tzinfo=None))]
+        # a bound past the widened max still prunes
+        assert delta_plan_files(path, "ts", "2024-01-01 12:00:00.002", None) == ([], 1)
+
+    def test_legacy_int96_file_is_never_pruned(self, spark, tmp_path, utc_process):
+        """A legacy INT96 timestamp file has no footer min/max, so the
+        stats the engine records for it omit ``ts`` and every plan on
+        ``ts`` keeps it; an engine-written file next to it still prunes."""
+        import datetime as dt
+
+        import pyarrow as pa
+
+        from rtcdb_spark.sources.delta_log import (
+            _file_stats,
+            delta_plan_files,
+            read_delta_pruned,
+        )
+
+        path = str(tmp_path / "int96")
+        old = [dt.datetime(1970, 1, 1, h) for h in range(24)]
+        table = pa.table({"id": pa.array(range(24), pa.int64()),
+                          "ts": pa.array(old, pa.timestamp("us"))})
+        self._foreign_table(path, table, _file_stats,
+                            use_deprecated_int96_timestamps=True)
+        append_delta(
+            spark.range(1)
+            .coalesce(1)
+            .selectExpr("99L AS id", "TIMESTAMP '2000-01-01' AS ts"),
+            path,
+        )
+        lo, hi = dt.datetime(1970, 1, 1, 5), dt.datetime(1970, 1, 1, 7)
+        assert delta_plan_files(path, "ts", lo, hi) == (["part-0.parquet"], 2)
+        got = _rows(read_delta_pruned(spark, path, "ts", lo, hi))
+        assert got == [(h, old[h]) for h in (5, 6, 7)]
+        keep, _ = delta_plan_files(path, "ts", dt.datetime(1999, 1, 1), None)
+        assert len(keep) == 2
 
     def test_plan_files_prunes_and_stays_sound(self, spark, tmp_path):
         from rtcdb_spark.sources.delta_log import (

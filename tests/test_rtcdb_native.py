@@ -10,7 +10,7 @@ from __future__ import annotations
 import struct
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from rtcdb_spark.sources.rtcdb_native import (
@@ -192,13 +192,14 @@ def test_datasource_filter_pushdown_prunes_blocks(spark, tmp_path):
 @settings(**SETTINGS)
 @given(
     words=st.lists(
-        st.text(alphabet="abcz", min_size=0, max_size=12),
+        st.text(alphabet="abcz\0", min_size=0, max_size=12),
         min_size=1,
         max_size=300,
     ),
-    lo=st.text(alphabet="abcz", min_size=0, max_size=10),
-    span=st.text(alphabet="abcz", min_size=0, max_size=4),
+    lo=st.text(alphabet="abcz\0", min_size=0, max_size=10),
+    span=st.text(alphabet="abcz\0", min_size=0, max_size=4),
 )
+@example(words=["a", "a\0", "a\0\0b", "abcdefgh\0z"] * 300, lo="a\0", span="\0")
 def test_string_zone_map_pruning_is_sound(spark, tmp_path_factory, words, lo, span):
     """String pruning uses the format's 8-byte index prefixes (truncation
     UNDERSTATES the max), so it must stay conservative: blocks surviving

@@ -20,6 +20,20 @@ def vt(spark, tmp_path):
     return VersionedTable(spark, str(tmp_path / "tbl"))
 
 
+def _hourly(spark, type_name):
+    """400 rows, one an hour from 1970-01-01 00:00:00.25, with ``ts`` of
+    ``type_name``, range-partitioned into 4 files."""
+    return (
+        spark.range(400)
+        .select(
+            "id",
+            F.expr(f"CAST(timestamp_seconds(id * 3600 + 0.25) AS {type_name})")
+            .alias("ts"),
+        )
+        .repartitionByRange(4, "id")
+    )
+
+
 def _batch(spark, lo, hi):
     return spark.range(lo, hi).select(
         F.col("id"), (F.col("id") * 10).alias("val")
@@ -609,19 +623,12 @@ class TestDataSkipping:
         assert _rows(t.read_pruned("s", "y", None)) == want
         assert _rows(t.read_where("s >= 'y'")) == want
 
-    def test_timestamp_ntz_prunes_and_min_max(self, spark, tmp_path):
+    @staticmethod
+    def _check_timestamp_prunes(spark, tmp_path, type_name):
         import datetime as dt
 
         t = VersionedTable(spark, str(tmp_path / "vt"))
-        t.commit(
-            spark.range(400)
-            .select(
-                "id",
-                F.expr("CAST(timestamp_seconds(id * 3600 + 0.25) AS timestamp_ntz)")
-                .alias("ts"),
-            )
-            .repartitionByRange(4, "id")
-        )
+        t.commit(_hourly(spark, type_name))
         lo, hi = dt.datetime(1970, 1, 2), dt.datetime(1970, 1, 3)
         keep, total = t.plan_files("ts", lo, hi)
         assert len(keep) < total == 4
@@ -637,6 +644,48 @@ class TestDataSkipping:
         true_min, true_max = t.read().agg(F.min("ts"), F.max("ts")).first()
         assert t.min_max("ts") == (true_min, true_max)
         assert isinstance(true_min, dt.datetime)
+        # a range past every file keeps none and still reads the schema
+        assert t.plan_files("ts", "1971-01-01 00:00:00", None)[0] == []
+        empty = t.read_pruned("ts", "1971-01-01 00:00:00", None)
+        assert empty.columns == ["id", "ts"] and empty.count() == 0
+        # a pre-Gregorian value is written and read back unchanged
+        old = dt.datetime(1500, 3, 1, 12)
+        t.commit(
+            spark.range(1)
+            .coalesce(1)
+            .selectExpr("-1L AS id", f"CAST(TIMESTAMP_NTZ '{old}' AS {type_name}) AS ts")
+        )
+        assert t.min_max("ts") == (old, true_max)
+        assert len(t.plan_files("ts", None, "1582-01-01 00:00:00")[0]) == 1
+        assert _rows(t.read_pruned("ts", None, "1582-01-01 00:00:00")) == [(-1, old)]
+
+    def test_timestamp_ntz_prunes_and_min_max(self, spark, tmp_path):
+        self._check_timestamp_prunes(spark, tmp_path, "timestamp_ntz")
+
+    def test_timestamp_prunes_and_min_max(self, spark, tmp_path, utc_process):
+        self._check_timestamp_prunes(spark, tmp_path, "timestamp")
+
+    def test_legacy_int96_file_is_never_pruned(self, spark, tmp_path, utc_process):
+        """A ``timestamp`` file written as INT96 (Spark's default output
+        type) carries no footer min/max, so every plan keeps it."""
+        import datetime as dt
+
+        from rtcdb_spark.session import RUNTIME_CONFS
+
+        key = "spark.sql.parquet.outputTimestampType"
+        t = VersionedTable(spark, str(tmp_path / "vt"))
+        spark.conf.set(key, "INT96")
+        try:
+            t.commit(_hourly(spark, "timestamp"))
+        finally:
+            spark.conf.set(key, RUNTIME_CONFS[key])
+        lo, hi = dt.datetime(1970, 1, 2), dt.datetime(1970, 1, 3)
+        keep, total = t.plan_files("ts", lo, hi)
+        assert len(keep) == total == 4
+        got = _rows(t.read_pruned("ts", lo, hi))
+        assert [r[0] for r in got] == list(range(24, 48))
+        with pytest.raises(ValueError, match="no stats"):
+            t.min_max("ts")
 
 
 class TestAdviceR4Fixes:

@@ -78,3 +78,18 @@ def test_only_zonemap_reads_footer_statistics():
                     outside.append(f"{rel}:{node.lineno}")
     assert not outside, f"read footer stats via zonemap.footer_stats: {outside}"
     assert inside, "guard found no footer-stats read in zonemap.py — scan is broken"
+
+
+def test_pruned_source_queries_match_oracle(spark, sf_smoke):
+    """The two zone-map read paths a query runs through: the
+    ``VersionedTable`` file planner (``source_indexed_scan``) and the
+    native format's block planner (``source_rtcdb_pruned_scan``) answer
+    as DuckDB does on the unpruned table, and the file planner really
+    skips files."""
+    from rtcdb_spark.queries import REGISTRY
+    from tests.oracle import check_query
+
+    for name in ("source_indexed_scan", "source_rtcdb_pruned_scan"):
+        assert check_query(spark, name, sf_smoke) > 0
+    read = REGISTRY["source_indexed_scan"].fn(spark, sf_smoke)
+    assert 0 < len(read.inputFiles()) < 8
