@@ -18,13 +18,8 @@ Layout:
 - ``streaming`` — Structured Streaming variants of the event-table operators.
 - ``plans``     — plan inspection helpers (explain / pushdown assertions).
 - ``queries``   — the named query registry exported via __spark_entry__.
-- ``worker_daemon`` — entry point of the local Python workers (see
-                  ``session.get_spark``).
-
-Invariant: importing this package imports no pyspark. Spark runs
-``rtcdb_spark.worker_daemon`` before pyspark is loaded, and that module
-takes ``pyspark.zip`` off ``sys.path`` first; a pyspark import here would
-load pyspark from the zip instead (pinned by tests/test_worker_daemon.py).
+- ``worker_site`` — the ``sitecustomize`` every Python worker of a
+                  ``session.get_spark`` session starts with.
 """
 
 __version__ = "0.1.0"

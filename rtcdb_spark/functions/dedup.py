@@ -617,10 +617,10 @@ def connected_components_star(
     a count + order-independent hash-sum signature (two scalars, not a
     set-difference shuffle). The fixpoint is the unique min-rooted star
     forest, so the result is deterministic."""
-    # Lazy checkpoint: the signature aggregate is the action that materializes
-    # each round's edge relation, so a round costs ONE Spark job, not two
-    # (eager checkpoint + separate signature scan halved throughput on
-    # contracted graphs, where per-round scheduler overhead dominates).
+    # Lazy checkpoint: eager=False saves only the checkpoint's own count job.
+    # Under AQE the call still runs every shuffle stage of the round's plan,
+    # one job each, and the signature aggregate then runs the last stage and
+    # its own: 8 jobs per round on a 65-node path graph (Spark 4.1), not 1.
     e = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -664,8 +664,9 @@ def connected_components_star(
         return hang_nbrs.union(hang_self).filter(F.col("u") != F.col("v")).distinct()
 
     sig = signature(e)
-    # Each round's signature action runs under narrow_shuffle, so the round
-    # shuffles are sized to the edge count rather than the session width.
+    # Each round's checkpoint and signature run under narrow_shuffle, so the
+    # round shuffles are sized to the edge count rather than the session
+    # width.
     with narrow_shuffle(edges.sparkSession, sig[0]):
         for _ in range(max_iter):
             e = small_star(large_star(e)).localCheckpoint(eager=False)

@@ -74,50 +74,54 @@ def pagerank(
     owns_edges_cache = not edges.is_cached
     if owns_edges_cache:
         edges = edges.persist()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
     m = edges.count()  # materializes the persisted edge list; sizes the loop
-    # Out-degrees are loop-invariant: persist so the per-iteration plan reads
-    # a cached node-sized table instead of re-aggregating the edge list.
-    out = degrees(edges).persist()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    teleport = (1.0 - damping) / n
-    for it in range(n_iter):
-        # Pre-reduce to a per-source contribution *rate* (rank/outdeg) before
-        # touching the edge list: the two node-sized tables join each other
-        # first, so the (dominant) edge relation participates in ONE join per
-        # iteration instead of two — half the edge-sided join input.
-        rates = ranks.join(out, "node").select(
-            "node", (F.col("rank") / F.col("deg")).alias("w")
-        )
-        contribs = edges.join(rates, edges["src"] == rates["node"]).select(
-            F.col("dst").alias("node"), F.col("w").alias("c")
-        )
-        summed = contribs.groupBy("node").agg(
-            F.sum(F.col("c").cast("decimal(38,15)")).cast("double").alias("s")
-        )
-        ranks = nodes.join(summed, "node", "left").select(
-            "node",
-            F.round(
-                F.lit(teleport) + damping * F.coalesce(F.col("s"), F.lit(0.0)),
-                round_to,
-            ).alias("rank"),
-        )
-        # Lineage grows linearly with iterations; truncate periodically so
-        # long runs don't re-execute the whole chain per job or blow the
-        # planner. Lazy (eager=False): the checkpoint materializes as a side
-        # effect of the next round's first action instead of costing its own
-        # job here — same trick as the star-CC rounds.
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    # The eager localCheckpoint runs the loop under narrow_shuffle, so the
-    # per-round shuffles are sized to the edge relation.
+    # Every shuffle planned below runs under narrow_shuffle, sized to the
+    # edge relation: a persist fixes its plan's width when it is called, and
+    # under AQE even a lazy localCheckpoint runs every shuffle stage of its
+    # plan when it is called, so the mid-loop checkpoints execute rounds
+    # there, not at the final checkpoint.
     with narrow_shuffle(edges.sparkSession, m):
+        nodes = (
+            edges.select(F.col("src").alias("node"))
+            .unionByName(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .persist()
+        )
+        n = nodes.count()
+        # Out-degrees are loop-invariant: persist so the per-iteration plan
+        # reads a cached node-sized table instead of re-aggregating the edge
+        # list.
+        out = degrees(edges).persist()
+        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+        teleport = (1.0 - damping) / n
+        for it in range(n_iter):
+            # Pre-reduce to a per-source contribution *rate* (rank/outdeg)
+            # before touching the edge list: the two node-sized tables join
+            # each other first, so the (dominant) edge relation participates
+            # in ONE join per iteration instead of two — half the edge-sided
+            # join input.
+            rates = ranks.join(out, "node").select(
+                "node", (F.col("rank") / F.col("deg")).alias("w")
+            )
+            contribs = edges.join(rates, edges["src"] == rates["node"]).select(
+                F.col("dst").alias("node"), F.col("w").alias("c")
+            )
+            summed = contribs.groupBy("node").agg(
+                F.sum(F.col("c").cast("decimal(38,15)")).cast("double").alias("s")
+            )
+            ranks = nodes.join(summed, "node", "left").select(
+                "node",
+                F.round(
+                    F.lit(teleport) + damping * F.coalesce(F.col("s"), F.lit(0.0)),
+                    round_to,
+                ).alias("rank"),
+            )
+            # Lineage grows linearly with iterations; truncate periodically
+            # so long runs don't re-execute the whole chain per job or blow
+            # the planner. eager=False only saves the checkpoint's own count
+            # job; the round's shuffle stages still run here (see above).
+            if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
+                ranks = ranks.localCheckpoint(eager=False)
         ranks = ranks.localCheckpoint()
     out.unpersist()
     nodes.unpersist()

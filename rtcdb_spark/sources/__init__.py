@@ -1,4 +1,6 @@
-from rtcdb_spark.sources.layout import compact, write_partitioned
+# Python Data Source workers import this package (for rtcdb_native and
+# delta_stream) in every fresh process, so it loads no pandas: import
+# compact / write_partitioned from rtcdb_spark.sources.layout.
 from rtcdb_spark.sources.versioned import VersionedTable
 from rtcdb_spark.sources.tables import (
     TABLE_NAMES,
@@ -10,9 +12,7 @@ from rtcdb_spark.sources.tables import (
 __all__ = [
     "VersionedTable",
     "TABLE_NAMES",
-    "compact",
     "load_all",
     "load_table",
     "write_bucketed",
-    "write_partitioned",
 ]

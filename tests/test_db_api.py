@@ -8,12 +8,13 @@ SURVEY.md §4.3 bug 2).
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
 import pytest
 
-from rtcdb_spark.db import Database, SchemaError, TableMeta
+from rtcdb_spark.db import _DTYPES, Database, SchemaError, TableMeta
 
 # The reference's canonical fixture: an events table
 # {event: String, timestamp: Uint64, id: Uint64} (tests/integration_test.rs:13-17).
@@ -226,6 +227,67 @@ def test_indexed_scan_prunes_disjoint_appends(spark, tmp_path):
 def test_write_data_commits_one_file(db):
     db.write_data("events", ROWS * 64)
     assert db.versioned("events").history()[-1]["n_added"] == 1
+
+
+# one column per write_data dtype; every value is exact in its type
+ALL_DTYPES = TableMeta("all", [(f"c{i}", d) for i, d in enumerate(_DTYPES)])
+ALL_ROWS = [
+    [0, -(2**63), -(2**31), "", -1.25, 0.5, False,
+     datetime.datetime(1970, 1, 1), b"", [], []],
+    [2**63 - 1, 2**63 - 1, 2**31 - 1, "zoë", 1e300, -3.75, True,
+     datetime.datetime(2024, 2, 29, 23, 59, 59, 999999), bytearray(b"\x00\xff"),
+     [1.5, None], (2.5, -0.0)],
+]
+
+
+def test_write_data_round_trips_every_dtype(spark, tmp_path):
+    assert list(_DTYPES) == [d for _, d in ALL_DTYPES.columns]
+    db = Database.init(spark, str(tmp_path / "db"), [ALL_DTYPES])
+    db.write_data("all", ALL_ROWS)
+    got = sorted((list(r) for r in db.table("all").collect()), key=lambda r: r[0])
+    want = [
+        [bytes(v) if isinstance(v, bytearray) else list(v) if isinstance(v, tuple) else v
+         for v in row]
+        for row in ALL_ROWS
+    ]
+    assert got == want
+
+
+def test_write_data_coerces_string_cells_like_create_data_frame(spark, tmp_path):
+    values = [7, 2**70, 1e20, True, b"ab", datetime.date(2024, 1, 2), [1, "a"], {"k": 1}]
+    db = Database.init(spark, str(tmp_path / "db"), [TableMeta("s", [("s", "string")])])
+    db.write_data("s", [[v] for v in values])
+    want = spark.createDataFrame([[v] for v in values], "s string").collect()
+    assert sorted(r["s"] for r in db.table("s").collect()) == sorted(r["s"] for r in want)
+
+
+@pytest.mark.parametrize(
+    "column, value",
+    [
+        ("c0", 2**63),  # uint64 past the LongType ceiling
+        ("c1", -(2**63) - 1),
+        ("c2", 2**31),  # int32 range
+        ("c0", "1"),  # wrong cell types: no coercion
+        ("c0", True),
+        ("c0", 1.0),
+        ("c4", 1),  # an int is not a double
+        ("c6", 1),
+        ("c7", datetime.date(2024, 1, 1)),
+        ("c8", "bytes"),
+        ("c9", [1]),  # an int element in array<float>
+        ("c10", "1.0"),
+        ("c0", None),  # every column is non-nullable
+        ("c3", None),
+        ("c9", None),
+    ],
+)
+def test_write_data_rejects_bad_cells_before_any_commit(spark, tmp_path, column, value):
+    db = Database.init(spark, str(tmp_path / "db"), [ALL_DTYPES])
+    bad = list(ALL_ROWS[1])
+    bad[int(column[1:])] = value
+    with pytest.raises(SchemaError):
+        db.write_data("all", [ALL_ROWS[0], bad])
+    assert db.versioned("all").latest_version() is None
 
 
 def test_indexed_scan_takes_column_bounds(db):

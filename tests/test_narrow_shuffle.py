@@ -132,3 +132,54 @@ def test_only_narrow_shuffle_sets_the_width_at_runtime():
     assert not outside, f"set the shuffle width via narrow_shuffle: {outside}"
     assert inside, "guard found no conf.set in narrow_shuffle — scan is broken"
     assert _KEY not in RUNTIME_CONFS
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _last_execution_id(store) -> int:
+    return max((x.executionId() for x in _seq(store.executionsList())), default=-1)
+
+
+def _exchange_widths(store, after: int) -> list[int]:
+    """``number of partitions`` of every shuffle exchange in the SQL
+    executions with an id above ``after``: the width it ran at, 0 or
+    nothing for a cached plan that was only read."""
+    widths = []
+    for ex in _seq(store.executionsList()):
+        if ex.executionId() <= after:
+            continue
+        accs = {
+            m.accumulatorId()
+            for node in _seq(store.planGraph(ex.executionId()).allNodes())
+            if node.name() == "Exchange"
+            for m in _seq(node.metrics())
+            if m.name() == "number of partitions"
+        }
+        values = {t._1(): t._2() for t in _seq(store.executionMetrics(ex.executionId()).toSeq())}
+        widths += [int(values[a]) for a in accs if a in values]
+    return widths
+
+
+def test_pagerank_runs_every_round_at_the_narrowed_width(spark, configured):
+    """Under AQE the mid-loop localCheckpoint runs its rounds' shuffles when
+    it is called, so they must run inside narrow_shuffle too."""
+    from rtcdb_spark.functions.graph import pagerank, symmetrize
+
+    configured(16)
+    edges = symmetrize(
+        spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (3, 4), (5, 4), (2, 1)], "src long, dst long"
+        )
+    ).persist()
+    try:
+        edges.count()  # the caller's relation: its own shuffles run here
+        store = spark._jsparkSession.sharedState().statusStore()
+        after = _last_execution_id(store)
+        pagerank(edges, n_iter=4, checkpoint_every=2).collect()
+        widths = _exchange_widths(store, after)
+    finally:
+        edges.unpersist()
+    assert widths, "no shuffle exchange seen: the probe is broken"
+    assert max(widths) <= 8, widths

@@ -1,9 +1,13 @@
-"""The Python worker daemon (rtcdb_spark/worker_daemon.py): the sys.path
-rule it applies before pyspark loads, and what a task on the test
-session actually imports."""
+"""The Python worker start-up (rtcdb_spark/worker_site/sitecustomize.py):
+the sys.path rule it applies before pyspark loads, what it may import, the
+interpreter's own sitecustomize it shadows, and what an executor task and
+a Python Data Source planner on the test session actually import; and the
+Python Data Source modules every fresh worker process imports."""
 
 from __future__ import annotations
 
+import ast
+import json
 import os
 import subprocess
 import sys
@@ -12,11 +16,12 @@ from pathlib import Path
 
 import pyarrow as pa
 import pytest
+from pyspark.sql.datasource import DataSource, DataSourceReader
 
-import rtcdb_spark
-from rtcdb_spark.worker_daemon import worker_path
+import rtcdb_spark.worker_site.sitecustomize as worker_site
+from rtcdb_spark.worker_site.sitecustomize import worker_path
 
-_ROOT = Path(rtcdb_spark.__file__).parent.parent
+_SITE_DIR = Path(worker_site.__file__).parent
 
 
 def _version_py(version: str) -> str:
@@ -57,16 +62,54 @@ def test_worker_path_rule(tmp_path, zip_version, installed_version, drops_zip):
     assert worker_path(path) == expected
 
 
-def test_import_package_leaves_pyspark_unloaded():
+def test_sitecustomize_imports_only_the_standard_library():
+    """It runs before any pyspark import, in every worker process."""
+    tree = ast.parse(Path(worker_site.__file__).read_text())
+    imported = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            imported.update(alias.name.split(".")[0] for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            assert node.level == 0, "relative import"
+            imported.add(node.module.split(".")[0])
+    assert imported and imported <= sys.stdlib_module_names, imported
+
+
+def test_data_source_modules_load_no_pandas():
+    """Every fresh planner, streaming-runner and reader process imports
+    these modules; pandas would add ~0.4 s to each of them."""
     code = (
-        "import sys, rtcdb_spark, rtcdb_spark.worker_daemon; "
-        "sys.exit('pyspark' in sys.modules)"
+        "import sys, rtcdb_spark.sources.rtcdb_native, rtcdb_spark.sources.delta_stream; "
+        "sys.exit('pandas' in sys.modules)"
     )
-    env = {**os.environ, "PYTHONPATH": str(_ROOT)}
-    subprocess.run([sys.executable, "-c", code], cwd=_ROOT, env=env, check=True, timeout=60)
+    root = _SITE_DIR.parent.parent
+    subprocess.run([sys.executable, "-c", code], cwd=root, check=True, timeout=60)
 
 
-def _imports(batches):
+def test_shadowed_sitecustomize_still_runs(tmp_path):
+    """An interpreter's own sitecustomize later on the path runs, after the
+    path is fixed."""
+    later = tmp_path / "later"
+    later.mkdir()
+    (later / "sitecustomize.py").write_text(
+        "import os, sys\n"
+        "print('shadowed ran', __name__, any(p.endswith('.jar') for p in sys.path))\n"
+    )
+    jar = str(tmp_path / "spark-core_2.13-4.1.2.jar")
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join([str(_SITE_DIR), jar, str(later)])}
+    out = subprocess.run(
+        [sys.executable, "-c", "import sitecustomize; print(sitecustomize.__file__)"],
+        env=env, capture_output=True, text=True, check=True, timeout=60,
+    )
+    assert out.stdout.splitlines() == [
+        "shadowed ran sitecustomize False",
+        str(_SITE_DIR / "sitecustomize.py"),
+    ], out.stderr
+
+
+def _loaded() -> dict:
+    """What this process imported pyspark from, and which archives it still
+    has an importer for."""
     import zipimport
 
     import pyspark
@@ -78,24 +121,61 @@ def _imports(batches):
             if isinstance(imp, zipimport.zipimporter)
         }
     )
-    row = {
+    return {
         "main": sys.modules["__main__"].__spec__.name,
         "pyspark": pyspark.__file__,
         "archives": archives,
     }
+
+
+def _assert_installed_pyspark(loaded: dict) -> None:
+    import pyspark
+
+    assert loaded["main"] == "pyspark.daemon"
+    assert loaded["pyspark"] == pyspark.__file__
+    stale = [a for a in loaded["archives"] if a.endswith((".jar", "pyspark.zip"))]
+    assert stale == []
+
+
+def _imports(batches):
+    row = _loaded()
     for _ in batches:
         yield pa.RecordBatch.from_pylist([row])
 
 
 def test_python_task_imports_installed_pyspark_without_archives(spark):
-    import pyspark
-
     (row,) = (
         spark.range(1, numPartitions=1)
         .mapInArrow(_imports, "main string, pyspark string, archives array<string>")
         .collect()
     )
-    assert row.main == "rtcdb_spark.worker_daemon"
-    assert row.pyspark == pyspark.__file__
-    stale = [a for a in row.archives if a.endswith((".jar", "pyspark.zip"))]
-    assert stale == []
+    _assert_installed_pyspark(row.asDict())
+
+
+class _ProbeReader(DataSourceReader):
+    def read(self, partition):
+        yield (1,)
+
+
+class _ProbeSource(DataSource):
+    """``schema()`` runs in a planner worker; it writes what that process
+    loaded to the file named by the ``out`` option."""
+
+    @classmethod
+    def name(cls):
+        return "worker_startup_probe"
+
+    def schema(self):
+        with open(self.options["out"], "w") as fh:
+            json.dump(_loaded(), fh)
+        return "x int"
+
+    def reader(self, schema):
+        return _ProbeReader()
+
+
+def test_data_source_planner_imports_installed_pyspark_without_archives(spark, tmp_path):
+    out = tmp_path / "planner.json"
+    spark.dataSource.register(_ProbeSource)
+    spark.read.format("worker_startup_probe").option("out", str(out)).load()
+    _assert_installed_pyspark(json.loads(out.read_text()))
